@@ -176,7 +176,7 @@ object Branch {
       try {
         return TxnCatalog.publish(spark, root,
           Seq((dst, PropsPartition, propsDf(spark, props))),
-          statsColumns = Nil, drops = Nil, expectedTxn = Some(cur.txn),
+          statsColumns = Nil, expectedTxn = Some(cur.txn),
           reconcile = carried =>
             carried.filterNot(_._1._1 == src) ++ copied)(() => ())
       } catch {
@@ -210,7 +210,7 @@ object Branch {
       try {
         return TxnCatalog.publish(spark, root,
           Seq((dst, PropsPartition, propsDf(spark, props))),
-          statsColumns = Nil, drops = Nil, expectedTxn = Some(cur.txn),
+          statsColumns = Nil, expectedTxn = Some(cur.txn),
           reconcile = carried => carried ++ copied)(() => ())
       } catch {
         case _: java.io.IOException if attempt < attempts =>
@@ -356,7 +356,7 @@ object Branch {
           Seq((table, PropsPartition, propsDf(spark, plan.mainProps)),
             (shadow, PropsPartition, propsDf(spark, plan.rebasedProps))) ++
             mvRefreshUpdates(spark, root, cur, Seq(table -> plan), branch),
-          statsColumns = Nil, drops = Nil, expectedTxn = Some(cur.txn),
+          statsColumns = Nil, expectedTxn = Some(cur.txn),
           reconcile = carried =>
             carried.filterNot(_._1._1 == table) ++ plan.newMain)(() => ())
       } catch {
@@ -511,7 +511,7 @@ object Branch {
           try {
             return TxnCatalog.publish(spark, root,
               Seq((shadow, PropsPartition, propsDf(spark, plan.mergedProps))),
-              statsColumns = Nil, drops = Nil, expectedTxn = Some(cur.txn),
+              statsColumns = Nil, expectedTxn = Some(cur.txn),
               reconcile = carried =>
                 carried.filterNot(_._1._1 == shadow) ++ plan.newShadow)(
               () => ())
@@ -739,7 +739,7 @@ object Branch {
       }
       try {
         return TxnCatalog.publish(spark, root, propUpdates,
-          statsColumns = Nil, drops = Nil, expectedTxn = Some(cur.txn),
+          statsColumns = Nil, expectedTxn = Some(cur.txn),
           reconcile = carried => carried ++ copied)(() => ())
       } catch {
         case _: java.io.IOException if attempt < attempts =>
@@ -786,7 +786,7 @@ object Branch {
       val newMains = plans.flatMap(_._2.newMain).toMap
       try {
         return TxnCatalog.publish(spark, root, updates,
-          statsColumns = Nil, drops = Nil, expectedTxn = Some(cur.txn),
+          statsColumns = Nil, expectedTxn = Some(cur.txn),
           reconcile = carried =>
             carried.filterNot { case ((t, _), _) => touched(t) } ++
               newMains)(() => ())
@@ -825,7 +825,7 @@ object Branch {
       val newShadows = plans.flatMap(_._2.newShadow).toMap
       try {
         return TxnCatalog.publish(spark, root, updates,
-          statsColumns = Nil, drops = Nil, expectedTxn = Some(cur.txn),
+          statsColumns = Nil, expectedTxn = Some(cur.txn),
           reconcile = carried =>
             carried.filterNot { case ((t, _), _) => touched(t) } ++
               newShadows)(() => ())
@@ -852,7 +852,7 @@ object Branch {
       val shadows = tabs.map(shadowName(_, branch)).toSet
       try {
         return TxnCatalog.publish(spark, root, Nil,
-          statsColumns = Nil, drops = Nil, expectedTxn = Some(cur.txn),
+          statsColumns = Nil, expectedTxn = Some(cur.txn),
           reconcile = carried =>
             carried.filterNot { case ((t, _), _) => shadows(t) })(() => ())
       } catch {

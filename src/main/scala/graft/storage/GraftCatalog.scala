@@ -778,7 +778,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                 org.apache.spark.sql.types.StringType, nullable = false))))
           TxnCatalog.publish(spark, root,
             Seq(schemaUpdate, (t, TxnCatalog.PropsPartition, kv)),
-            statsColumns = Nil, drops = Nil,
+            statsColumns = Nil,
             expectedTxn = Some(snap.txn),
             reconcile = identity)(() => ())
         }

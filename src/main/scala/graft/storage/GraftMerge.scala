@@ -165,16 +165,15 @@ object GraftMerge {
     // consumer falls back to its distributed form — exact either way,
     // just unfused. Lazy: an insert-only MERGE touches none of the
     // three and pays nothing.
-    lazy val keyProbe: Option[IndexedSeq[(Any, Long)]] =
-      Trace("merge: key probe") {
-        val rows = srcDf.groupBy(sKeyCol.as("__mkey"))
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("__mcnt"))
-          .limit(10001).collect()
-        if (rows.length <= 10000)
-          Some(rows.toIndexedSeq.map(r => (r.get(0), r.getLong(1))))
-        else None
-      }
+    lazy val keyProbe: Option[IndexedSeq[(Any, Long)]] = {
+      val rows = srcDf.groupBy(sKeyCol.as("__mkey"))
+        .agg(org.apache.spark.sql.functions.count(
+          org.apache.spark.sql.functions.lit(1)).as("__mcnt"))
+        .limit(10001).collect()
+      if (rows.length <= 10000)
+        Some(rows.toIndexedSeq.map(r => (r.get(0), r.getLong(1))))
+      else None
+    }
 
     // SQL MERGE cardinality: a target row matched by >1 source rows is
     // an error — with matched actions present, duplicate source keys
@@ -182,11 +181,10 @@ object GraftMerge {
     // cap, by one source-sized aggregate)
     if ((update.isDefined || delete.isDefined) &&
         !keyProbe.map(_.forall(_._2 <= 1L)).getOrElse(
-          Trace("merge: cardinality check")(
-            srcDf.groupBy(sKeyCol.as("__mkey"))
-              .agg(org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.lit(1)).as("__mcnt"))
-              .filter(col("__mcnt") > 1).limit(1).isEmpty)))
+          srcDf.groupBy(sKeyCol.as("__mkey"))
+            .agg(org.apache.spark.sql.functions.count(
+              org.apache.spark.sql.functions.lit(1)).as("__mcnt"))
+            .filter(col("__mcnt") > 1).limit(1).isEmpty))
       throw new IllegalStateException(
         "MERGE_CARDINALITY_VIOLATION: the ON search condition matches " +
           "a single target row with multiple source rows; deduplicate " +
@@ -332,9 +330,8 @@ object GraftMerge {
     val frames = keyFrames.result()
     val delKeys =
       if (frames.isEmpty) None else Some(frames.reduce(_.unionByName(_)))
-    Trace("merge: mergeKeyed txn")(
-      TxnCatalog.mergeKeyed(spark, target.root, target.table, tKey.name,
-        delKeys, append, statsColumns = Seq(tKey.name)))
+    TxnCatalog.mergeKeyed(spark, target.root, target.table, tKey.name,
+      delKeys, append, statsColumns = Seq(tKey.name))
     ()
   }
 

@@ -275,7 +275,7 @@ object Importer {
         }
       try {
         val txn = TxnCatalog.publish(spark, root, propUpdates,
-          statsColumns = Nil, drops = Nil,
+          statsColumns = Nil,
           expectedTxn = Some(cur.map(_.txn).getOrElse(0L)),
           reconcile = carried => carried ++ entries)(() => ())
         return (txn, entries.size)

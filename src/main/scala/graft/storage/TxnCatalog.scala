@@ -1577,8 +1577,7 @@ object TxnCatalog {
       StructType(Seq(StructField("key", StringType, nullable = false),
         StructField("value", StringType, nullable = false))))
     publish(spark, root, updates :+ ((ledgerTable, PropsPartition, kv)),
-      statsColumns, drops = Nil,
-      expectedTxn = Some(snap.map(_.txn).getOrElse(0L)),
+      statsColumns, expectedTxn = Some(snap.map(_.txn).getOrElse(0L)),
       reconcile = carried => {
         updates.map(_._1).distinct.foreach { t =>
           require(!carried.contains((t, Whole)),
@@ -1614,7 +1613,7 @@ object TxnCatalog {
         StructField("value", StringType, nullable = false))))
     publish(spark, root,
       Seq((table, Whole, df), (table, PropsPartition, kv)),
-      statsColumns = Nil, drops = Nil, expectedTxn = expectedTxn,
+      statsColumns = Nil, expectedTxn = expectedTxn,
       reconcile = carried => carried.filterNot(_._1._1 == table))(() => ())
   }
 
@@ -1627,7 +1626,7 @@ object TxnCatalog {
     val snap = snapshot(spark, root).getOrElse(
       throw new IllegalArgumentException(s"empty catalog under $root"))
     require(snap.tables.contains(table), s"unknown table '$table'")
-    publish(spark, root, Nil, Nil, Nil, expectedTxn = Some(snap.txn),
+    publish(spark, root, Nil, Nil, expectedTxn = Some(snap.txn),
       reconcile = carried => carried.filterNot(_._1._1 == table))(() => ())
   }
 
@@ -1791,7 +1790,7 @@ object TxnCatalog {
       StructType(Seq(StructField("key", StringType, nullable = false),
         StructField("value", StringType, nullable = false))))
     publish(spark, root, Seq((table, PropsPartition, kv)),
-      statsColumns = Nil, drops = Nil, expectedTxn = Some(snap.txn),
+      statsColumns = Nil, expectedTxn = Some(snap.txn),
       reconcile = identity)(() => ())
   }
 
@@ -1885,8 +1884,7 @@ object TxnCatalog {
     // unlike a drop-then-create sequence
     publish(spark, root, Seq((table, partition, df),
         (table, PropsPartition, kv)),
-      statsColumns = Nil, drops = Nil,
-      expectedTxn = Some(snap.map(_.txn).getOrElse(0L)),
+      statsColumns = Nil, expectedTxn = Some(snap.map(_.txn).getOrElse(0L)),
       reconcile = carried =>
         if (replace) carried.filterNot(_._1._1 == table) else carried
       )(() => ())
@@ -1941,7 +1939,7 @@ object TxnCatalog {
     updates.foreach { case (t, _) => checkTableName(t) }
     publish(spark, root,
       updates.map { case (t, df) => (t, Whole, df) },
-      statsColumns = Nil, drops = Nil, expectedTxn = expectedTxn,
+      statsColumns = Nil, expectedTxn = expectedTxn,
       // a whole-table snapshot supersedes every entry of that table —
       // except its properties, which describe the table, not a snapshot
       reconcile = carried => carried.filterNot { case ((t, p), _) =>
@@ -1997,7 +1995,7 @@ object TxnCatalog {
     val updatedKeys = updates.map(u => (u._1, u._2)).toSet
     require(!drops.exists(updatedKeys), "a (table, partition) cannot be " +
       "both updated and dropped in one commit")
-    publish(spark, root, updates, statsColumns, drops, expectedTxn,
+    publish(spark, root, updates, statsColumns, expectedTxn,
       bloomColumns = bloomColumns, dataTxns = dataTxns,
       reconcile = carried => {
         updates.map(_._1).distinct.foreach { t =>
@@ -2020,12 +2018,10 @@ object TxnCatalog {
     *  1. ONE `partitionBy` write job staging every partition's files,
     *  2. ONE grouped aggregate over the STAGED files measuring
     *     per-partition stats + row counts (the grouped form of the
-    *     staged-stats pass — identical rendering: min/max cast to
-    *     string, timestamps as unix micros; measuring staged bytes, not
-    *     a re-evaluation of the input, so a nondeterministic input
-    *     cannot publish stats that disagree with the written data),
+    *     per-entry measurer, [[measureStaged]] — one more grouped job
+    *     when Bloom columns are configured),
     *  3. driver-side renames moving each staged dir into place, and
-    *  4. one manifest CAS publishing everything.
+    *  4. the one manifest CAS of [[publish]].
     * Partitions are named `<keyCol>=<value>` with Hive path escaping;
     * `keyCol` stays a data column in the files (the write partitions by
     * an internal copy), so reads union losslessly like any other commit.
@@ -2036,14 +2032,13 @@ object TxnCatalog {
     * names), and a later compaction/clustering folds generations.
     * Null keys land in `<keyCol>=__HIVE_DEFAULT_PARTITION__`. CHECK
     * constraints enforce in one pass over the staged files (a violation
-    * unstages and throws before the CAS). Existing partitions
-    * with colliding names are REPLACED (same merge rule as
-    * [[commitPartitions]]); `bloomColumns` measure per group in ONE
-    * additional grouped job (Spark's BloomFilterAggregate over the
-    * same canonical renderings the per-entry path hashes — probe-
-    * compatible by the BulkRewriteSpec end-to-end pin). Returns the
-    * committed txn; throws IOException on a lost commit race (staging
-    * cleaned up). */
+    * unstages and throws before the CAS). Existing partitions with
+    * colliding names are REPLACED (same merge rule as
+    * [[commitPartitions]]). `extraUpdates` ride the same txn as ordinary
+    * per-entry updates (an index build commits its data cells in bulk
+    * and its small router table atomically beside them — see
+    * [[graft.ops.VectorLake]]). Returns the committed txn; throws
+    * IOException on a lost commit race (staging cleaned up). */
   def commitPartitioned(spark: SparkSession, root: String, table: String,
       df: DataFrame, keyCol: String,
       statsColumns: Seq[String] = Nil,
@@ -2060,9 +2055,6 @@ object TxnCatalog {
       partNameOf: Option[String => String] = None,
       dropData: Seq[String] = Nil,
       bloomColumns: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit,
-      max, min, not, unix_micros}
-    import org.apache.spark.sql.types.{NumericType, StringType, TimestampType}
     checkTableName(table)
     // `keyExpr` generalizes the grouping to a DERIVED key (hidden
     // partitioning: days(ts), bucket(n, c) — [[PartitionSpec]]): the
@@ -2071,370 +2063,140 @@ object TxnCatalog {
     // label. Without it the key is the named data column, as before.
     if (keyExpr.isEmpty)
       require(df.columns.contains(keyCol), s"no key column '$keyCol'")
-    val groupKey: org.apache.spark.sql.Column = keyExpr.getOrElse(col(keyCol))
-    val f = fs(spark, root)
-    val prev = currentTxn(spark, root)
-    // a caller that READ a pinned snapshot to build `df` (spec-aware
-    // compaction, overwrite) pins it here: a rival commit between its
-    // read and this point would otherwise be silently folded over —
-    // the CAS below only guards the staging window
-    expectedTxn.foreach { e =>
-      if (prev.getOrElse(0L) != e) throw new java.io.IOException(
-        s"catalog moved to txn ${prev.getOrElse(0L)} since snapshot $e; retry")
+    extraUpdates.foreach { case (t, p, _) =>
+      checkTableName(t)
+      if (p != PropsPartition) checkPartitionName(p)
     }
-    val prevManifest = prev.map(manifest(f, root, _)).getOrElse(Map.empty)
-    require(!prevManifest.contains((table, Whole)),
-      s"table '$table' holds a whole-table snapshot; partition commits " +
-        "need a partitioned table (or a whole-table commit to replace it)")
-    // `drops` ride the same txn (an index REBUILD swaps the old cells
-    // for the new ones atomically); validated BEFORE any staging work
-    drops.foreach { case (t, p) =>
-      require(prevManifest.contains((t, p)),
-        s"dropping an entry absent from the manifest: ($t, $p)")
-    }
-    val next = prev.getOrElse(0L) + 1L
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dirName = s"v=$next.$nonce"
-    val stagingDir = new Path(s"$root/$table/.bulk.$next.$nonce")
-    // table properties, read once (driver-direct, cached): the write
-    // below honors the declared sort order and parquet-bloom columns —
-    // the bulk path writes the same kind of data files as the publish
-    // staging loop, so a backfill/bulk rewrite must not lose the
-    // layout the per-entry path guarantees; constraints and configured
-    // stats columns further down come from the same read
-    val tblProps: Map[String, String] =
-      prevManifest.get((table, "~p")).map { e =>
-        readPropsDirect(spark, entryPath(root, table, "~p", e.dir))
-      }.getOrElse(Map.empty)
-    val staged = stageBulk(spark, f, root, table, df, keyCol, groupKey,
-      partPrefix, partNameOf, dropData, statsColumns, bloomColumns,
-      dataTxn, tblProps, dirName, stagingDir)
-    // a bulk REWRITE can legitimately stage zero groups (every row of
-    // every touched partition deleted): nothing to measure or move —
-    // the commit is pure `drops`
-    if (staged.isEmpty) {
-      // only the REWRITE mode ([[rewritePartitionsBulk]], which
-      // pre-guards full emptiness itself) may combine an empty staging
-      // with drops: a bulk LOAD or spec-aware COMPACTION whose input
-      // evaporated must not silently erase its sources
-      require(drops.isEmpty || partNameOf.isDefined,
-        "bulk commit staged zero partitions but carries drops; refusing " +
-          "to erase the sources — if pending deletes emptied them, run " +
-          "applyDeletes or deleteWhere instead")
-      require(extraUpdates.isEmpty || partNameOf.isDefined,
-        "bulk load staged no partitions (empty input frame)")
-    }
-    // extra entries ride the SAME txn, staged the classic per-entry way
-    // (an index build commits its data cells in bulk and its small
-    // router table atomically beside them — see [[graft.ops.VectorLake]]);
-    // any failure here unwinds everything staged so far
-    val extraStaged: Map[(String, String), Entry] =
-      stageExtras(spark, f, root, prevManifest, staged, dirName,
-        extraUpdates, statsColumns)
-    // one manifest CAS for everything (drops applied to the carried
-    // manifest; dropping an entry this commit also replaces is
-    // redundant but harmless — the merge wins)
-    casPublish(f, root, next, nonce, prevManifest -- drops,
-      staged ++ extraStaged)(() => ())
-    next
+    publish(spark, root, extraUpdates, statsColumns, expectedTxn,
+      bloomColumns = bloomColumns,
+      // validated BEFORE any staging work; `drops` ride the same txn
+      // (an index REBUILD swaps the old cells for the new ones
+      // atomically) — dropping an entry this commit also replaces is
+      // redundant but harmless, the staged entry wins
+      reconcile = carried => {
+        (table +: extraUpdates.map(_._1)).distinct.foreach { t =>
+          require(!carried.contains((t, Whole)),
+            s"table '$t' holds a whole-table snapshot; partition commits " +
+              "need a partitioned table (or a whole-table commit to replace it)")
+        }
+        drops.foreach { case (t, p) =>
+          require(carried.contains((t, p)),
+            s"dropping an entry absent from the manifest: ($t, $p)")
+        }
+        carried -- drops
+      },
+      bulk = Some(BulkLoad(table, df, keyCol,
+        keyExpr.getOrElse(org.apache.spark.sql.functions.col(keyCol)),
+        statsColumns, bloomColumns, partPrefix, partNameOf, dropData,
+        dataTxn)))(() => ())
   }
 
-  /** The O(1)-jobs bulk STAGING core [[commitPartitioned]] and the
-    * cross-root export ([[exportTables]]) share: write `df` grouped by
-    * `groupKey` as dynamic partitions under `stagingDir`, enforce
-    * `tblProps`' CHECK constraints on the staged bytes, measure
-    * per-group stats (+ Blooms) in one grouped job each, and move each
-    * group into its `dirName` entry slot under `root/table`. Returns
-    * the staged entry map — possibly empty (zero groups) — with the
-    * staging dir cleaned up either way. NOTHING is committed here; the
-    * caller owns the manifest CAS, which is what lets an export stage
-    * SEVERAL tables this way and land them all in one commit. */
+  /** One bulk load of [[stageBulk]]: `df` grouped by `groupKey`, each
+    * group staged as its own partition of `table`. */
+  private[storage] final case class BulkLoad(table: String, df: DataFrame,
+      keyCol: String, groupKey: org.apache.spark.sql.Column,
+      statsColumns: Seq[String], bloomColumns: Seq[String],
+      partPrefix: String = "", partNameOf: Option[String => String] = None,
+      dropData: Seq[String] = Nil, dataTxn: Option[Long] = None)
+
+  /** The O(1)-jobs bulk STAGING core [[publish]] and the cross-root
+    * export ([[exportTables]]) share: write `load.df` grouped by its
+    * `groupKey` as dynamic partitions under a `.bulk.` staging dir in
+    * `tblProps`' write layout, enforce their CHECK constraints on the
+    * staged bytes, measure per-group stats (+ Blooms) in one grouped job
+    * each, and move each group into its `dirName` entry slot under
+    * `root/table`. Returns the staged entry map — possibly empty (zero
+    * groups) — with the staging dir cleaned up either way. NOTHING is
+    * committed here; the caller owns the manifest CAS, which is what
+    * lets an export stage SEVERAL tables this way and land them all in
+    * one commit. Reorganizations (explicit `dataTxn` — spec-aware
+    * compaction, Z-cluster folds) keep the order they chose and skip
+    * the constraints their rows passed when first committed. */
   private def stageBulk(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, root: String, table: String,
-      df: DataFrame, keyCol: String,
-      groupKey: org.apache.spark.sql.Column,
-      partPrefix: String, partNameOf: Option[String => String],
-      dropData: Seq[String], statsColumns: Seq[String],
-      bloomColumns: Seq[String], dataTxn: Option[Long],
-      tblProps: Map[String, String], dirName: String,
-      stagingDir: Path): Map[(String, String), Entry] = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit,
-      max, min, not, unix_micros}
-    import org.apache.spark.sql.types.{NumericType, StringType, TimestampType}
+      f: org.apache.hadoop.fs.FileSystem, root: String, load: BulkLoad,
+      tblProps: Map[String, String],
+      dirName: String): Map[(String, String), Entry] = {
+    import org.apache.spark.sql.functions.{col, regexp_extract}
     val bulkKey = "__graft_bulk_key"
-    def cfgProp(prop: String): Seq[String] = tblProps.get(prop).toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    // 1. one write job for every partition
-    val keyed = df.withColumn(bulkKey, groupKey.cast("string"))
-      .drop(dropData: _*)
-    // declared write sort order ([[SortColumnsProp]]): sort within the
-    // write tasks by (group, sort columns) — the dynamic-partition
-    // writer keeps a satisfied ordering, so each staged file comes out
-    // internally sorted exactly like the publish path's files.
-    // Reorganizations (explicit `dataTxn` — spec-aware compaction,
-    // Z-cluster folds) are exempt: they stage an order they chose.
-    val sortCols =
-      if (dataTxn.isDefined) Nil
-      else cfgProp(SortColumnsProp).filter(keyed.columns.contains)
-    val arranged =
-      if (sortCols.isEmpty) keyed
-      else {
-        val cs = col(bulkKey) +: sortCols.map(col)
-        val base =
-          if (tblProps.get(SortModeProp).contains("global"))
-            keyed.repartitionByRange(cs: _*)
-          else keyed
-        base.sortWithinPartitions(cs: _*)
+    val stagingDir =
+      new Path(s"$root/${load.table}/.bulk.${dirName.stripPrefix("v=")}")
+    try {
+      // 1. one write job for every partition; the declared sort order
+      // sorts within the write tasks by (group, sort columns) — the
+      // dynamic-partition writer keeps a satisfied ordering, so each
+      // staged file comes out internally sorted exactly like the
+      // publish path's files
+      val keyed = load.df.withColumn(bulkKey, load.groupKey.cast("string"))
+        .drop(load.dropData: _*)
+      val (arranged, opts) = writeLayout(keyed, tblProps,
+        reorg = load.dataTxn.isDefined, lead = Seq(col(bulkKey)))
+      arranged.write.partitionBy(bulkKey).options(opts)
+        .parquet(stagingDir.toString)
+      // zero groups staged (every input row deleted/masked): nothing to
+      // measure or move — the caller decides what an empty staging means
+      if (!f.listStatus(stagingDir).exists(_.isDirectory)) return Map.empty
+      // Everything below reads the STAGED files, never the input frame
+      // again: a nondeterministic (or concurrently-changing) input would
+      // otherwise publish stats/row counts/constraint verdicts describing
+      // a DIFFERENT evaluation than the bytes written.
+      // recursiveFileLookup skips Hive partition discovery (no type
+      // re-inference on the key); keyCol is a data column by contract, so
+      // the staged read carries it at its original type.
+      val stagedDf = spark.read.option("recursiveFileLookup", "true")
+        .parquet(stagingDir.toString)
+      if (load.dataTxn.isEmpty) checkConstraints(load.table, tblProps, stagedDf)
+      // 2. grouped stats, keyed by the expression that partitioned the
+      // write (derivable from data columns); in partNameOf mode (bulk
+      // REWRITE) the key was an attribution column EXCLUDED from the
+      // data — recover it from each staged file's PARENT DIR instead.
+      // `_metadata.file_path` is a URI rendering (the on-disk
+      // hive-escaped name gets its '%' URI-escaped once more), so the
+      // captured parent decodes driver-side via java.net.URI back to the
+      // exact on-disk dir name the move loop sees.
+      val measured = load.partNameOf match {
+        case Some(_) =>
+          measureStaged(stagedDf, tblProps, load.statsColumns,
+            load.bloomColumns, Some(regexp_extract(
+              col("_metadata.file_path"), "^(.*)/[^/]+$", 1)))
+            .map { case (k, v) => k.map { uri =>
+              val p = new java.net.URI(uri).getPath
+              p.substring(p.lastIndexOf('/') + 1).stripPrefix(bulkKey + "=")
+            } -> v }
+        case None =>
+          measureStaged(stagedDf, tblProps, load.statsColumns,
+            load.bloomColumns, Some(load.groupKey.cast("string")))
       }
-    // declared parquet blooms ([[ParquetBloomColumnsProp]]): bulk data
-    // files carry them too (reorgs included — a compacted file keeps
-    // its blooms); the bulk path stages data entries only, so the
-    // delete-entry exemption never applies here
-    val pqBloomOpts: Map[String, String] =
-      cfgProp(ParquetBloomColumnsProp).filter(keyed.columns.contains)
-        .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
-    arranged.write.partitionBy(bulkKey).options(pqBloomOpts)
-      .parquet(stagingDir.toString)
-    // Everything below measures the STAGED files, never the input frame
-    // again: a nondeterministic (or concurrently-changing) input would
-    // otherwise publish stats/row counts/constraint verdicts describing
-    // a DIFFERENT evaluation than the bytes written — and
-    // MetadataOnlyAgg answers count/min/max from these counts as exact.
-    // recursiveFileLookup skips Hive partition discovery (no type
-    // re-inference on the key); keyCol is a data column by contract, so
-    // the staged read carries it at its original type.
-    val stagedKeyDirs = f.listStatus(stagingDir).filter(_.isDirectory)
-    // zero groups staged (every input row deleted/masked): nothing to
-    // measure or move — the caller decides what an empty staging means
-    if (stagedKeyDirs.isEmpty) {
-      f.delete(stagingDir, true)
-      return Map.empty
-    }
-    val stagedDf = spark.read.option("recursiveFileLookup", "true")
-      .parquet(stagingDir.toString)
-    // constraints enforce on the staged bytes; a violation unstages
-    // everything and throws before the catalog can move
-    tblProps.toSeq
-      .filter { case (k, _) => k.startsWith(ConstraintPrefix) }.sorted
-      .foreach { case (k, v) =>
-        if (!stagedDf.filter(not(coalesce(expr(v), lit(true))))
-            .limit(1).isEmpty) {
-          f.delete(stagingDir, true)
-          throw new IllegalArgumentException(
-            s"commit to '$table' violates $k ($v); nothing was published")
-        }
-      }
-    // 2. one grouped stats job (same rendering as the staged-stats
-    // pass); TBLPROPERTIES-configured stats columns merge in exactly
-    // as on the publish path
-    // bloom columns union into the stat set like the per-entry path
-    val bloomCfg: Seq[String] =
-      (bloomColumns ++ tblProps.get(BloomColumnsProp).toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)).distinct
-        .filter(stagedDf.schema.fieldNames.contains)
-        .filter(c => stagedDf.schema(c).dataType match {
-          case _: NumericType | StringType => true
-          case _                           => false
-        })
-    val kinds: Map[String, String] =
-      (statsColumns ++ bloomCfg ++ tblProps.get(StatsColumnsProp).toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)).distinct
-      .filter(stagedDf.schema.fieldNames.contains)
-      .map(c => c -> (stagedDf.schema(c).dataType match {
-        case _: NumericType => "n"
-        case StringType     => "s"
-        case TimestampType  => "t"
-        case _              => ""
-      })).filter(_._2.nonEmpty).toMap
-    def m(c: String) =
-      if (kinds(c) == "t") unix_micros(col(c)) else col(c)
-    // exact per-group SUMS, same eligibility + rendering as the
-    // per-entry pass — bulk rewrites keep sum(col) folding to metadata
-    val sumScales: Map[String, Int] = kinds.keys.toSeq
-      .flatMap(c => sumScaleOf(stagedDf.schema(c).dataType).map(c -> _))
-      .toMap
-    val aggs = count(lit(1)).as("rows:") +:
-      (kinds.keys.toSeq.sorted.flatMap(c =>
-        Seq(min(m(c)).cast("string").as(s"min:$c"),
-            max(m(c)).cast("string").as(s"max:$c"),
-            count(col(c)).as(s"cnt:$c"))) ++
-        sumScales.toSeq.sortBy(_._1).map { case (c, sc) =>
-          org.apache.spark.sql.functions.try_sum(
-            col(c).cast(org.apache.spark.sql.types.DecimalType(38, sc)))
-            .cast("string").as(s"sum:$c")
-        })
-    // the grouping key for the staged stats pass: normally the same
-    // expression that partitioned the write (derivable from data
-    // columns); in partNameOf mode (bulk REWRITE) the key was an
-    // attribution column EXCLUDED from the data — recover it from each
-    // staged file's PARENT DIR instead. `_metadata.file_path` is a URI
-    // rendering (the on-disk hive-escaped name gets its '%' URI-escaped
-    // once more), so the captured parent decodes driver-side via
-    // java.net.URI back to the exact on-disk dir name the move loop
-    // sees.
-    val statsKey: org.apache.spark.sql.Column = partNameOf match {
-      case Some(_) => org.apache.spark.sql.functions.regexp_extract(
-        col("_metadata.file_path"), "^(.*)/[^/]+$", 1)
-      case None => groupKey.cast("string")
-    }
-    def statsMapKey(v: String): String = partNameOf match {
-      case Some(_) =>
-        val p = new java.net.URI(v).getPath
-        p.substring(p.lastIndexOf('/') + 1).stripPrefix(bulkKey + "=")
-      case None => v
-    }
-    val grouped: Map[Option[String], (Map[String, ColStat], Long)] =
-      stagedDf.groupBy(statsKey.as(bulkKey))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().map { row =>
-          val stats = kinds.flatMap { case (c, kind) =>
-            (Option(row.getAs[String](s"min:$c")),
-              Option(row.getAs[String](s"max:$c"))) match {
-              case (Some(mi), Some(ma)) => Some(c -> ColStat(kind, mi, ma,
-                "", Some(row.getAs[Long]("rows:") -
-                  row.getAs[Long](s"cnt:$c")),
-                sum = sumScales.get(c)
-                  .flatMap(_ => Option(row.getAs[String](s"sum:$c")))))
-              case _ => None
-            }
-          }
-          Option(row.getAs[String](bulkKey)).map(statsMapKey) ->
-            ((stats, row.getAs[Long]("rows:")))
-        }.toMap
-    // 2b. grouped BLOOM pass (a second grouped job, only when bloom
-    // columns are configured): Spark's BloomFilterAggregate over the
-    // SAME canonical renderings the per-entry path hashes (strings
-    // raw, numerics via DECIMAL(38,18) — see bloomProbeRendering), so
-    // mightContainString probes agree by construction. The aggregate
-    // serializes through the same sketch writeTo format the manifest's
-    // BloomV2 payloads use. Capacity sizes to the LARGEST group (a
-    // per-group literal is not expressible) — smaller groups just get
-    // a lower FPP.
-    val groupBlooms: Map[Option[String], Map[String, String]] =
-      if (bloomCfg.isEmpty) Map.empty
-      else {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        val maxCnt = grouped.values.map(_._2).foldLeft(0L)(math.max)
-        val capacity = math.min(BloomMaxCapacity,
-          math.max(BloomMinCapacity, maxCnt))
-        val numBits = org.apache.spark.util.sketch.BloomFilter
-          .optimalNumOfBits(capacity, BloomFpp)
-        val baggs = bloomCfg.map { c =>
-          val rendered = stagedDf.schema(c).dataType match {
-            case _: NumericType => col(c)
-              .cast(org.apache.spark.sql.types.DecimalType(38, 18))
-              .cast("string")
-            case _ => col(c).cast("string")
-          }
-          org.apache.spark.sql.GraftSqlBridge.column(
-            new org.apache.spark.sql.catalyst.expressions.aggregate
-              .BloomFilterAggregate(
-                org.apache.spark.sql.GraftSqlBridge.expression(rendered),
-                Literal(capacity), Literal(numBits))
-              .toAggregateExpression())
-            .as(s"bloom:$c")
-        }
-        stagedDf.groupBy(statsKey.as(bulkKey))
-          .agg(baggs.head, baggs.tail: _*)
-          .collect().map { row =>
-            Option(row.getAs[String](bulkKey)).map(statsMapKey) ->
-              bloomCfg.flatMap { c =>
-                Option(row.getAs[Array[Byte]](s"bloom:$c")).map(b =>
-                  c -> (BloomV2 +
-                    java.util.Base64.getEncoder.encodeToString(b)))
-              }.toMap
-          }.toMap
-      }
-    // 3. move each staged key dir into its partition slot
-    val unescape =
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName _
-    val staged: Map[(String, String), Entry] =
+      // 3. move each staged key dir into its partition slot
+      val unescape =
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .unescapePathName _
       f.listStatus(stagingDir).filter(_.isDirectory).map { d =>
         val hive = d.getPath.getName // __graft_bulk_key=<escaped value>
         val escaped = hive.substring(bulkKey.length + 1)
         val raw = unescape(escaped)
         val key =
           if (raw == "__HIVE_DEFAULT_PARTITION__") None else Some(raw)
-        val part = partNameOf match {
+        val part = load.partNameOf match {
           case Some(fn) =>
             require(key.isDefined, "bulk rewrite produced rows with no " +
               "partition attribution (null rewrite key)")
             fn(raw)
-          case None => s"$partPrefix$keyCol=$escaped"
+          case None => s"${load.partPrefix}${load.keyCol}=$escaped"
         }
         checkPartitionName(part)
-        val target = new Path(entryPath(root, table, part, dirName))
+        val target = new Path(entryPath(root, load.table, part, dirName))
         f.mkdirs(target.getParent)
         require(f.rename(d.getPath, target), s"staging move failed: $part")
-        val statsLookup =
-          if (partNameOf.isDefined) Some(escaped) else key
-        val (stats0, rows) =
-          grouped.getOrElse(statsLookup, (Map.empty[String, ColStat], 0L))
-        val bm = groupBlooms.getOrElse(statsLookup, Map.empty)
-        val stats = stats0.map { case (c, st) =>
-          c -> bm.get(c).map(b => st.copy(bloom = b)).getOrElse(st) }
+        val (stats, rows) = measured.getOrElse(
+          if (load.partNameOf.isDefined) Some(escaped) else key,
+          (Map.empty[String, ColStat], 0L))
         // `dataTxn` carries the sources' max data txn when this bulk
         // write is a REORGANIZATION (spec-aware compaction) — incremental
         // consumers skip it exactly like compactPartitions' folds
-        (table, part) -> Entry(dirName, stats, dataTxn, Some(rows),
+        (load.table, part) -> Entry(dirName, stats, load.dataTxn, Some(rows),
           bytes = dirBytes(spark, target.toString))
       }.toMap
-    f.delete(stagingDir, true) // _SUCCESS and empty shell
-    staged
-  }
-
-  /** [[commitPartitioned]]'s extra-entries staging, shared with its
-    * zero-group early exit: each extra (table, partition, frame) writes
-    * classic per-entry staging in the bulk txn's dir name, constraint-
-    * checked (skipped for the one admitted internal entry — a
-    * rewrite's `~p` kv frame, which has no data columns); any failure
-    * unwinds everything staged so far (bulk groups included). */
-  private def stageExtras(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, root: String,
-      prevManifest: Map[(String, String), Entry],
-      staged: Map[(String, String), Entry], dirName: String,
-      extraUpdates: Seq[(String, String, DataFrame)],
-      statsColumns: Seq[String]): Map[(String, String), Entry] = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-    try extraUpdates.map { case (t, p, edf) =>
-      checkTableName(t)
-      if (p != PropsPartition) checkPartitionName(p)
-      require(!prevManifest.contains((t, Whole)),
-        s"table '$t' holds a whole-table snapshot")
-      require(!staged.contains((t, p)),
-        s"extra update collides with a bulk partition: ($t, $p)")
-      val path = entryPath(root, t, p, dirName)
-      edf.write.mode("errorifexists").parquet(path)
-      // enforce the extra table's constraints like the shared path does
-      if (p != PropsPartition)
-        prevManifest.get((t, "~p")).foreach { e =>
-          val cons = readPropsDirect(spark, entryPath(root, t, "~p", e.dir))
-            .toSeq
-            .collect { case (k, v) if k.startsWith(ConstraintPrefix) =>
-              k -> v }.sorted
-          cons.foreach { case (k, v) =>
-            if (!spark.read.parquet(path)
-                .filter(not(coalesce(expr(v), lit(true)))).limit(1).isEmpty)
-              throw new IllegalArgumentException(
-                s"commit to '$t' violates $k ($v); nothing was published")
-          }
-        }
-      val (st, rows) = measureStats(spark, path,
-        if (p == PropsPartition) Nil else statsColumns, Nil,
-        knownSchema = Some(edf.schema))
-      (t, p) -> Entry(dirName, st, None, rows,
-        bytes = dirBytes(spark, path))
-    }.toMap
-    catch {
-      case scala.util.control.NonFatal(ex) =>
-        (staged ++ extraUpdates.map { case (t, p, _) =>
-          (t, p) -> Entry(dirName) }.toMap).foreach {
-          case ((st2, sp2), en) =>
-            f.delete(new Path(entryPath(root, st2, sp2, en.dir)), true)
-        }
-        throw ex
-    }
+    } finally f.delete(stagingDir, true) // _SUCCESS and empty shell
   }
 
   /** Attribution column [[rewritePartitionsBulk]] rides on: each row's
@@ -2444,7 +2206,7 @@ object TxnCatalog {
 
   /** How many partitions a rewrite must touch before the O(1)-jobs bulk
     * path beats the per-entry path (2 Spark jobs per partition): below
-    * this, per-entry staging is simpler and measures Blooms; above it,
+    * this, per-entry staging is simpler; above it,
     * per-partition scheduling overhead dominates — a 10 000-partition
     * ALTER/DELETE/UPDATE rewrite would otherwise launch 20 000 driver
     * round trips. */
@@ -2458,15 +2220,14 @@ object TxnCatalog {
     * like the per-entry path), partition attribution by resolved-dir
     * lookup (correct for `~ref:` clone/branch entries too), one
     * `transform` over the union frame, then [[commitPartitioned]]'s
-    * one-write-job + one-grouped-stats-job + one-CAS pipeline with
+    * one-write-job + grouped-stats + one-CAS pipeline with
     * `partNameOf = identity` so every group lands back under its own
     * name. All rewritten names are also `drops`: a partition whose
     * rewrite yields ZERO rows is dropped from the manifest (the
     * per-entry path writes an empty entry instead — same reads, fewer
-    * manifest rows). Blooms are NOT measured on this path — callers
-    * keep the per-entry path for bloom-configured tables. Conditional
-    * on `snap` (IOException on a rival commit; callers retry or
-    * surface). */
+    * manifest rows). Stats and Blooms are measured exactly as on the
+    * per-entry path ([[measureStaged]], grouped). Conditional on `snap`
+    * (IOException on a rival commit; callers retry or surface). */
   private def rewritePartitionsBulk(spark: SparkSession, root: String,
       table: String, snap: Snapshot, parts: Seq[(String, Entry)],
       transform: DataFrame => DataFrame,
@@ -2650,7 +2411,8 @@ object TxnCatalog {
       column: String, lo: Any, hi: Any): Long =
     deleteWhereHooked(spark, root, table, column, lo, hi)(() => ())
 
-  /** [[deleteWhere]] with the test-only pre-publish seam. */
+  /** [[deleteWhere]] with a test-only seam in the rewrite window: it
+    * runs after the snapshot pin, right before the commit. */
   private[graft] def deleteWhereHooked(spark: SparkSession, root: String,
       table: String, column: String, lo: Any, hi: Any)(
       beforePublish: () => Unit): Long = {
@@ -2664,43 +2426,36 @@ object TxnCatalog {
     val touched = all.filter { case (_, e) =>
       e.stats.get(column).forall(mayOverlap(_, lo, hi)) }
     if (touched.isEmpty) return snap.txn
-    def survivors(p: String, e: Entry): DataFrame = {
-      // read through the delete-applying funnel: the rewrite bumps the
-      // entry's data txn, so pending equality deletes would stop
-      // applying to it — they must be materialized into it here
-      val df = snap.readSelected(table, Seq((p, e))).get
+    // the rows that survive, per entry or over the bulk union frame
+    def survivors(df: DataFrame): DataFrame =
       if (!df.columns.contains(column)) df // evolved partition: no match
-      else {
-        val pred = rangePredicate(df, column, lo, hi)
-        df.filter(!pred || col(column).isNull)
-      }
-    }
+      else df.filter(!rangePredicate(df, column, lo, hi) || col(column).isNull)
+    // read through the delete-applying funnel: the rewrite bumps the
+    // entry's data txn, so pending equality deletes would stop applying
+    // to it — they must be materialized into it here
+    def rewritten(p: String, e: Entry): DataFrame =
+      survivors(snap.readSelected(table, Seq((p, e))).get)
     // re-measure exactly the stats/Blooms the touched entries carried
     val statsCols = touched.flatMap(_._2.stats.keys).distinct
     val bloomCols = touched.flatMap { case (_, e) =>
       e.stats.collect { case (c, st) if st.bloom.nonEmpty => c } }.distinct
+    beforePublish()
     touched match {
       case Seq((Whole, e)) =>
-        commitHooked(spark, root,
-          Seq(table -> survivors(Whole, e)))(beforePublish)
+        commitHooked(spark, root, Seq(table -> rewritten(Whole, e)),
+          expectedTxn = Some(snap.txn))(() => ())
       case _ if touched.sizeIs > BulkRewriteThreshold =>
         // many partitions: ONE funnel read + ONE staged write + ONE
         // grouped stats (+ bloom) pass instead of 2 jobs per
         // partition; fully-emptied partitions drop from the manifest
-        beforePublish()
         rewritePartitionsBulk(spark, root, table, snap, touched,
-          transform = df =>
-            if (!df.columns.contains(column)) df
-            else {
-              val pred = rangePredicate(df, column, lo, hi)
-              df.filter(!pred || col(column).isNull)
-            },
+          transform = survivors,
           statsColumns = statsCols, bloomColumns = bloomCols)
       case _ =>
         commitPartitionsHooked(spark, root,
-          touched.map { case (p, e) => (table, p, survivors(p, e)) },
+          touched.map { case (p, e) => (table, p, rewritten(p, e)) },
           statsCols, drops = Nil, expectedTxn = Some(snap.txn),
-          bloomColumns = bloomCols)(beforePublish)
+          bloomColumns = bloomCols)(() => ())
     }
   }
 
@@ -2734,31 +2489,34 @@ object TxnCatalog {
       bounds.forall { case (c, lo, hi) =>
         e.stats.get(c).forall(mayOverlap(_, lo, hi)) } }
     if (touched.isEmpty) return snap.txn
+    // the assignments, per entry or over the bulk union frame (whose
+    // attribution column passes through untouched)
+    def assign(df: DataFrame): DataFrame = {
+      val cond = coalesce(expr(condSql), lit(false))
+      val assigned = assignments.toMap
+      val base = df.select(df.columns.toSeq.map { c0 =>
+        assigned.get(c0) match {
+          case Some(v) if c0 != RwPartCol => when(cond, expr(v))
+            .otherwise(col(c0)).cast(df.schema(c0).dataType).as(c0)
+          case _ => col(c0)
+        }
+      }: _*)
+      // assigned columns this partition never had (schema evolution):
+      // matched rows take the value, the rest stay null
+      assignments.collect {
+        case (c0, v) if !df.columns.contains(c0) &&
+            tableSchema.fieldNames.contains(c0) => (c0, v)
+      }.foldLeft(base) { case (acc, (c0, v)) =>
+        acc.withColumn(c0, when(cond, expr(v))
+          .otherwise(lit(null)).cast(tableSchema(c0).dataType))
+      }
+    }
     def rewritten(p: String, e: Entry): Option[DataFrame] = {
       // through the delete-applying funnel: the rewrite bumps the data
       // txn, so pending equality deletes must be materialized here
       val df = snap.readSelected(table, Seq((p, e))).get
       if (!condRefs.forall(df.columns.contains)) None // NULL cond: no match
-      else {
-        val cond = coalesce(expr(condSql), lit(false))
-        val assigned = assignments.toMap
-        val base = df.select(df.columns.toSeq.map { c0 =>
-          assigned.get(c0) match {
-            case Some(v) => when(cond, expr(v))
-              .otherwise(col(c0)).cast(df.schema(c0).dataType).as(c0)
-            case None => col(c0)
-          }
-        }: _*)
-        // assigned columns this partition never had (schema evolution):
-        // matched rows take the value, the rest stay null
-        Some(assignments.collect {
-          case (c0, v) if !df.columns.contains(c0) &&
-              tableSchema.fieldNames.contains(c0) => (c0, v)
-        }.foldLeft(base) { case (acc, (c0, v)) =>
-          acc.withColumn(c0, when(cond, expr(v))
-            .otherwise(lit(null)).cast(tableSchema(c0).dataType))
-        })
-      }
+      else Some(assign(df))
     }
     val updates = touched.flatMap { case (p, e) =>
       rewritten(p, e).map(df => (table, p, df)) }
@@ -2783,25 +2541,7 @@ object TxnCatalog {
         // skips them — same values, re-emitted to CDC per the
         // documented rewrite contract.
         rewritePartitionsBulk(spark, root, table, snap, touched,
-          transform = df => {
-            val cond = coalesce(expr(condSql), lit(false))
-            val assigned = assignments.toMap
-            val base = df.select(df.columns.toSeq.map { c0 =>
-              if (c0 == RwPartCol) col(c0)
-              else assigned.get(c0) match {
-                case Some(v) => when(cond, expr(v))
-                  .otherwise(col(c0)).cast(df.schema(c0).dataType).as(c0)
-                case None => col(c0)
-              }
-            }: _*)
-            assignments.collect {
-              case (c0, v) if !df.columns.contains(c0) &&
-                  tableSchema.fieldNames.contains(c0) => (c0, v)
-            }.foldLeft(base) { case (acc, (c0, v)) =>
-              acc.withColumn(c0, when(cond, expr(v))
-                .otherwise(lit(null)).cast(tableSchema(c0).dataType))
-            }
-          },
+          transform = assign,
           statsColumns = statsCols, bloomColumns = bloomCols)
       case _ =>
         commitPartitionsHooked(spark, root, updates,
@@ -2852,7 +2592,7 @@ object TxnCatalog {
     if (keyList.isEmpty) return snap.txn
     val part = s"~d-${java.util.UUID.randomUUID().toString.take(8)}"
     publish(spark, root, Seq((table, part, keyList)),
-      statsColumns = Nil, drops = Nil, expectedTxn = None,
+      statsColumns = Nil, expectedTxn = None,
       reconcile = identity,
       deleteKeyCols = Map((table, part) -> keyColumn))(() => ())
   }
@@ -2901,7 +2641,7 @@ object TxnCatalog {
       val part = s"~v-${java.util.UUID.randomUUID().toString.take(8)}"
       try {
         return publish(spark, root, Seq((table, part, marked)),
-          statsColumns = Nil, drops = Nil, expectedTxn = Some(snap.txn),
+          statsColumns = Nil, expectedTxn = Some(snap.txn),
           reconcile = identity,
           deleteKeyCols = Map((table, part) -> DeletePosMarker))(() => ())
       } catch {
@@ -2974,7 +2714,7 @@ object TxnCatalog {
           return publish(spark, root,
             Seq((table, s"~v-$nonce", marked),
               (table, s"batch=u$nonce", updated)),
-            statsColumns = Nil, drops = Nil, expectedTxn = Some(snap.txn),
+            statsColumns = Nil, expectedTxn = Some(snap.txn),
             reconcile = identity,
             deleteKeyCols = Map(
               (table, s"~v-$nonce") -> DeletePosMarker))(() => ())
@@ -3007,7 +2747,7 @@ object TxnCatalog {
     val updates = dvEntry.toSeq ++ appEntry.toSeq
     if (updates.isEmpty) return expectedTxn
     publish(spark, root, updates,
-      statsColumns = Nil, drops = Nil, expectedTxn = Some(expectedTxn),
+      statsColumns = Nil, expectedTxn = Some(expectedTxn),
       reconcile = identity,
       deleteKeyCols = dvEntry
         .map(e => (e._1, e._2) -> DeletePosMarker).toMap)(() => ())
@@ -3051,7 +2791,7 @@ object TxnCatalog {
     val updates = delEntry.toSeq ++ appEntry.toSeq
     if (updates.isEmpty) return snap.txn
     publish(spark, root, updates,
-      statsColumns = statsColumns, drops = Nil, expectedTxn = None,
+      statsColumns = statsColumns, expectedTxn = None,
       reconcile = identity,
       deleteKeyCols = delEntry
         .map(e => (e._1, e._2) -> keyColumn).toMap,
@@ -3109,7 +2849,7 @@ object TxnCatalog {
         ((table, PropsPartition, kv))
       try {
         publish(spark, root, updates,
-          statsColumns = statsColumns, drops = Nil,
+          statsColumns = statsColumns,
           expectedTxn = Some(snap.map(_.txn).getOrElse(0L)),
           reconcile = identity,
           deleteKeyCols = delEntry
@@ -3202,8 +2942,7 @@ object TxnCatalog {
     else {
       val updates = affected.map { case (p, e) =>
         (table, p, snap.readSelected(table, Seq((p, e))).get) }
-      publish(spark, root, updates, statsCols, drops = Nil,
-        expectedTxn = Some(snap.txn),
+      publish(spark, root, updates, statsCols, expectedTxn = Some(snap.txn),
         reconcile = carried => {
           val missing = dropKeys.filterNot(carried.contains)
           require(missing.isEmpty, "delete entries vanished under " +
@@ -3598,14 +3337,10 @@ object TxnCatalog {
         else plans.toSeq.sortBy(_._1)
           .filter(_._2._1.sizeIs > BulkRewriteThreshold)
           .flatMap { case (t, (copy, _)) =>
-            stageBulk(spark, destF, destRoot, t, bulkKeyed(t, copy),
-              keyCol = RwPartCol,
-              groupKey = org.apache.spark.sql.functions.col(RwPartCol),
-              partPrefix = "", partNameOf = Some(identity[String]),
-              dropData = Seq(RwPartCol), statsColumns = statsCols,
-              bloomColumns = bloomCols, dataTxn = None,
-              tblProps = layoutProps(t), dirName = dirName,
-              stagingDir = new Path(s"$destRoot/$t/.bulk.$destNext.$nonce"))
+            stageBulk(spark, destF, destRoot, BulkLoad(t, bulkKeyed(t, copy),
+              RwPartCol, org.apache.spark.sql.functions.col(RwPartCol),
+              statsCols, bloomCols, partNameOf = Some(identity[String]),
+              dropData = Seq(RwPartCol)), layoutProps(t), dirName)
           }.toMap
       // everything the bulk pass did not stage goes per-entry inside
       // publish: small tables, and ZERO-ROW copy partitions (no rows
@@ -3639,7 +3374,7 @@ object TxnCatalog {
         case (t, (_, drops)) => drops.map((t, _)) }.toSet
       try {
         return (publish(spark, destRoot, updates,
-          statsColumns = statsCols, drops = Nil,
+          statsColumns = statsCols,
           expectedTxn = Some(destPrev.map(_.txn).getOrElse(0L)),
           reconcile = carried =>
             carried -- destDrops ++ refEntries ++ bulkStaged,
@@ -3951,16 +3686,6 @@ object TxnCatalog {
   private val BloomMaxCapacity = 65536L
   private val BloomFpp = 0.03
 
-  /** Min/max of each requested stat column, measured on the STAGED data
-    * files (read-back, so the stats describe exactly the bytes a reader
-    * will scan — a columnar read of just the stat columns, cheap next to
-    * the write that preceded it). Columns absent from the schema, of
-    * un-stat-able types, or all-null record nothing — readers treat a
-    * missing stat as "may contain anything". `bloomCols` (a subset
-    * constraint is not required — they're unioned into the stat set)
-    * additionally get a Bloom filter over the column's values rendered
-    * as strings (Spark's cast-to-string), one distributed aggregate per
-    * bloom column. */
   /** Physical parquet bytes under a just-staged entry dir — ONE driver
     * listStatus, no cluster job. None only when the listing fails (the
     * budget walks treat unknown sizes conservatively). */
@@ -4019,227 +3744,302 @@ object TxnCatalog {
     }
   }
 
-  private def measureStats(spark: SparkSession, path: String,
-      cols: Seq[String], bloomCols: Seq[String] = Nil,
-      knownSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : (Map[String, ColStat], Option[Long]) = {
-    import org.apache.spark.sql.functions.{col, lit, max, min, unix_micros}
+  /** The comma-separated column list table property `key` declares. */
+  private def propColumns(props: Map[String, String],
+      key: String): Seq[String] =
+    props.get(key).toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+
+  /** The stat kind of each of `cols` in `schema` — "n" numeric, "s"
+    * string, "t" timestamp; absent columns and other types get none. */
+  private def statKinds(schema: org.apache.spark.sql.types.StructType,
+      cols: Seq[String]): Map[String, String] = {
     import org.apache.spark.sql.types.{NumericType, StringType, TimestampType}
-    if (cols.isEmpty && bloomCols.isEmpty)
-      return (Map.empty, footerRowCount(spark, path))
-    // a caller that just WROTE the files knows their schema exactly —
-    // passing it skips the per-staging-dir schema-inference job (pure
-    // scheduler overhead that a many-partition commit pays N times)
-    val df = knownSchema match {
-      case Some(sc) => spark.read.schema(sc).parquet(path)
-      case None     => spark.read.parquet(path)
-    }
-    val kinds: Map[String, String] = (cols ++ bloomCols).distinct
-      .filter(df.schema.fieldNames.contains)
-      .map(c => c -> (df.schema(c).dataType match {
+    cols.distinct.filter(schema.fieldNames.contains)
+      .map(c => c -> (schema(c).dataType match {
         case _: NumericType => "n"
         case StringType     => "s"
         case TimestampType  => "t"
         case _              => ""
       })).filter(_._2.nonEmpty).toMap
-    if (kinds.isEmpty) return (Map.empty, footerRowCount(spark, path))
+  }
+
+  /** The stats measurer every commit path shares, run on STAGED data
+    * files (read back, so the stats describe exactly the bytes a reader
+    * will scan — a nondeterministic input cannot publish stats that
+    * disagree with the written data, and MetadataOnlyAgg answers
+    * count/min/max from them as exact). Measures the row count and, per
+    * column of `cols`, `bloomCols` and the table's declared
+    * [[StatsColumnsProp]] / [[BloomColumnsProp]] columns: min/max cast
+    * to string, the null count and, for integral/decimal columns, the
+    * exact sum (see sumScaleOf). One global aggregate without `key`, one
+    * `groupBy(key)` aggregate with it; results are keyed by the group's
+    * string key (None for the null group, and for the global result).
+    * Columns absent from the schema, of un-stat-able types, or all-null
+    * record nothing — readers treat a missing stat as "may contain
+    * anything". Bloom columns get a Bloom filter from a second aggregate
+    * of the same shape. */
+  private def measureStaged(staged: DataFrame, props: Map[String, String],
+      cols: Seq[String], bloomCols: Seq[String],
+      key: Option[org.apache.spark.sql.Column])
+      : Map[Option[String], (Map[String, ColStat], Long)] = {
+    import org.apache.spark.sql.{Column, GraftSqlBridge, Row}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, try_sum,
+      unix_micros}
+    import org.apache.spark.sql.types.DecimalType
+    val statCols = (cols ++ propColumns(props, StatsColumnsProp)).distinct
+    val bloomCfg = (bloomCols ++ propColumns(props, BloomColumnsProp)).distinct
+    val kinds = statKinds(staged.schema, statCols ++ bloomCfg)
+    def aggregate(aggs: Seq[Column]): Map[Option[String], Row] = key match {
+      case Some(k) =>
+        staged.groupBy(k.as("key:")).agg(aggs.head, aggs.tail: _*)
+          .collect().map(r => Option(r.getAs[String]("key:")) -> r).toMap
+      case None => Map(None -> staged.agg(aggs.head, aggs.tail: _*).head())
+    }
     // timestamps are measured in micros-since-epoch: an integer min/max
     // compares exactly, where the rendered-string form would be
     // session-zone- and fraction-format-sensitive
     def m(c: String) =
       if (kinds(c) == "t") unix_micros(col(c)) else col(c)
-    // exact column SUMS ride the same pass for integral/decimal stats
-    // columns (see sumScaleOf): sum(col) / grouped dashboards fold to
-    // the manifest exactly like count/min/max ([[Snapshot.columnSum]])
     val sumScales: Map[String, Int] = kinds.keys.toSeq
-      .flatMap(c => sumScaleOf(df.schema(c).dataType).map(c -> _)).toMap
-    val aggs = org.apache.spark.sql.functions.count(lit(1)).as("rows:") +:
+      .flatMap(c => sumScaleOf(staged.schema(c).dataType).map(c -> _)).toMap
+    val aggs = count(lit(1)).as("rows:") +:
       (kinds.keys.toSeq.sorted.flatMap(c =>
         Seq(min(m(c)).cast("string").as(s"min:$c"),
             max(m(c)).cast("string").as(s"max:$c"),
-            org.apache.spark.sql.functions.count(col(c)).as(s"cnt:$c"))) ++
+            count(col(c)).as(s"cnt:$c"))) ++
         sumScales.toSeq.sortBy(_._1).map { case (c, sc) =>
-          org.apache.spark.sql.functions.try_sum(
-            col(c).cast(org.apache.spark.sql.types.DecimalType(38, sc)))
+          try_sum(col(c).cast(DecimalType(38, sc)))
             .cast("string").as(s"sum:$c")
         })
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    // blooms stay n/s-only: a timestamp probe's string rendering is not
+    val measured = aggregate(aggs).map { case (k, row) =>
+      val rows = row.getAs[Long]("rows:")
+      val stats = kinds.flatMap { case (c, kind) =>
+        (Option(row.getAs[String](s"min:$c")),
+          Option(row.getAs[String](s"max:$c"))) match {
+          // null count = rows - non-null count, free off the same pass:
+          // lets IS NULL prune (nulls = 0) and count(col) fold to
+          // metadata (see ManifestFileIndex / MetadataOnlyAgg)
+          case (Some(mi), Some(ma)) => Some(c -> ColStat(kind, mi, ma,
+            nulls = Some(rows - row.getAs[Long](s"cnt:$c")),
+            sum = sumScales.get(c)
+              .flatMap(_ => Option(row.getAs[String](s"sum:$c")))))
+          case _ => None
+        }
+      }
+      k -> ((stats, rows))
+    }
+    // Blooms stay n/s-only: a timestamp probe's string rendering is not
     // canonical across callers, so membership would be unreliable.
-    // Numeric columns hash their DECIMAL(38,18) rendering — the one
+    // Spark's BloomFilterAggregate hashes each value's canonical
+    // rendering — strings raw, numerics via DECIMAL(38,18), the one
     // rendering a driver-side probe can reproduce exactly whatever the
     // column's source type (see bloomProbeRendering); out-of-range
     // values null out of the cast AND out of any exact probe, so both
-    // sides stay conservative together.
-    val blooms: Map[String, String] = bloomCols.distinct
-      .filter(c => kinds.get(c).exists(k => k == "n" || k == "s")).map { c =>
-        val rendered =
-          if (kinds(c) == "n")
-            col(c).cast(org.apache.spark.sql.types.DecimalType(38, 18))
-              .cast("string")
-          else col(c).cast("string")
-        val capacity = math.min(BloomMaxCapacity,
-          math.max(BloomMinCapacity, row.getAs[Long](s"cnt:$c")))
-        val bf = df.select(rendered.as(c))
-          .filter(col(c).isNotNull)
-          .stat.bloomFilter(c, capacity, BloomFpp)
-        val out = new java.io.ByteArrayOutputStream()
-        bf.writeTo(out)
-        c -> (BloomV2 +
-          java.util.Base64.getEncoder.encodeToString(out.toByteArray))
-      }.toMap
-    val stats = kinds.flatMap { case (c, kind) =>
-      (Option(row.getAs[String](s"min:$c")), Option(row.getAs[String](s"max:$c"))) match {
-        case (Some(mi), Some(ma)) =>
-          // null count = rows - non-null count, free off the same agg
-          // pass: lets IS NULL prune (nulls = 0) and count(col) fold to
-          // metadata (see ManifestFileIndex / MetadataOnlyAgg)
-          Some(c -> ColStat(kind, mi, ma, blooms.getOrElse(c, ""),
-            Some(row.getAs[Long]("rows:") - row.getAs[Long](s"cnt:$c")),
-            sum = sumScales.get(c)
-              .flatMap(_ => Option(row.getAs[String](s"sum:$c")))))
-        case _ => None
-      }
+    // sides stay conservative together. It serializes through the same
+    // sketch writeTo format the manifest's BloomV2 payloads use. Its
+    // capacity must be a literal: the column's largest measured non-null
+    // count over the groups (smaller groups just get a lower FPP), sized
+    // as BloomMinCapacity documents. All-null columns get none.
+    val nonNull: Map[String, Long] = bloomCfg
+      .filter(c => kinds.get(c).exists(k => k == "n" || k == "s"))
+      .flatMap(c => measured.values.flatMap { case (st, rows) =>
+        st.get(c).map(s => rows - s.nulls.getOrElse(0L)) }.maxOption
+        .map(c -> _)).toMap
+    if (nonNull.isEmpty) return measured
+    val blooms = aggregate(nonNull.toSeq.sorted.map { case (c, n) =>
+      val capacity = math.min(BloomMaxCapacity, math.max(BloomMinCapacity, n))
+      val numBits = org.apache.spark.util.sketch.BloomFilter
+        .optimalNumOfBits(capacity, BloomFpp)
+      val rendered =
+        if (kinds(c) == "n") col(c).cast(DecimalType(38, 18)).cast("string")
+        else col(c).cast("string")
+      GraftSqlBridge.column(new BloomFilterAggregate(
+          GraftSqlBridge.expression(rendered),
+          Literal(capacity), Literal(numBits)).toAggregateExpression())
+        .as(s"bloom:$c")
+    })
+    measured.map { case (k, (stats, rows)) =>
+      k -> ((stats.map { case (c, st) =>
+        c -> blooms.get(k).filter(_ => nonNull.contains(c))
+          .flatMap(r => Option(r.getAs[Array[Byte]](s"bloom:$c")))
+          .fold(st)(b => st.copy(bloom =
+            BloomV2 + java.util.Base64.getEncoder.encodeToString(b)))
+      }, rows))
     }
-    (stats, Some(row.getAs[Long]("rows:")))
   }
 
-  /** Shared commit path: stage every update into its own unique dir,
-    * measure stats off the staged files, splice updates and `drops` into
-    * the carried-forward manifest (after `reconcile` drops superseded
-    * entries), publish via the rename CAS — conditional on `expectedTxn`
-    * when given. */
+  /** [[measureStaged]] over ONE staged entry dir: its stats and exact
+    * row count. With nothing to measure, the count comes from the
+    * parquet footers instead (no job). A caller that just WROTE the
+    * files passes their `schema`, skipping the schema-inference job
+    * (pure scheduler overhead that a many-partition commit pays N
+    * times). */
+  private def entryStats(spark: SparkSession, path: String,
+      props: Map[String, String], cols: Seq[String], bloomCols: Seq[String],
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : (Map[String, ColStat], Option[Long]) = {
+    val wanted = cols ++ bloomCols ++ propColumns(props, StatsColumnsProp) ++
+      propColumns(props, BloomColumnsProp)
+    lazy val staged = schema.fold(spark.read.parquet(path))(
+      spark.read.schema(_).parquet(path))
+    if (wanted.isEmpty || statKinds(staged.schema, wanted).isEmpty)
+      (Map.empty, footerRowCount(spark, path))
+    else {
+      // the single global result sits under the None key
+      val (stats, rows) = measureStaged(staged, props, cols, bloomCols,
+        key = None)(None)
+      (stats, Some(rows))
+    }
+  }
+
+  /** CHECK-constraint enforcement over freshly staged DATA (`staged`
+    * reads the staged files, only when the table has constraints): the
+    * first of `props`' constraints, in name order, that some row
+    * violates throws before the catalog can move. A NULL verdict passes,
+    * as in SQL. */
+  private def checkConstraints(table: String, props: Map[String, String],
+      staged: => DataFrame): Unit = {
+    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
+    lazy val df = staged
+    props.toSeq.filter(_._1.startsWith(ConstraintPrefix)).sorted
+      .foreach { case (k, v) =>
+        if (!df.filter(not(coalesce(expr(v), lit(true)))).limit(1).isEmpty)
+          throw new IllegalArgumentException(
+            s"commit to '$table' violates $k ($v); nothing was published")
+      }
+  }
+
+  /** The write layout of a new data entry of a table with `props`: `df`
+    * sorted within the write tasks by the declared write sort order
+    * ([[SortColumnsProp]]; range-partitioned first in "global"
+    * [[SortModeProp]]) behind any `lead` columns, so row-group stats are
+    * tight from birth — unless the write is a reorganization (`reorg`:
+    * compaction/Z-cluster chose their own order) — plus the writer
+    * options for the declared parquet Bloom columns
+    * ([[ParquetBloomColumnsProp]]: file-grain equality skipping inside
+    * partitions the manifest couldn't prune). */
+  private def writeLayout(df: DataFrame, props: Map[String, String],
+      reorg: Boolean, lead: Seq[org.apache.spark.sql.Column] = Nil)
+      : (DataFrame, Map[String, String]) = {
+    val sortCols =
+      if (reorg) Nil
+      else propColumns(props, SortColumnsProp).filter(df.columns.contains)
+    val arranged =
+      if (sortCols.isEmpty) df
+      else {
+        val cs = lead ++ sortCols.map(org.apache.spark.sql.functions.col)
+        val base =
+          if (props.get(SortModeProp).contains("global"))
+            df.repartitionByRange(cs: _*)
+          else df
+        base.sortWithinPartitions(cs: _*)
+      }
+    (arranged, propColumns(props, ParquetBloomColumnsProp)
+      .filter(df.columns.contains)
+      .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap)
+  }
+
+  /** The commit path every lake write shares. It pins the current txn
+    * (conditional on `expectedTxn` when given), lets `reconcile` turn
+    * the current manifest into the carried-forward one (dropping
+    * superseded entries, validating before any staging work), stages
+    * `bulk` ([[stageBulk]]) and each per-entry update into dirs unique
+    * to this attempt — data entries in the table's write layout,
+    * constraint-checked and measured off the staged files — and
+    * publishes everything via one rename CAS. A failure before the CAS
+    * throws and the catalog never moves. */
   private[storage] def publish(spark: SparkSession, root: String,
       updates: Seq[(String, String, DataFrame)],
       statsColumns: Seq[String],
-      drops: Seq[(String, String)],
       expectedTxn: Option[Long],
       reconcile: Map[(String, String), Entry] => Map[(String, String), Entry],
       bloomColumns: Seq[String] = Nil,
       dataTxns: Map[(String, String), Long] = Map.empty,
-      deleteKeyCols: Map[(String, String), String] = Map.empty)(
+      deleteKeyCols: Map[(String, String), String] = Map.empty,
+      bulk: Option[BulkLoad] = None)(
       beforePublish: () => Unit): Long = {
     val f = fs(spark, root)
-    val prev = Trace("publish: currentTxn")(currentTxn(spark, root))
+    val prev = currentTxn(spark, root)
     expectedTxn.foreach { e =>
       if (prev.getOrElse(0L) != e) throw new java.io.IOException(
         s"catalog moved to txn ${prev.getOrElse(0L)} since snapshot $e; retry")
     }
-    val prevManifest = Trace("publish: manifest read")(
-      prev.map(manifest(f, root, _)).getOrElse(Map.empty))
+    val prevManifest = prev.map(manifest(f, root, _)).getOrElse(Map.empty)
+    val carried = reconcile(prevManifest)
     val next = prev.getOrElse(0L) + 1L
     val nonce = java.util.UUID.randomUUID().toString.take(8)
+    val dirName = s"v=$next.$nonce"
     // table properties, read once per table per publish (KB-scale
-    // driver parquet; absent for propless tables at zero cost) — both
-    // the stats-column merge below and the CHECK-constraint pass
-    // consult the same map
+    // driver parquet; absent for propless tables at zero cost). Their
+    // declared stats/Bloom columns merge into EVERY commit to that
+    // table — SQL INSERT, streaming sink, compaction, clustering — so
+    // skipping doesn't depend on each writer remembering the knob; the
+    // config lives with the table, the way Delta's
+    // dataSkippingNumIndexedCols does. Explicit caller columns always
+    // measure too (union).
     val propsCache = scala.collection.mutable.Map.empty[String, Map[String, String]]
     def tableProps(t: String): Map[String, String] =
       propsCache.getOrElseUpdate(t, prevManifest.get((t, "~p")).map { e =>
         readPropsDirect(spark, entryPath(root, t, "~p", e.dir))
       }.getOrElse(Map.empty))
-    def cfgCols(t: String, key: String): Seq[String] =
-      tableProps(t).get(key).toSeq.flatMap(_.split(','))
-        .map(_.trim).filter(_.nonEmpty)
-    // TABLE-configured stats/Bloom columns (TBLPROPERTIES
-    // `graft.stats-columns` / `graft.bloom-columns`) merge into EVERY
-    // commit to that table — SQL INSERT, streaming sink, compaction,
-    // clustering — so skipping doesn't depend on each writer
-    // remembering the knob; the config lives with the table, the way
-    // Delta's dataSkippingNumIndexedCols does. Explicit caller columns
-    // always measure too (union). Internal entries (`~p`, delete-key
-    // lists) and missing columns are skipped by measureStats itself.
-    def statsFor(t: String) = (statsColumns ++ cfgCols(t, StatsColumnsProp)).distinct
-    def bloomFor(t: String) = (bloomColumns ++ cfgCols(t, BloomColumnsProp)).distinct
-    // 1. all staging writes finish before anything is published. NEW
-    // data entries honor the table's declared write sort order
-    // ([[SortColumnsProp]]) here — the one chokepoint every write path
-    // shares — so row-group stats are tight from birth; internal
-    // entries (delete lists, `~p`) and reorganizations (explicit
-    // dataTxns — compaction/Z-cluster chose their own order) pass
-    // through verbatim.
-    def sortedForWrite(t: String, p: String, df: DataFrame): DataFrame = {
-      if (p.startsWith("~") || deleteKeyCols.contains((t, p)) ||
-          dataTxns.contains((t, p))) return df
-      val sortCols = cfgCols(t, SortColumnsProp).filter(df.columns.contains)
-      if (sortCols.isEmpty) return df
-      val cs = sortCols.map(org.apache.spark.sql.functions.col)
-      val base =
-        if (tableProps(t).get(SortModeProp).contains("global"))
-          df.repartitionByRange(cs: _*)
-        else df
-      base.sortWithinPartitions(cs: _*)
-    }
-    // data entries also write PARQUET bloom filters for the table's
-    // declared columns ([[ParquetBloomColumnsProp]]) — file-grain
-    // equality skipping inside partitions the manifest couldn't prune
-    def bloomWriteOptions(t: String, p: String,
-        df: DataFrame): Map[String, String] =
-      if (p.startsWith("~") || deleteKeyCols.contains((t, p))) Map.empty
-      else cfgCols(t, ParquetBloomColumnsProp)
-        .filter(df.columns.contains)
-        .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
-    val staged: Map[(String, String), Entry] = updates.map { case (t, p, df) =>
-      val dirName = s"v=$next.$nonce"
-      val path = entryPath(root, t, p, dirName)
-      Trace(s"publish: write $t/$p")(
-        sortedForWrite(t, p, df).write.mode("errorifexists")
-          .options(bloomWriteOptions(t, p, df)).parquet(path))
-      // delete entries (equality key lists, deletion vectors) are not
-      // data: never measure table stats/Blooms on them — a DV's row
-      // payload would otherwise leak DELETED values into skipping
-      // metadata that pruning paths must never consult
-      val (stats, rows) = Trace(s"publish: stats $t/$p")(
-        if (deleteKeyCols.contains((t, p))) measureStats(spark, path, Nil)
-        else measureStats(spark, path, statsFor(t), bloomFor(t),
-          knownSchema = Some(df.schema)))
-      (t, p) -> Entry(dirName, stats, dataTxns.get((t, p)), rows,
-        deleteKeyCols.get((t, p)),
-        bytes = Trace(s"publish: bytes $t/$p")(dirBytes(spark, path)))
-    }.toMap
-    // CHECK-constraint enforcement over freshly staged DATA: internal
-    // entries (delete key lists, `~p`) are not rows, and reorganizations
-    // (explicit dataTxns) re-stage data that was validated when first
-    // committed. A violation unstages everything and throws — the
-    // catalog never moves.
-    val checked = staged.keys.filter { case (t, p) =>
-      !p.startsWith("~") && !deleteKeyCols.contains((t, p)) &&
-        !dataTxns.contains((t, p))
-    }.toSeq.sorted
-    if (checked.nonEmpty) Trace("publish: constraint pass") {
-      import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-      val byTable = checked.groupBy(_._1)
-      val violation = byTable.keys.toSeq.sorted.iterator.flatMap { t =>
-        val cons = tableProps(t).toSeq
-          .filter { case (k, _) => k.startsWith(ConstraintPrefix) }.sorted
-        if (cons.isEmpty) Iterator.empty
-        else byTable(t).iterator.flatMap { case (_, p) =>
-          val df = spark.read.parquet(
-            entryPath(root, t, p, staged((t, p)).dir))
-          cons.iterator.collect { case (k, v)
-            if !df.filter(not(coalesce(expr(v), lit(true)))).limit(1)
-              .isEmpty => (t, k, v)
-          }
-        }
-      }.nextOption()
-      violation.foreach { case (t, k, v) =>
-        staged.foreach { case ((st, sp), e) =>
-          f.delete(new Path(entryPath(root, st, sp, e.dir)), true)
-        }
-        throw new IllegalArgumentException(
-          s"commit to '$t' violates $k ($v); nothing was published")
+    var staged = Map.empty[(String, String), Entry]
+    try {
+      bulk.foreach { load =>
+        staged = stageBulk(spark, f, root, load, tableProps(load.table),
+          dirName)
+        // only a bulk REWRITE (which pre-guards full emptiness itself)
+        // may stage zero groups beside drops or extra entries: a bulk
+        // LOAD or spec-aware COMPACTION whose input evaporated must not
+        // silently erase its sources
+        require(staged.nonEmpty || load.partNameOf.isDefined ||
+          (updates.isEmpty && carried.size == prevManifest.size),
+          "bulk commit staged zero partitions but carries drops or extra " +
+            "entries; refusing to erase the sources — if pending deletes " +
+            "emptied them, run applyDeletes or deleteWhere instead")
       }
+      updates.foreach { case (t, p, df) =>
+        require(!staged.contains((t, p)),
+          s"update collides with a bulk partition: ($t, $p)")
+        val path = entryPath(root, t, p, dirName)
+        staged += (t, p) -> Entry(dirName) // unstaged on a refusal below
+        // internal entries (`~p` properties, `~d-`/`~v-` delete entries)
+        // are not data: written verbatim, never constraint-checked or
+        // measured — a DV's row payload would otherwise leak DELETED
+        // values into skipping metadata that pruning paths must never
+        // consult. Reorganizations (explicit dataTxns) re-stage data
+        // that was validated when first committed.
+        val internal = p.startsWith("~")
+        val reorg = dataTxns.contains((t, p))
+        val (arranged, opts) =
+          if (internal) (df, Map.empty[String, String])
+          else writeLayout(df, tableProps(t), reorg)
+        arranged.write.mode("errorifexists").options(opts).parquet(path)
+        if (!internal && !reorg)
+          checkConstraints(t, tableProps(t),
+            spark.read.schema(df.schema).parquet(path))
+        val (stats, rows) =
+          if (internal) (Map.empty[String, ColStat], footerRowCount(spark, path))
+          else entryStats(spark, path, tableProps(t), statsColumns,
+            bloomColumns, Some(df.schema))
+        staged += (t, p) -> Entry(dirName, stats, dataTxns.get((t, p)), rows,
+          deleteKeyCols.get((t, p)), bytes = dirBytes(spark, path))
+      }
+    } catch {
+      // a refused commit (CHECK violation, colliding entries) unstages
+      // everything; a crash mid-staging leaves invisible orphans, like
+      // any crash before the CAS, for [[vacuum]] to clear
+      case ex: IllegalArgumentException =>
+        staged.foreach { case ((t, p), e) =>
+          f.delete(new Path(entryPath(root, t, p, e.dir)), true)
+        }
+        throw ex
     }
-    val carried = reconcile(prevManifest)
-    Trace("publish: casPublish")(
-      casPublish(f, root, next, nonce, carried, staged)(beforePublish))
+    casPublish(f, root, next, nonce, carried, staged)(beforePublish)
     next
   }
 
-  /** Serialize `carried ++ staged` as txn `next`'s manifest and publish
-    * it via the rename CAS — one rename commits every table and
-    * partition at once. A lost race deletes the tmp manifest AND every
-    * staged dir, then throws. */
   /** Named TAGS: durable references pinning a committed txn by name
     * (Iceberg's tags on this catalog's txn axis) — `release-2026-08`,
     * `pre-migration`, a training-run's exact input state. A tagged txn
@@ -4415,10 +4215,8 @@ object TxnCatalog {
         StructField("value", StringType, nullable = false))))
     // measure under the POST-change column names (the publish path's
     // table-config merge still reads the pre-change properties)
-    val newStats = newProps.get(StatsColumnsProp).toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    val newBlooms = newProps.get(BloomColumnsProp).toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+    val newStats = propColumns(newProps, StatsColumnsProp)
+    val newBlooms = propColumns(newProps, BloomColumnsProp)
     if (data.sizeIs > BulkRewriteThreshold)
       // many partitions: ONE read + ONE staged write + ONE grouped
       // stats (+ bloom) pass + ONE CAS (a 10 000-partition ALTER is a
@@ -4432,8 +4230,7 @@ object TxnCatalog {
       val updates = data.map { case (p, e) =>
         (table, p, transform(snap.readSelected(table, Seq((p, e))).get))
       } :+ ((table, PropsPartition, kv))
-      publish(spark, root, updates, statsColumns = newStats, drops = Nil,
-        expectedTxn = Some(snap.txn), reconcile = identity,
+      publish(spark, root, updates, statsColumns = newStats, expectedTxn = Some(snap.txn), reconcile = identity,
         bloomColumns = newBlooms)(() => ())
     }
   }
@@ -4470,6 +4267,10 @@ object TxnCatalog {
       linked
     } else !f.exists(marker) && f.rename(tmp, marker)
 
+  /** Serialize `carried ++ staged` as txn `next`'s manifest and publish
+    * it via the rename CAS — one rename commits every table and
+    * partition at once. A lost race deletes the tmp manifest AND every
+    * staged dir, then throws. */
   private def casPublish(f: org.apache.hadoop.fs.FileSystem, root: String,
       next: Long, nonce: String,
       carried: Map[(String, String), Entry],
@@ -4550,7 +4351,7 @@ object TxnCatalog {
       val measured: Map[(String, String), Entry] = targets.map {
         case (p, e) =>
           val path = entryPath(root, table, p, e.dir)
-          val (st, rows) = measureStats(spark, path,
+          val (st, rows) = entryStats(spark, path, Map.empty,
             statsColumns, bloomColumns)
           (table, p) -> e.copy(stats = e.stats ++ st,
             rows = rows.orElse(e.rows),
@@ -4653,7 +4454,7 @@ object TxnCatalog {
           StructField("value", StringType, nullable = false))))
       try {
         return publish(spark, root, Seq((table, PropsPartition, kv)),
-          statsColumns = Nil, drops = Nil, expectedTxn = Some(cur.txn),
+          statsColumns = Nil, expectedTxn = Some(cur.txn),
           reconcile = carried => carried.filterNot(_._1._1 == table) ++
             oldNonProps)(beforePublish)
       } catch {
@@ -4763,11 +4564,8 @@ object TxnCatalog {
         }
       f.delete(stagingDir, true) // _SUCCESS and empty shell
       val tblProps = snap.properties(table)
-      def cfg(key: String): Seq[String] = tblProps.get(key).toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      val (stats, rows) = measureStats(spark, target.toString,
-        (statsColumns ++ cfg(StatsColumnsProp) :+ keyCol).distinct,
-        (bloomColumns ++ cfg(BloomColumnsProp)).distinct)
+      val (stats, rows) = entryStats(spark, target.toString, tblProps,
+        statsColumns :+ keyCol, bloomColumns)
       val dataTxn = data.map { case (_, e) => entryDataTxn(e) }.max
       val mergedProps = tblProps ++ Map(
         BucketColumnProp -> keyCol,

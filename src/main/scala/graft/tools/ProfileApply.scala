@@ -9,12 +9,11 @@ import graft.streaming.Streams
 /** Per-phase attribution of ONE steady-state trigger of the streaming
   * apply sinks ([[Streams.cdcApplySink]] / [[Streams.scd2ApplySink]]) —
   * the NOTES evidence behind the jobs-per-trigger spec ceilings
-  * (CdcApplySpec / Scd2ApplySpec). Run with the commit tracer on:
+  * (CdcApplySpec / Scd2ApplySpec). Run with:
   *
-  *   GRAFT_TRACE=1 tools/run.sh graft.tools.ProfileApply
+  *   tools/run.sh graft.tools.ProfileApply
   *
-  * Prints the trigger's Spark job count and descriptions, with the
-  * `[trace]` commit-path phases interleaved on stderr. */
+  * Prints the trigger's Spark job count and descriptions. */
 object ProfileApply {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

@@ -23,20 +23,34 @@ class BulkCommitSpec extends GraftSuite {
   test("bulk commit equals the per-partition loop: rows, partitions, stats") {
     val bulk = tmp()
     val loop = tmp()
-    TxnCatalog.commitPartitioned(spark, bulk, "t", sample, "grp",
-      statsColumns = Seq("id", "nm"))
+    // every stat kind: numeric (with exact sum), string, timestamp,
+    // decimal (exact sum), a column with nulls, and Bloom columns
+    val in = sample
+      .withColumn("ts", timestamp_seconds($"id" * 3600L + 1700000000L))
+      .withColumn("amt", ($"id" * 0.25).cast("decimal(10,2)"))
+      .withColumn("opt", when($"id" % 3 === 0, lit(null)).otherwise($"nm"))
+    val statsCols = Seq("id", "nm", "ts", "amt", "opt")
+    val bloomCols = Seq("nm", "id")
+    TxnCatalog.commitPartitioned(spark, bulk, "t", in, "grp",
+      statsColumns = statsCols, bloomColumns = bloomCols)
     TxnCatalog.commitPartitions(spark, loop,
-      (0 until 8).map(g => ("t", s"grp=$g", sample.filter($"grp" === g))),
-      statsColumns = Seq("id", "nm"))
+      (0 until 8).map(g => ("t", s"grp=$g", in.filter($"grp" === g))),
+      statsColumns = statsCols, bloomColumns = bloomCols)
     val sb = TxnCatalog.snapshot(spark, bulk).get
     val sl = TxnCatalog.snapshot(spark, loop).get
     assert(sb.partitions("t") === sl.partitions("t"))
     assert(sb.read("t").get.collect().toSet === sl.read("t").get.collect().toSet)
     // the key column survived as a DATA column
-    assert(sb.read("t").get.columns.sorted === Array("grp", "id", "nm", "score"))
-    // grouped stats render identically to the staged-file stats pass
+    assert(sb.read("t").get.columns.sorted ===
+      Array("amt", "grp", "id", "nm", "opt", "score", "ts"))
+    // grouped stats render identically to the staged-file stats pass,
+    // Bloom payloads included
     sl.partitions("t").foreach { p =>
-      assert(sb.stats("t", p) === sl.stats("t", p), s"stats mismatch in $p")
+      val st = sl.stats("t", p)
+      assert(st.keySet === statsCols.toSet, s"stat kinds missing in $p")
+      assert(st("amt").sum.isDefined && st("opt").nulls.exists(_ > 0L) &&
+        bloomCols.forall(c => st(c).bloom.nonEmpty), s"stat parts in $p")
+      assert(sb.stats("t", p) === st, s"stats mismatch in $p")
       assert(sb.rowCount("t", p) === sl.rowCount("t", p))
     }
     // and pruning behaves identically (id ranges differ per group here
@@ -70,6 +84,32 @@ class BulkCommitSpec extends GraftSuite {
     assert(jobs.get() <= 6,
       s"bulk commit of 40 partitions must stay O(1) jobs, ran ${jobs.get()}")
     assert(TxnCatalog.read(spark, root, "t").get.count() === 400L)
+  }
+
+  test("per-entry commit runs at most write + stats per entry") {
+    val root = tmp()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        { jobs.incrementAndGet(); () }
+    }
+    val updates = Seq("cat", "lin", "run").map(t =>
+      (t, "b=0", (0 until 50).map(i => (i.toLong, s"$t$i")).toDF("id", "nm")))
+    spark.sparkContext.addSparkListener(l)
+    try {
+      TxnCatalog.commitPartitions(spark, root, updates,
+        statsColumns = Seq("id"))
+      val deadline = System.currentTimeMillis() + 10000L
+      while (jobs.get() < 1 && System.currentTimeMillis() < deadline)
+        Thread.sleep(50L)
+      Thread.sleep(500L)
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(TxnCatalog.snapshot(spark, root).get.stats("lin", "b=0")
+      .contains("id"))
+    // 3 entries x (write + stats), with the same small headroom the
+    // O(1)-jobs test above allows for a prior suite's async cleanup
+    assert(jobs.get() <= 3 * 2 + 4,
+      s"3-entry per-entry commit ran ${jobs.get()} jobs")
   }
 
   test("string keys with spaces and slashes escape, round trip, and prune") {

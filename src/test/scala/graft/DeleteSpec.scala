@@ -88,6 +88,22 @@ class DeleteSpec extends GraftSuite {
     assert(TxnCatalog.read(spark, root, "t").get.count() === 401L)
   }
 
+  test("deleteWhere on a whole-table entry is conditional too") {
+    val root = tmp("delwholerace")
+    TxnCatalog.commit(spark, root, Seq("t" ->
+      (0 until 100).map(i => (i.toLong, s"r$i")).toDF("k", "name")))
+    val ex = intercept[java.io.IOException] {
+      TxnCatalog.deleteWhereHooked(spark, root, "t", "k", 10L, 19L) { () =>
+        TxnCatalog.commit(spark, root, Seq("t" ->
+          (0 until 101).map(i => (i.toLong, s"r$i")).toDF("k", "name")))
+      }
+    }
+    // refused by the pinned-snapshot guard, not by a lucky CAS loss
+    assert(ex.getMessage.contains("since snapshot"), ex.getMessage)
+    // the rival's commit stands; no rows were deleted
+    assert(TxnCatalog.read(spark, root, "t").get.count() === 101L)
+  }
+
   test("deleteWhere on a whole-table entry rewrites through commit") {
     val root = tmp("delwhole")
     TxnCatalog.commit(spark, root, Seq("t" ->
