@@ -32,6 +32,24 @@ object GeoKernels {
     }
     inside
   }
+
+  /** [[contains]] over a packed ring: vertices `from until until` of the
+    * primitive `xs`/`ys` arrays, same edge walk and arithmetic. */
+  def contains(xs: Array[Double], ys: Array[Double], from: Int, until: Int,
+      px: Double, py: Double): Boolean = {
+    var inside = false
+    var i = from
+    var j = until - 1
+    while (i < until) {
+      val xi = xs(i); val yi = ys(i)
+      val xj = xs(j); val yj = ys(j)
+      if (((yi > py) != (yj > py)) &&
+        (px < (xj - xi) * (py - yi) / (yj - yi) + xi)) inside = !inside
+      j = i
+      i += 1
+    }
+    inside
+  }
 }
 
 /** Native point-in-polygon predicate (J2, script_geo.py:82-88 intended

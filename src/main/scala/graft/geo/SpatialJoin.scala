@@ -1,23 +1,29 @@
 package graft.geo
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Spatial join operators (SURVEY.md J2/J3/J4): grid-bucketed
-  * point-in-polygon containment, nearest-vertex 1-NN fallback, and the
-  * combined containment-first classification pipeline (the reference's
-  * intended semantics — its actual code always falls through to 1-NN,
-  * §2.3 bug 1).
+/** Spatial operators (SURVEY.md J2/J3/J4/E1): grid-bucketed
+  * point-in-polygon containment join, nearest-vertex 1-NN join, and the
+  * containment-first classification (the reference's intended semantics —
+  * its actual code always falls through to 1-NN, §2.3 bug 1).
   *
-  * Scale design: the naive containment join is points × polygons (the
-  * reference's O(P·V) per-image loop). Here both sides are bucketed into
-  * grid cells (J4 rewrite): points map to exactly one cell, polygons are
-  * replicated per bbox-overlapped cell, and the join is a plain equi-join
-  * on the cell id — broadcastable when the parcel side is dim-sized,
-  * shuffle-partitioned otherwise. Each candidate pair then runs the exact
-  * native ray-casting test once. A (point, polygon) pair can meet in at
-  * most one cell — the point's — so no post-join dedup is needed.
+  * Classification probes a [[ParcelIndex]]: the polygon side, which is
+  * dimension-sized, is collected once and packed into primitive rings, a
+  * grid of the `floor(v / cellSize)` cells each ring's bbox overlaps, and
+  * a vertex list. Each point then looks its cell up, runs the exact
+  * ray-casting test over that cell's candidates (minimum id wins when
+  * parcels overlap), and a point in no parcel takes the parcel of the
+  * vertex with minimum (d², id). That is one narrow pass over the points —
+  * no join, aggregate, union or exchange.
+  *
+  * The two joins remain the general form for ad-hoc point × polygon
+  * queries (and what [[graft.plans.SpatialJoinRewrite]] plans naive SQL
+  * into): both sides are bucketed into grid cells (J4), points to exactly
+  * one cell, polygons replicated per bbox-overlapped cell, joined on the
+  * cell id — broadcastable when the parcel side is dim-sized,
+  * shuffle-partitioned otherwise. A (point, polygon) pair meets in at most
+  * one cell — the point's — so no post-join dedup is needed.
   */
 object SpatialJoin {
 
@@ -62,37 +68,22 @@ object SpatialJoin {
         :+ col("__nn.nn_y") :+ col("__nn.nn_d2"): _*)
   }
 
-  /** E1 classification core, intended semantics (SURVEY §2.3 bugs 1-2 fixed):
-    * containment first (grid-bucketed J2), nearest-vertex fallback for points
-    * in no polygon (J3), `INDICE` sentinel for points with null coordinates.
-    * Output: every input point exactly once, with (method, matched polygon id).
+  /** E1 classification core, intended semantics (SURVEY §2.3 bugs 1-2
+    * fixed): containment first, nearest-vertex fallback for points in no
+    * polygon, `unclassifiable` for points with a null coordinate. Output:
+    * every input point exactly once, as (idCol, poly_id, method), in one
+    * narrow pass over `points` against a [[ParcelIndex]] of `polys` (one
+    * small `collect()`). Equal to [[pointInPolygonJoin]] + min polygon id,
+    * then [[nearestVertexJoin]] for the rest; `polyIdCol` must be integral.
     */
   def classify(
       points: DataFrame, polys: DataFrame,
       idCol: String, xCol: String, yCol: String,
-      ringCol: String, polyIdCol: String, cellSize: Double): DataFrame = {
-    val located = points.filter(col(xCol).isNotNull && col(yCol).isNotNull)
-    val unlocated = points.filter(col(xCol).isNull || col(yCol).isNull)
-      .select(col(idCol), lit(null).cast("long").as("poly_id"),
-        lit("unclassifiable").as("method"))
-
-    // a point inside N overlapping polygons matches N times in the inner
-    // containment join; keep exactly one row per point (min polygon id —
-    // deterministic) so the exactly-once output contract holds
-    val contained = pointInPolygonJoin(located, polys, xCol, yCol, ringCol, cellSize)
-      .select(col(idCol), col(polyIdCol).cast("long").as("poly_id"))
-      .groupBy(col(idCol))
-      .agg(min("poly_id").as("poly_id"))
-      .select(col(idCol), col("poly_id"), lit("contains").as("method"))
-    // points with no containing polygon → 1-NN fallback
-    val fallback = nearestVertexJoin(
-      located.join(contained.select(col(idCol)), Seq(idCol), "left_anti"),
-      polys, xCol, yCol, ringCol, polyIdCol)
-      .select(col(idCol), col("nn_poly").cast("long").as("poly_id"),
-        lit("nearest").as("method"))
-
-    contained.unionByName(fallback).unionByName(unlocated)
-  }
+      ringCol: String, polyIdCol: String, cellSize: Double): DataFrame =
+    points
+      .withColumn("__hit",
+        ParcelIndex.collect(polys, ringCol, polyIdCol, cellSize).probe(col(xCol), col(yCol)))
+      .select(col(idCol), col("__hit.poly_id").as("poly_id"), col("__hit.method").as("method"))
 
   /** The reference's composite business key (script_geo.py:197):
     * `CODIGO_SECCION_TIPOUSO_APL`, or the unclassifiable sentinel

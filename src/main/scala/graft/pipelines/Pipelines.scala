@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import graft.geo.SpatialJoin
+import graft.geo.{ParcelIndex, SpatialJoin}
 import graft.model.Catalog
 import graft.ops.CatalogOps
 import graft.sources.{BinarySource, Exif}
@@ -21,6 +21,12 @@ object Pipelines {
     * (composite key or the unclassifiable sentinel, which — unlike the
     * reference, §2.3.2 — flows to the sink instead of crashing).
     *
+    * The parcels are read once into a [[graft.geo.ParcelIndex]] (one small
+    * job; the parcel table is dimension-sized), and each image is
+    * classified in place by a per-row probe that also carries its parcel's
+    * attributes: the decode UDFs and the `content` scan run once per image,
+    * in one narrow pass with no join or exchange.
+    *
     * @param images  binaryFile rows (path, content, …), optionally with
     *                gt_cx/gt_cy metadata columns for non-EXIF rasters
     * @param predios parcel dims: (predioId, ring, CODIGO, NOMBRE, SECCION,
@@ -28,9 +34,11 @@ object Pipelines {
     */
   def ingestClassify(images: DataFrame, predios: DataFrame, cellSize: Double): DataFrame = {
     val hasGt = images.columns.contains("gt_cx")
+    val parcels = ParcelIndex.collect(predios, "ring", "predioId", cellSize)
+    val parcel = (c: String) => col("__hit.parcel").getField(c)
     // location precedence: EXIF GPS (JPEG) → GeoTIFF extent centroid
     // (native tag walk) → caller-supplied gt_cx/gt_cy metadata escape hatch
-    val withGps = images
+    images
       .withColumn("__gps", Exif.gpsUdf(col("content")))
       .withColumn("__gtc", graft.sources.GeoTiff.centroidUdf(col("content")))
       .withColumn("cx",
@@ -42,23 +50,17 @@ object Pipelines {
       .withColumn("clase",
         when(BinarySource.isJpeg(col("path")), "BR/").otherwise("TIF/"))
       .select("path", "content", "clase", "cx", "cy")
-
-    val classified = SpatialJoin.classify(
-      withGps, predios, "path", "cx", "cy", "ring", "predioId", cellSize)
-
-    classified
-      .join(withGps, Seq("path"))
-      .join(broadcast(predios.drop("ring")),
-        classified("poly_id") === predios("predioId"), "left")
+      .withColumn("__hit", parcels.probe(col("cx"), col("cy")))
       .select(
-        col("path"), col("method"), col("cx"), col("cy"),
-        SpatialJoin.indice(col("CODIGO"), col("SECCION"), col("TIPOUSO"), col("APL"),
-          col("method")).as("INDICE"),
-        col("CODIGO"), col("NOMBRE").as("NOMBRE_PREDIO"), col("SECCION"),
-        col("TIPOUSO").as("ESPECIE"), col("APL"),
-        when(col("method") === "unclassifiable", lit(null))
+        col("path"), col("__hit.method").as("method"), col("cx"), col("cy"),
+        SpatialJoin.indice(parcel("CODIGO"), parcel("SECCION"), parcel("TIPOUSO"),
+          parcel("APL"), col("__hit.method")).as("INDICE"),
+        parcel("CODIGO").as("CODIGO"), parcel("NOMBRE").as("NOMBRE_PREDIO"),
+        parcel("SECCION").as("SECCION"), parcel("TIPOUSO").as("ESPECIE"),
+        parcel("APL").as("APL"),
+        when(col("__hit.method") === "unclassifiable", lit(null))
           .otherwise(BinarySource.dataLakeKey(
-            col("clase"), coalesce(col("CODIGO"), lit("")), col("content"),
+            col("clase"), coalesce(parcel("CODIGO"), lit("")), col("content"),
             BinarySource.fileName(col("path")))).as("RUTA_RESULTADO"))
   }
 

@@ -435,8 +435,8 @@ object Streams {
       .start()
 
   /** E1 as a continuous ingest: a stream of image rows is classified
-    * against the STATIC parcel table (centroid → containment-first spatial
-    * join with 1-NN fallback, [[graft.pipelines.Pipelines.ingestClassify]])
+    * against the STATIC parcel table (centroid → containment-first
+    * classification with 1-NN fallback, [[graft.pipelines.Pipelines.ingestClassify]])
     * and committed atomically to catalog + lineage through
     * [[twinCommitSink]] — the streaming re-expression of the reference's
     * re-run-the-script-per-batch loop (script_geo.py:166-205 +
@@ -445,8 +445,9 @@ object Streams {
     * ingestClassify is a per-batch transform (it runs inside foreachBatch
     * on a plain DataFrame), so the stream output is IDENTICAL row-for-row
     * to the batch pipeline over the concatenated input — the parity the
-    * spec pins. Parcels are a broadcast dim; per-batch work scales with
-    * the batch, not the corpus.
+    * spec pins. Parcels are a dimension table, collected into a
+    * [[graft.geo.ParcelIndex]] once per micro-batch; per-batch work scales
+    * with the batch, not the corpus.
     */
   def classifyCommitSink(images: DataFrame, predios: DataFrame,
       cellSize: Double, runId: Long, root: String, catalogTable: String,

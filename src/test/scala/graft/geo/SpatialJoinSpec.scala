@@ -82,6 +82,99 @@ class SpatialJoinSpec extends GraftSuite {
     assert(p1.head.getLong(1) === 10L && p1.head.getString(2) === "contains")
   }
 
+  private def ringsDF(parcels: Seq[(Long, Option[Seq[(Double, Double)]])]) =
+    parcels.toDF("pid", "pts")
+      .select($"pid",
+        transform($"pts", p => struct(p.getField("_1").as("x"), p.getField("_2").as("y")))
+          .as("ring"))
+
+  /** The join form of classify: naive cross-join containment with min
+    * polygon id, then nearestVertexJoin over every parcel for the rest. */
+  private def joinReference(pts: org.apache.spark.sql.DataFrame,
+      pls: org.apache.spark.sql.DataFrame): Map[Long, (Option[Long], String)] = {
+    val located = pts.filter($"px".isNotNull && $"py".isNotNull)
+    val contained = located.crossJoin(pls)
+      .filter(PointInPolygon.contains($"ring", $"px", $"py"))
+      .groupBy("id").agg(min("pid").as("pid"))
+      .as[(Long, Long)].collect().toMap
+    val nearest = SpatialJoin.nearestVertexJoin(
+      located.filter(!$"id".isin(contained.keys.toSeq: _*)), pls, "px", "py", "ring", "pid")
+      .select("id", "nn_poly").as[(Long, Long)].collect().toMap
+    pts.select("id").as[Long].collect().map { id =>
+      id -> contained.get(id).map(p => (Option(p), "contains"))
+        .orElse(nearest.get(id).map(p => (Option(p), "nearest")))
+        .getOrElse((None, "unclassifiable"))
+    }.toMap
+  }
+
+  private def classified(pts: org.apache.spark.sql.DataFrame,
+      pls: org.apache.spark.sql.DataFrame, cell: Double): Seq[(Long, (Option[Long], String))] =
+    SpatialJoin.classify(pts, pls, "id", "px", "py", "ring", "pid", cell)
+      .collect().toSeq
+      .map(r => r.getLong(0) -> ((Option(r.get(1)).map(_.asInstanceOf[Long]), r.getString(2))))
+
+  test("classify: index probe equals the join form on random star parcels") {
+    val rnd = new scala.util.Random(20260817L)
+    // 5×5 star polygons on a 4-unit lattice with radii up to 3: neighbours
+    // overlap in places and leave gaps in others
+    val stars = for (i <- 0 until 5; j <- 0 until 5) yield {
+      val n = 5 + rnd.nextInt(8)
+      (i * 5 + j).toLong * 3 + 7 -> (0 until n).map { k =>
+        val a = 2 * math.Pi * k / n
+        val r = 1.0 + 2.0 * rnd.nextDouble()
+        (4.0 * i + r * math.cos(a), 4.0 * j + r * math.sin(a))
+      }
+    }
+    val square = (x0: Double) => Seq((x0, 0.0), (x0 + 2, 0.0), (x0 + 2, 2.0), (x0, 2.0))
+    val extra = Seq(
+      1000L -> stars(6)._2,                                // coincident with a star
+      1L -> stars(12)._2.map { case (x, y) => (x + 0.7, y + 0.4) }, // overlaps, lower id
+      2001L -> square(40.0), 2000L -> square(44.0))       // (43, 1): equidistant gap
+    val parcels = (stars ++ extra).map { case (id, ring) => id -> Option(ring) }
+    val pls = ringsDF(parcels)
+
+    val onVertex = parcels.flatMap(_._2.get.take(2)).map { case (x, y) => (Option(x), Option(y)) }
+    val random = Seq.fill(250)((Option(-3.0 + 22 * rnd.nextDouble()),
+      Option(-3.0 + 22 * rnd.nextDouble())))
+    val lattice = for (x <- -1 to 17 by 3; y <- -1 to 17 by 2)
+      yield (Option(x.toDouble), Option(y.toDouble))
+    val special = Seq((Option(43.0), Option(1.0)), (Option(42.0), Option(1.0)),
+      (None, Option(1.0)), (Option(1.0), None), (None, None))
+    val pts = (onVertex ++ random ++ lattice ++ special).zipWithIndex
+      .map { case ((x, y), i) => (i.toLong, x, y) }.toDF("id", "px", "py")
+
+    val expected = joinReference(pts, pls)
+    assert(expected.values.count(_._2 == "contains") > 50)
+    assert(expected.values.count(_._2 == "nearest") > 20)
+    assert(expected(pts.count() - 5) === ((Some(2000L), "nearest")), "(43, 1): tie → min id")
+    // a local relation evaluates the probe interpreted at planning time;
+    // an RDD-backed copy runs it in generated code on the executors
+    val ptsRdd = spark.createDataFrame(pts.rdd, pts.schema)
+    for (cell <- Seq(0.5, 1.0, 3.0, 10.0); input <- Seq(pts, ptsRdd)) {
+      val out = classified(input, pls, cell)
+      assert(out.size === expected.size, s"cellSize=$cell: every point exactly once")
+      assert(out.toMap === expected, s"cellSize=$cell")
+    }
+  }
+
+  test("classify: a null or empty ring never matches and does not fail the batch") {
+    val pls = ringsDF(Seq(
+      1L -> None,                                        // null ring
+      2L -> Some(Seq.empty),                             // empty ring
+      30L -> Some(Seq((4.0, 0.0), (6.0, 0.0), (6.0, 2.0), (4.0, 2.0)))))
+    val pts = Seq((1L, Some(1.0), Some(1.0)), (2L, Some(5.0), Some(1.0)),
+      (3L, None, None)).toDF("id", "px", "py")
+    for (cell <- Seq(0.5, 2.0)) {
+      assert(classified(pts, pls, cell).toMap === Map(
+        1L -> ((Some(30L), "nearest")),
+        2L -> ((Some(30L), "contains")),
+        3L -> ((None, "unclassifiable"))), s"cellSize=$cell")
+    }
+    // no well-formed parcel at all: nothing to fall back on, every row kept
+    val none = classified(pts, pls.filter($"pid" < 10L), 2.0).toMap
+    assert(none.values.toSet === Set((None, "unclassifiable")) && none.size === 3)
+  }
+
   test("indice: composite key and sentinel (script_geo.py:197,199)") {
     val df = Seq(
       ("C1", "S2", "PINO", "7", "contains"),

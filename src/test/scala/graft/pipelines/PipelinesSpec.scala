@@ -2,6 +2,7 @@ package graft.pipelines
 
 import graft.GraftSuite
 import graft.multimodal.Multimodal
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 class PipelinesSpec extends GraftSuite {
@@ -54,6 +55,46 @@ class PipelinesSpec extends GraftSuite {
     assert(r4.getAs[String]("method") === "unclassifiable")
     assert(r4.getAs[String]("INDICE") === "IMAGEN NO CLASIFICABLE") // §2.3.2 fixed
     assert(r4.get(r4.fieldIndex("RUTA_RESULTADO")) === null)
+  }
+
+  test("ingestClassify: one parcel read plus one narrow batch pass, no shuffle") {
+    val dir = java.nio.file.Files.createTempDirectory("ingest-classify").toFile
+    images.write.parquet(s"$dir/images")
+    predios.write.parquet(s"$dir/predios")
+    val batch = spark.read.parquet(s"$dir/images")
+    val parcels = spark.read.parquet(s"$dir/predios")
+    val group = "ingest-classify-pin"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
+    // only this test's jobs count: a prior suite's stray job can land in
+    // the listener window, as BulkCommitSpec notes
+    val l = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        if (Option(s.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); s.stageIds.foreach(stages.add(_))
+        }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          { shuffled.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten); () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val rows = try {
+      spark.sparkContext.setJobGroup(group, "ingestClassify job pin")
+      try Pipelines.ingestClassify(batch, parcels, 2.0).collect()
+      finally spark.sparkContext.clearJobGroup()
+    } finally {
+      // listener delivery is async: let the last task events land
+      val deadline = System.currentTimeMillis() + 10000L
+      while (jobs.get() < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50L)
+      Thread.sleep(500L)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    assert(rows.length === 4)
+    assert(rows.map(_.getAs[String]("method")).sorted.toSeq
+      === Seq("contains", "contains", "nearest", "unclassifiable"))
+    assert(jobs.get() <= 2, s"ingestClassify ran ${jobs.get()} jobs")
+    assert(shuffled.get() === 0L, s"ingestClassify wrote ${shuffled.get()} shuffle bytes")
   }
 
   test("catalogAppend: deterministic keys, lineage rows, idempotent re-run") {
