@@ -103,10 +103,9 @@ object Branch {
     * recording the fork point. Throws if the table is unknown or the
     * branch already exists. Returns the committed txn. */
   def create(spark: SparkSession, root: String, table: String,
-      branch: String, attempts: Int = 5): Long =
+      branch: String): Long =
     cloneInto(spark, root, table, shadowName(table, branch),
-      cur => Map(BranchOfProp -> table, BranchBaseProp -> cur.toString),
-      attempts)
+      cur => Map(BranchOfProp -> table, BranchBaseProp -> cur.toString))
 
   /** SHALLOW CLONE: replicate `src` under the independent table name
     * `dst` at the current snapshot — one conditional manifest commit,
@@ -119,12 +118,12 @@ object Branch {
     * branch, a clone records no fast-forward base and cannot be
     * published back. Returns the committed txn. */
   def cloneTable(spark: SparkSession, root: String, src: String,
-      dst: String, attempts: Int = 5): Long = {
+      dst: String): Long = {
     TxnCatalog.checkTableName(dst)
     require(!dst.contains(BranchInfix),
       s"'$dst' is a branch name; use Branch.create for branches")
     cloneInto(spark, root, src, dst,
-      _ => Map(CloneOfProp -> src), attempts)
+      _ => Map(CloneOfProp -> src))
   }
 
   /** Table property recording the source a clone was taken from. */
@@ -142,13 +141,11 @@ object Branch {
     * materialized view reads it (its `graft.mv.source` would dangle);
     * publish/drop those first. Returns the committed txn. */
   def renameTable(spark: SparkSession, root: String, src: String,
-      dst: String, attempts: Int = 5): Long = {
+      dst: String): Long = {
     TxnCatalog.checkTableName(dst)
     require(!src.contains(BranchInfix) && !dst.contains(BranchInfix),
       "branches cannot be renamed; publish or drop the branch instead")
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    TxnCatalog.retryOnConflict { _ =>
       val cur = TxnCatalog.snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       val srcAll = cur.entries.filter(_._1._1 == src)
@@ -173,26 +170,17 @@ object Branch {
           (dst, p) -> refEntry(src, p, e)
       }
       val props = cur.properties(src)
-      try {
-        return TxnCatalog.publish(spark, root,
-          Seq((dst, PropsPartition, propsDf(spark, props))),
-          statsColumns = Nil, expectedTxn = Some(cur.txn),
-          reconcile = carried =>
-            carried.filterNot(_._1._1 == src) ++ copied)(() => ())
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
-      }
+      TxnCatalog.publish(spark, root,
+        Seq((dst, PropsPartition, propsDf(spark, props))),
+        statsColumns = Nil, expectedTxn = Some(cur.txn),
+        reconcile = carried =>
+          carried.filterNot(_._1._1 == src) ++ copied)(() => ())
     }
-    throw new IllegalStateException("unreachable")
   }
 
   private def cloneInto(spark: SparkSession, root: String, table: String,
-      dst: String, extraProps: Long => Map[String, String],
-      attempts: Int): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+      dst: String, extraProps: Long => Map[String, String]): Long = {
+    TxnCatalog.retryOnConflict { _ =>
       val cur = TxnCatalog.snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       val src = cur.entries.filter(_._1._1 == table)
@@ -207,17 +195,11 @@ object Branch {
         TxnCatalog.RestoreTxnProp - BranchPublishedProp - CloneOfProp -
         BranchOfProp - BranchBaseProp ++
         extraProps(cur.txn)
-      try {
-        return TxnCatalog.publish(spark, root,
-          Seq((dst, PropsPartition, propsDf(spark, props))),
-          statsColumns = Nil, expectedTxn = Some(cur.txn),
-          reconcile = carried => carried ++ copied)(() => ())
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
-      }
+      TxnCatalog.publish(spark, root,
+        Seq((dst, PropsPartition, propsDf(spark, props))),
+        statsColumns = Nil, expectedTxn = Some(cur.txn),
+        reconcile = carried => carried ++ copied)(() => ())
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Branch names of `table` in the latest snapshot (direct branches
@@ -343,28 +325,20 @@ object Branch {
     * Materialized views over `table` refresh in the same commit
     * ([[mvRefreshUpdates]]). Returns the committed txn. */
   def publish(spark: SparkSession, root: String, table: String,
-      branch: String, force: Boolean = false, attempts: Int = 5): Long = {
+      branch: String, force: Boolean = false): Long = {
     val shadow = shadowName(table, branch)
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    TxnCatalog.retryOnConflict { _ =>
       val cur = TxnCatalog.snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       val plan = publishPlan(spark, root, cur, table, branch, force)
-      try {
-        return TxnCatalog.publish(spark, root,
-          Seq((table, PropsPartition, propsDf(spark, plan.mainProps)),
-            (shadow, PropsPartition, propsDf(spark, plan.rebasedProps))) ++
-            mvRefreshUpdates(spark, root, cur, Seq(table -> plan), branch),
-          statsColumns = Nil, expectedTxn = Some(cur.txn),
-          reconcile = carried =>
-            carried.filterNot(_._1._1 == table) ++ plan.newMain)(() => ())
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
-      }
+      TxnCatalog.publish(spark, root,
+        Seq((table, PropsPartition, propsDf(spark, plan.mainProps)),
+          (shadow, PropsPartition, propsDf(spark, plan.rebasedProps))) ++
+          mvRefreshUpdates(spark, root, cur, Seq(table -> plan), branch),
+        statsColumns = Nil, expectedTxn = Some(cur.txn),
+        reconcile = carried =>
+          carried.filterNot(_._1._1 == table) ++ plan.newMain)(() => ())
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** One table's publish decision at a pinned snapshot — the per-table
@@ -498,30 +472,22 @@ object Branch {
     * retries). The fork-point manifest must still exist — a vacuumed
     * base refuses (re-create the branch). Returns the committed txn. */
   def rebase(spark: SparkSession, root: String, table: String,
-      branch: String, attempts: Int = 5): Long = {
+      branch: String): Long = {
     val shadow = shadowName(table, branch)
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    TxnCatalog.retryOnConflict { _ =>
       val cur = TxnCatalog.snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       rebasePlan(spark, root, cur, table, branch) match {
-        case None => return cur.txn // already based
+        case None => cur.txn // already based
         case Some(plan) =>
-          try {
-            return TxnCatalog.publish(spark, root,
-              Seq((shadow, PropsPartition, propsDf(spark, plan.mergedProps))),
-              statsColumns = Nil, expectedTxn = Some(cur.txn),
-              reconcile = carried =>
-                carried.filterNot(_._1._1 == shadow) ++ plan.newShadow)(
-              () => ())
-          } catch {
-            case _: java.io.IOException if attempt < attempts =>
-              Thread.sleep(attempt * 20L)
-          }
+          TxnCatalog.publish(spark, root,
+            Seq((shadow, PropsPartition, propsDf(spark, plan.mergedProps))),
+            statsColumns = Nil, expectedTxn = Some(cur.txn),
+            reconcile = carried =>
+              carried.filterNot(_._1._1 == shadow) ++ plan.newShadow)(
+            () => ())
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** One table's rebase decision at a pinned snapshot — the three-way
@@ -710,10 +676,8 @@ object Branch {
     * all-or-nothing: no observer ever sees half a catalog forked.
     * Returns the committed txn. */
   def createAll(spark: SparkSession, root: String, branch: String,
-      tables: Seq[String] = Nil, attempts: Int = 5): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+      tables: Seq[String] = Nil): Long = {
+    TxnCatalog.retryOnConflict { _ =>
       val cur = TxnCatalog.snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       val tabs = if (tables.nonEmpty) tables.sorted else branchable(cur)
@@ -737,16 +701,10 @@ object Branch {
           (BranchOfProp -> t) + (BranchBaseProp -> cur.txn.toString)
         (shadowName(t, branch), PropsPartition, propsDf(spark, props))
       }
-      try {
-        return TxnCatalog.publish(spark, root, propUpdates,
-          statsColumns = Nil, expectedTxn = Some(cur.txn),
-          reconcile = carried => carried ++ copied)(() => ())
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
-      }
+      TxnCatalog.publish(spark, root, propUpdates,
+        statsColumns = Nil, expectedTxn = Some(cur.txn),
+        reconcile = carried => carried ++ copied)(() => ())
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Publish EVERY table of catalog branch `branch` in ONE conditional
@@ -765,10 +723,8 @@ object Branch {
     * branch delta; everything else recomputes from the full source —
     * see `mvRefreshUpdates`. Returns the committed txn. */
   def publishAll(spark: SparkSession, root: String, branch: String,
-      force: Boolean = false, attempts: Int = 5): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+      force: Boolean = false): Long = {
+    TxnCatalog.retryOnConflict { _ =>
       val cur = TxnCatalog.snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       val tabs = catalogTables(spark, root, branch)
@@ -784,18 +740,12 @@ object Branch {
       } ++ mvRefreshUpdates(spark, root, cur, plans, branch)
       val touched = tabs.toSet
       val newMains = plans.flatMap(_._2.newMain).toMap
-      try {
-        return TxnCatalog.publish(spark, root, updates,
-          statsColumns = Nil, expectedTxn = Some(cur.txn),
-          reconcile = carried =>
-            carried.filterNot { case ((t, _), _) => touched(t) } ++
-              newMains)(() => ())
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
-      }
+      TxnCatalog.publish(spark, root, updates,
+        statsColumns = Nil, expectedTxn = Some(cur.txn),
+        reconcile = carried =>
+          carried.filterNot { case ((t, _), _) => touched(t) } ++
+            newMains)(() => ())
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Rebase EVERY table of catalog branch `branch` onto main's current
@@ -804,11 +754,9 @@ object Branch {
     * refuses the whole rebase, so the branch never holds a half-rebased
     * catalog. Already-based tables pass through untouched. Returns the
     * committed txn (the current one when nothing advanced). */
-  def rebaseAll(spark: SparkSession, root: String, branch: String,
-      attempts: Int = 5): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+  def rebaseAll(spark: SparkSession, root: String,
+      branch: String): Long = {
+    TxnCatalog.retryOnConflict { _ =>
       val cur = TxnCatalog.snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       val tabs = catalogTables(spark, root, branch)
@@ -817,49 +765,37 @@ object Branch {
         rebasePlan(spark, root, cur, t, branch).map(p =>
           shadowName(t, branch) -> p)
       }
-      if (plans.isEmpty) return cur.txn // every member already based
-      val updates = plans.map { case (shadow, plan) =>
-        (shadow, PropsPartition, propsDf(spark, plan.mergedProps))
-      }
-      val touched = plans.map(_._1).toSet
-      val newShadows = plans.flatMap(_._2.newShadow).toMap
-      try {
-        return TxnCatalog.publish(spark, root, updates,
+      if (plans.isEmpty) cur.txn // every member already based
+      else {
+        val updates = plans.map { case (shadow, plan) =>
+          (shadow, PropsPartition, propsDf(spark, plan.mergedProps))
+        }
+        val touched = plans.map(_._1).toSet
+        val newShadows = plans.flatMap(_._2.newShadow).toMap
+        TxnCatalog.publish(spark, root, updates,
           statsColumns = Nil, expectedTxn = Some(cur.txn),
           reconcile = carried =>
             carried.filterNot { case ((t, _), _) => touched(t) } ++
               newShadows)(() => ())
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Drop EVERY table of catalog branch `branch` in ONE commit (shared
     * physical data stays path-protected, exactly like [[drop]]).
     * Returns the committed txn. */
-  def dropAll(spark: SparkSession, root: String, branch: String,
-      attempts: Int = 5): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+  def dropAll(spark: SparkSession, root: String,
+      branch: String): Long = {
+    TxnCatalog.retryOnConflict { _ =>
       val cur = TxnCatalog.snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       val tabs = catalogTables(spark, root, branch)
       require(tabs.nonEmpty, s"unknown catalog branch '$branch'")
       val shadows = tabs.map(shadowName(_, branch)).toSet
-      try {
-        return TxnCatalog.publish(spark, root, Nil,
-          statsColumns = Nil, expectedTxn = Some(cur.txn),
-          reconcile = carried =>
-            carried.filterNot { case ((t, _), _) => shadows(t) })(() => ())
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
-      }
+      TxnCatalog.publish(spark, root, Nil,
+        statsColumns = Nil, expectedTxn = Some(cur.txn),
+        reconcile = carried =>
+          carried.filterNot { case ((t, _), _) => shadows(t) })(() => ())
     }
-    throw new IllegalStateException("unreachable")
   }
 }

@@ -734,9 +734,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // makes the loser re-read — it then either fails cleanly ("column
     // already exists") or lands BESIDE the rival under the moved txn's
     // name. Rival non-ALTER commits (appends) just retry through.
-    var attempts = 0
-    while (true) {
-      attempts += 1
+    TxnCatalog.retryOnConflict { _ =>
       val snap = TxnCatalog.snapshot(spark, root)
         .getOrElse(throw new NoSuchTableException(ident))
       val cur = GraftLake.schemaOf(spark, root, t, snap)
@@ -752,43 +750,37 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], widened).repartition(1)
       val schemaUpdate = (t, s"batch=schema${snap.txn + 1}", empty)
-      try {
-        if (addDefaults.isEmpty)
-          TxnCatalog.commitPartitionsHooked(spark, root,
-            Seq(schemaUpdate), expectedTxn = Some(snap.txn))(() => ())
-        else {
-          // schema batch + BOTH default properties in ONE conditional
-          // txn (the committed txn is snap.txn+1 by the CAS guard, so
-          // the exists-default can name it before publishing)
-          val typeOf = fresh.map(f => f.name -> f.dataType.sql).toMap
-          val merged = (TxnCatalog.tableProperties(spark, root, t) ++
-            addDefaults.map { case (c, sql) =>
-              defaultProp(c) -> sql } ++
-            addDefaults.map { case (c, sql) =>
-              TxnCatalog.ExistsDefaultPrefix + c ->
-                s"${snap.txn + 1};${typeOf(c)};$sql"
-            }).filter(_._2.nonEmpty)
-          val kv = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-              merged.toSeq.sorted.map { case (k, v) => Row(k, v) }, 1),
-            StructType(Seq(
-              org.apache.spark.sql.types.StructField("key",
-                org.apache.spark.sql.types.StringType, nullable = false),
-              org.apache.spark.sql.types.StructField("value",
-                org.apache.spark.sql.types.StringType, nullable = false))))
-          TxnCatalog.publish(spark, root,
-            Seq(schemaUpdate, (t, TxnCatalog.PropsPartition, kv)),
-            statsColumns = Nil,
-            expectedTxn = Some(snap.txn),
-            reconcile = identity)(() => ())
-        }
-        return new GraftSqlTable(root, t, withDefaults(t, widened))
-      } catch {
-        case _: java.io.IOException if attempts < 20 =>
-          Thread.sleep(math.min(200L, attempts * 20L))
+      if (addDefaults.isEmpty)
+        TxnCatalog.commitPartitionsHooked(spark, root,
+          Seq(schemaUpdate), expectedTxn = Some(snap.txn))(() => ())
+      else {
+        // schema batch + BOTH default properties in ONE conditional
+        // txn (the committed txn is snap.txn+1 by the CAS guard, so
+        // the exists-default can name it before publishing)
+        val typeOf = fresh.map(f => f.name -> f.dataType.sql).toMap
+        val merged = (TxnCatalog.tableProperties(spark, root, t) ++
+          addDefaults.map { case (c, sql) =>
+            defaultProp(c) -> sql } ++
+          addDefaults.map { case (c, sql) =>
+            TxnCatalog.ExistsDefaultPrefix + c ->
+              s"${snap.txn + 1};${typeOf(c)};$sql"
+          }).filter(_._2.nonEmpty)
+        val kv = spark.createDataFrame(
+          spark.sparkContext.parallelize(
+            merged.toSeq.sorted.map { case (k, v) => Row(k, v) }, 1),
+          StructType(Seq(
+            org.apache.spark.sql.types.StructField("key",
+              org.apache.spark.sql.types.StringType, nullable = false),
+            org.apache.spark.sql.types.StructField("value",
+              org.apache.spark.sql.types.StringType, nullable = false))))
+        TxnCatalog.publish(spark, root,
+          Seq(schemaUpdate, (t, TxnCatalog.PropsPartition, kv)),
+          statsColumns = Nil,
+          expectedTxn = Some(snap.txn),
+          reconcile = identity)(() => ())
       }
+      new GraftSqlTable(root, t, withDefaults(t, widened))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** `ALTER TABLE ... RENAME TO` — one zero-copy conditional manifest
@@ -975,9 +967,7 @@ private[storage] final class GraftSqlTable(
         .StructType(persisted.schema.fields :+
           org.apache.spark.sql.types.StructField(idxField,
             org.apache.spark.sql.types.LongType, nullable = false)))
-      var attempts = 0
-      while (true) {
-        attempts += 1
+      TxnCatalog.retryOnConflict { _ =>
         val cur = TxnCatalog.snapshot(s, root).getOrElse(
           throw new IllegalStateException(s"empty catalog under $root"))
         val assigned = specs.foldLeft(withIdx) {
@@ -1000,61 +990,55 @@ private[storage] final class GraftSqlTable(
         val filled = fillGenerated(s, assigned.drop(idxField))
         val drops = if (overwrite)
           cur.partitions(table).map((table, _)) else Nil
-        try {
-          val spec = specOf(s).getOrElse(Nil)
-          if (spec.isEmpty) {
-            val part = s"batch=${java.util.UUID.randomUUID().toString.take(8)}"
-            TxnCatalog.commitPartitionsHooked(s, root,
-              Seq((table, part, filled)),
-              drops = drops, expectedTxn = Some(cur.txn))(() => ())
-          } else {
-            // IDENTITY × HIDDEN PARTITIONING: ids were assigned above
-            // (before the split), so the transform routing below sees
-            // final rows; every group + the watermark evidence land in
-            // ONE txn conditional on the snapshot that produced the
-            // watermark — a rival insert fails the CAS and the retry
-            // re-reads, exactly the single-batch contract. The filled
-            // frame pins once: the group probe and per-group filters
-            // must see identical rows.
-            val pinned = filled.localCheckpoint()
-            try {
-              val g = PartitionSpec.groupExpr(spec, pinned.schema)
-              val label = PartitionSpec.label(spec)
-              val escape = org.apache.spark.sql.catalyst.catalog
-                .ExternalCatalogUtils.escapePathName _
-              val nonce = java.util.UUID.randomUUID().toString.take(6)
-              val groups = pinned.select(g.cast("string").as("__g"))
-                .distinct().limit(17).collect()
-                .map(r => Option(r.getString(0)))
-              if (groups.isEmpty && drops.nonEmpty) {
-                // zero-row OVERWRITE still truncates, conditionally
-                TxnCatalog.commitPartitionsHooked(s, root, Nil,
-                  drops = drops, expectedTxn = Some(cur.txn))(() => ())
-              } else if (groups.nonEmpty && groups.length <= 16) {
-                val updates = groups.toSeq.map { v =>
-                  val part = s"b$nonce.$label=" + v.map(escape)
-                    .getOrElse("__HIVE_DEFAULT_PARTITION__")
-                  val rows = v match {
-                    case Some(x) => pinned.filter(g.cast("string") === x)
-                    case None => pinned.filter(g.isNull)
-                  }
-                  (table, part, rows)
+        val spec = specOf(s).getOrElse(Nil)
+        if (spec.isEmpty) {
+          val part = s"batch=${java.util.UUID.randomUUID().toString.take(8)}"
+          TxnCatalog.commitPartitionsHooked(s, root,
+            Seq((table, part, filled)),
+            drops = drops, expectedTxn = Some(cur.txn))(() => ())
+        } else {
+          // IDENTITY × HIDDEN PARTITIONING: ids were assigned above
+          // (before the split), so the transform routing below sees
+          // final rows; every group + the watermark evidence land in
+          // ONE txn conditional on the snapshot that produced the
+          // watermark — a rival insert fails the CAS and the retry
+          // re-reads, exactly the single-batch contract. The filled
+          // frame pins once: the group probe and per-group filters
+          // must see identical rows.
+          val pinned = filled.localCheckpoint()
+          try {
+            val g = PartitionSpec.groupExpr(spec, pinned.schema)
+            val label = PartitionSpec.label(spec)
+            val escape = org.apache.spark.sql.catalyst.catalog
+              .ExternalCatalogUtils.escapePathName _
+            val nonce = java.util.UUID.randomUUID().toString.take(6)
+            val groups = pinned.select(g.cast("string").as("__g"))
+              .distinct().limit(17).collect()
+              .map(r => Option(r.getString(0)))
+            if (groups.isEmpty && drops.nonEmpty) {
+              // zero-row OVERWRITE still truncates, conditionally
+              TxnCatalog.commitPartitionsHooked(s, root, Nil,
+                drops = drops, expectedTxn = Some(cur.txn))(() => ())
+            } else if (groups.nonEmpty && groups.length <= 16) {
+              val updates = groups.toSeq.map { v =>
+                val part = s"b$nonce.$label=" + v.map(escape)
+                  .getOrElse("__HIVE_DEFAULT_PARTITION__")
+                val rows = v match {
+                  case Some(x) => pinned.filter(g.cast("string") === x)
+                  case None => pinned.filter(g.isNull)
                 }
-                TxnCatalog.commitPartitionsHooked(s, root, updates,
-                  drops = drops, expectedTxn = Some(cur.txn))(() => ())
-              } else if (groups.nonEmpty) {
-                TxnCatalog.commitPartitioned(s, root, table, pinned,
-                  keyCol = label, keyExpr = Some(g),
-                  partPrefix = s"b$nonce.", drops = drops,
-                  expectedTxn = Some(cur.txn))
-                ()
+                (table, part, rows)
               }
-            } finally { pinned.unpersist(); () }
-          }
-          return
-        } catch {
-          case _: java.io.IOException if attempts < 20 =>
-            Thread.sleep(math.min(200L, attempts * 20L))
+              TxnCatalog.commitPartitionsHooked(s, root, updates,
+                drops = drops, expectedTxn = Some(cur.txn))(() => ())
+            } else if (groups.nonEmpty) {
+              TxnCatalog.commitPartitioned(s, root, table, pinned,
+                keyCol = label, keyExpr = Some(g),
+                partPrefix = s"b$nonce.", drops = drops,
+                expectedTxn = Some(cur.txn))
+              ()
+            }
+          } finally { pinned.unpersist(); () }
         }
       }
     } finally { persisted.unpersist(); () }
@@ -1112,39 +1096,30 @@ private[storage] final class GraftSqlTable(
       val escape =
         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .escapePathName _
-      var attempts = 0
-      var done = false
-      while (!done) {
-        attempts += 1
+      TxnCatalog.retryOnConflict { _ =>
         val nonce = java.util.UUID.randomUUID().toString.take(6)
         val drops =
           if (!overwrite) Nil
           else TxnCatalog.snapshot(s, root).toSeq
             .flatMap(_.partitions(table)).map((table, _))
-        try {
-          val groups = df.select(g.cast("string").as("__g")).distinct()
-            .limit(17).collect().map(r => Option(r.getString(0)))
-          if (groups.isEmpty && drops.isEmpty) return
-          if (groups.length <= 16) {
-            val updates = groups.toSeq.map { v =>
-              val part = s"b$nonce.$label=" + v.map(escape)
-                .getOrElse("__HIVE_DEFAULT_PARTITION__")
-              val rows = v match {
-                case Some(x) => df.filter(g.cast("string") === x)
-                case None => df.filter(g.isNull)
-              }
-              (table, part, rows)
+        val groups = df.select(g.cast("string").as("__g")).distinct()
+          .limit(17).collect().map(r => Option(r.getString(0)))
+        if (groups.isEmpty && drops.isEmpty) ()
+        else if (groups.length <= 16) {
+          val updates = groups.toSeq.map { v =>
+            val part = s"b$nonce.$label=" + v.map(escape)
+              .getOrElse("__HIVE_DEFAULT_PARTITION__")
+            val rows = v match {
+              case Some(x) => df.filter(g.cast("string") === x)
+              case None => df.filter(g.isNull)
             }
-            TxnCatalog.commitPartitions(s, root, updates, drops = drops)
-          } else {
-            TxnCatalog.commitPartitioned(s, root, table, df,
-              keyCol = label, keyExpr = Some(g),
-              partPrefix = s"b$nonce.", drops = drops)
+            (table, part, rows)
           }
-          done = true
-        } catch {
-          case _: java.io.IOException if attempts < 20 =>
-            Thread.sleep(math.min(200L, attempts * 20L))
+          TxnCatalog.commitPartitions(s, root, updates, drops = drops)
+        } else {
+          TxnCatalog.commitPartitioned(s, root, table, df,
+            keyCol = label, keyExpr = Some(g),
+            partPrefix = s"b$nonce.", drops = drops)
         }
       }
     } finally { df.unpersist(); () }
@@ -1361,20 +1336,11 @@ private[storage] final class GraftSqlTable(
                   // read-union-commit is a read-modify-write: make it
                   // CONDITIONAL on the read snapshot and retry on a
                   // rival commit, or two INSERTs silently lose one
-                  var attempts = 0
-                  var done = false
-                  while (!done) {
+                  TxnCatalog.retryOnConflict { _ =>
                     val cur = TxnCatalog.snapshot(s, root).get
-                    attempts += 1
-                    try {
-                      TxnCatalog.commit(s, root, Seq((table,
-                        cur.read(table).get.unionByName(df))),
-                        expectedTxn = Some(cur.txn))
-                      done = true
-                    } catch {
-                      case _: java.io.IOException if attempts < 20 =>
-                        Thread.sleep(math.min(200L, attempts * 20L))
-                    }
+                    TxnCatalog.commit(s, root, Seq((table,
+                      cur.read(table).get.unionByName(df))),
+                      expectedTxn = Some(cur.txn))
                   }
                 } else {
                   TxnCatalog.appendBatch(s, root, table,

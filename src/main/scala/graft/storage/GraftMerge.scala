@@ -404,9 +404,9 @@ object GraftMerge {
     val srcBase = GraftSqlBridge.ofPlan(spark, m.sourceTable)
     val (pPath, pPos) =
       (TxnCatalog.DvPathColumn, TxnCatalog.DvPosColumn)
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
+    // a lost race may have moved the layout the positions point into:
+    // every attempt recomputes them against its own snapshot
+    TxnCatalog.retryOnConflict { _ =>
       val snap = TxnCatalog.snapshot(spark, target.root).getOrElse(
         refuse(s"empty catalog under ${target.root}"))
       if (snap.entries.contains((target.table, "-")))
@@ -497,19 +497,10 @@ object GraftMerge {
         val append = newFrames.result().reduceOption(_.unionByName(_))
         val dvNonEmpty = dv.filter(!_.isEmpty)
         val appNonEmpty = append.filter(!_.isEmpty)
-        try {
-          TxnCatalog.mergePositional(spark, target.root, target.table,
-            snap.txn, dvNonEmpty, appNonEmpty)
-          return
-        } catch {
-          // lost the commit race: positions may be stale — recompute
-          case _: java.io.IOException if attempts < 5 => ()
-        }
+        TxnCatalog.mergePositional(spark, target.root, target.table,
+          snap.txn, dvNonEmpty, appNonEmpty)
       } finally src.unpersist()
     }
-    throw new java.io.IOException(
-      s"positional MERGE on '${target.table}' lost the commit race " +
-        "5 times; retry")
   }
 }
 

@@ -75,10 +75,10 @@ private[storage] object GraftProcedures {
     * fewer than 2 partitions qualify. */
   private[storage] def optimizeFold(s: SparkSession, root: String,
       table: String, prefix: String, statsColumns: Seq[String],
-      bloomColumns: Seq[String], maxBytes: Long): Option[(Long, Int)] = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
+      bloomColumns: Seq[String], maxBytes: Long): Option[(Long, Int)] =
+    // a rival commit moving the catalog between pin and publish
+    // re-lists against the new snapshot
+    TxnCatalog.retryOnConflict { _ =>
       val small: String => Boolean =
         if (maxBytes <= 0) _ => true
         else {
@@ -89,9 +89,9 @@ private[storage] object GraftProcedures {
         }
       val parts = TxnCatalog.partitions(s, root, table)
         .filter(_.startsWith(prefix)).filter(small)
-      if (parts.size < 2) return None
-      val into = "c" + (TxnCatalog.currentTxn(s, root).getOrElse(0L) + 1)
-      try {
+      if (parts.size < 2) None
+      else {
+        val into = "c" + (TxnCatalog.currentTxn(s, root).getOrElse(0L) + 1)
         val spec = TxnCatalog.snapshot(s, root)
           .flatMap(_.properties(table).get(PartitionSpec.Prop))
           .map(PartitionSpec.parse).getOrElse(Nil)
@@ -107,16 +107,9 @@ private[storage] object GraftProcedures {
               PartitionSpec.label(spec), statsColumns = statsColumns,
               bloomColumns = bloomColumns)
           }
-        return Some((txn, parts.size))
-      } catch {
-        // a rival commit moved the catalog between pin and publish —
-        // re-list against the new snapshot and retry
-        case _: java.io.IOException if attempts < 5 =>
-          Thread.sleep(attempts * 20L)
+        Some((txn, parts.size))
       }
     }
-    None // unreachable
-  }
 
   def load(root: String, ident: Identifier): Option[UnboundProcedure] = {
     val ns = ident.namespace()
@@ -828,22 +821,16 @@ private[storage] final class ApplyDeletesProcedure(root: String)
     val s = spark
     val table = str(input, 0)
     require(table.nonEmpty, "apply_deletes: table is required")
-    var attempts = 0
-    while (true) {
-      attempts += 1
+    TxnCatalog.retryOnConflict { _ =>
       val pending = TxnCatalog.snapshot(s, root)
         .map(_.deleteEntries(table).size).getOrElse(0)
-      if (pending == 0) return one(oneRow(out, null, Integer.valueOf(0)))
-      try {
+      if (pending == 0) one(oneRow(out, null, Integer.valueOf(0)))
+      else {
         val txn = TxnCatalog.applyDeletes(s, root, table)
-        return one(oneRow(out, java.lang.Long.valueOf(txn),
+        one(oneRow(out, java.lang.Long.valueOf(txn),
           Integer.valueOf(pending)))
-      } catch {
-        case _: java.io.IOException if attempts < 5 =>
-          Thread.sleep(attempts * 20L)
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 }
 
@@ -991,20 +978,11 @@ private[storage] final class BucketProcedure(root: String)
     require(table.nonEmpty, "bucket: table is required")
     require(key.nonEmpty, "bucket: key is required")
     val n = input.getInt(2)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      try {
-        val txn = TxnCatalog.bucketTable(s, root, table, key, n,
-          statsColumns = csv(input, 3), bloomColumns = csv(input, 4))
-        return one(oneRow(out, java.lang.Long.valueOf(txn),
-          Integer.valueOf(n)))
-      } catch {
-        case _: java.io.IOException if attempts < 5 =>
-          Thread.sleep(attempts * 20L)
-      }
+    val txn = TxnCatalog.retryOnConflict { _ =>
+      TxnCatalog.bucketTable(s, root, table, key, n,
+        statsColumns = csv(input, 3), bloomColumns = csv(input, 4))
     }
-    throw new IllegalStateException("unreachable")
+    one(oneRow(out, java.lang.Long.valueOf(txn), Integer.valueOf(n)))
   }
 }
 

@@ -62,7 +62,7 @@ object Importer {
     * absent, appended-by-reference if present). Returns the committed
     * txn and the number of entries added. */
   def addFiles(spark: SparkSession, root: String, table: String,
-      sourcePath: String, attempts: Int = 5): (Long, Int) = {
+      sourcePath: String): (Long, Int) = {
     TxnCatalog.checkTableName(table)
     val hconf = spark.sparkContext.hadoopConfiguration
     val src = new Path(sourcePath)
@@ -180,9 +180,7 @@ object Importer {
           if (k == "n") org.apache.spark.sql.types.LongType
           else org.apache.spark.sql.types.StringType, nullable = true)
       })
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    TxnCatalog.retryOnConflict { _ =>
       val cur = TxnCatalog.snapshot(spark, root)
       val curProps: Map[String, String] = cur
         .filter(_.tables.contains(table))
@@ -273,18 +271,12 @@ object Importer {
               StructField("value", StringType, nullable = false))))
           Seq((table, TxnCatalog.PropsPartition, kv))
         }
-      try {
-        val txn = TxnCatalog.publish(spark, root, propUpdates,
-          statsColumns = Nil,
-          expectedTxn = Some(cur.map(_.txn).getOrElse(0L)),
-          reconcile = carried => carried ++ entries)(() => ())
-        return (txn, entries.size)
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
-      }
+      val txn = TxnCatalog.publish(spark, root, propUpdates,
+        statsColumns = Nil,
+        expectedTxn = Some(cur.map(_.txn).getOrElse(0L)),
+        reconcile = carried => carried ++ entries)(() => ())
+      (txn, entries.size)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   private def tname(kind: String): String =

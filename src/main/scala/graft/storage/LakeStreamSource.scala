@@ -589,7 +589,7 @@ private[storage] final class LakeSink(root: String, table: String,
           }
           ()
         }
-        catch { case _: java.io.IOException => () } // rival won; next trigger
+        catch { case _: CommitConflict => () } // rival won; next trigger
       }
     }
     if (clusterEvery > 0 && clusterDims.nonEmpty) {

@@ -87,13 +87,10 @@ object MaterializedAgg {
     * groupCols`, materialized in the same catalog with its watermark.
     * Throws if `view` already exists. Returns the committed txn. */
   def create(spark: SparkSession, root: String, view: String,
-      source: String, groupCols: Seq[String], aggs: Seq[AggSpec],
-      attempts: Int = 5): Long = {
+      source: String, groupCols: Seq[String], aggs: Seq[AggSpec]): Long = {
     require(groupCols.nonEmpty, "materialized view needs group columns")
     require(aggs.nonEmpty, "materialized view needs aggregates")
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    TxnCatalog.retryOnConflict { _ =>
       val snap = TxnCatalog.snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       require(!snap.tables.contains(view),
@@ -112,15 +109,9 @@ object MaterializedAgg {
         // nothing else can land in between: the watermark covers the
         // view's own commit, so the next refresh starts at a clean noop
         WatermarkProp -> (snap.txn + 1).toString)
-      try {
-        return TxnCatalog.commitWholeWithProperties(spark, root, view,
-          full, props, expectedTxn = Some(snap.txn))
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
-      }
+      TxnCatalog.commitWholeWithProperties(spark, root, view,
+        full, props, expectedTxn = Some(snap.txn))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Create JOIN view `view` = `SELECT groupCols, aggs FROM fact JOIN
@@ -146,10 +137,9 @@ object MaterializedAgg {
     * `view` exists. Returns the committed txn. */
   def createJoined(spark: SparkSession, root: String, view: String,
       fact: String, dim: String, joinOn: Seq[(String, String)],
-      groupCols: Seq[String], aggs: Seq[AggSpec],
-      attempts: Int = 5): Long =
+      groupCols: Seq[String], aggs: Seq[AggSpec]): Long =
     createChain(spark, root, view, fact, Seq((dim, joinOn)), groupCols,
-      aggs, attempts)
+      aggs)
 
   /** [[createJoined]] generalized to a SNOWFLAKE CHAIN of dimensions:
     * `view` = `fact ⨝ d1 ⨝ d2 ⨝ … GROUP BY groupCols`, each dim's
@@ -169,8 +159,7 @@ object MaterializedAgg {
     * [[currentChainViews]]). */
   def createChain(spark: SparkSession, root: String, view: String,
       fact: String, dims: Seq[(String, Seq[(String, String)])],
-      groupCols: Seq[String], aggs: Seq[AggSpec],
-      attempts: Int = 5): Long = {
+      groupCols: Seq[String], aggs: Seq[AggSpec]): Long = {
     require(groupCols.nonEmpty, "materialized view needs group columns")
     require(aggs.nonEmpty, "materialized view needs aggregates")
     require(dims.nonEmpty, "join view needs at least one dimension")
@@ -185,9 +174,7 @@ object MaterializedAgg {
         case (a, b) => Seq(a, b).exists(c =>
           c.contains(',') || c.contains(';') || c.contains('=')) }),
       "table and key names must not contain ',', ';' or '='")
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    TxnCatalog.retryOnConflict { _ =>
       val snap = TxnCatalog.snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       require(!snap.tables.contains(view),
@@ -233,15 +220,9 @@ object MaterializedAgg {
         GroupProp -> groupCols.mkString(","),
         AggsProp -> aggs.map(a => s"${a.op}:${a.col}").mkString(","),
         WatermarkProp -> (snap.txn + 1).toString)
-      try {
-        return TxnCatalog.commitWholeWithProperties(spark, root, view,
-          full, props, expectedTxn = Some(snap.txn))
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
-      }
+      TxnCatalog.commitWholeWithProperties(spark, root, view,
+        full, props, expectedTxn = Some(snap.txn))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   private[storage] def parseJoinOn(s: String): Seq[(String, String)] =
@@ -303,11 +284,8 @@ object MaterializedAgg {
 
   /** Bring `view` up to the current txn. See the classification rules
     * above; returns what ran and how much source it read. */
-  def refresh(spark: SparkSession, root: String, view: String,
-      attempts: Int = 5): Refresh = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+  def refresh(spark: SparkSession, root: String, view: String): Refresh =
+    TxnCatalog.retryOnConflict { _ =>
       val snap = TxnCatalog.snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       val props = snap.properties(view)
@@ -317,78 +295,66 @@ object MaterializedAgg {
       val groupCols = props(GroupProp).split(',').toSeq
       val aggs = parseAggs(props(AggsProp))
       val wm = props(WatermarkProp).toLong
-      if (wm == snap.txn) return Refresh(snap.txn, "noop", 0)
-
-      // join views ([[createJoined]]/[[createChain]]): the incremental
-      // claim needs every dim FROZEN since the watermark, and every
-      // aggregation input joins the chain before aggregating
-      val chain = parseDimChain(props)
-      def readDim(dm: String): DataFrame = snap.read(dm).getOrElse(
-        throw new IllegalStateException(s"dim '$dm' of '$view' is gone"))
-      def withDim(df: DataFrame): DataFrame = joinedAll(df, chain, readDim)
-      val frozen: Map[String, Boolean] = chain.map { case (dm, _) =>
-        dm -> dimUnchanged(spark, root, dm, wm, snap) }.toMap
-      val dimOk = frozen.values.forall(identity)
-      val delta =
-        if (dimOk) incrementalDelta(spark, root, source, wm, snap)
-        else None
-      // a CHANGED dim is not automatically a full recompute: a window
-      // where exactly ONE dim grew (appends / accounted reorgs) while
-      // the rest stayed frozen is incremental via [[dimAppendPlan]]
-      def dimAppend: Option[(DataFrame, Int)] =
-        if (chain.nonEmpty && frozen.count(!_._2) == 1)
-          dimAppendPlan(spark, root, source, chain,
-            chain.indexWhere { case (dm, _) => !frozen(dm) }, view, wm,
-            snap, groupCols, aggs)
-        else None
-      // every branch commits conditionally on snap.txn, so the commit
-      // lands at exactly snap.txn + 1 and the recorded watermark
-      // covers it — the next refresh is a clean noop
-      val nextWm = Map(WatermarkProp -> (snap.txn + 1).toString)
-      try {
+      if (wm == snap.txn) Refresh(snap.txn, "noop", 0)
+      else {
+        // join views ([[createJoined]]/[[createChain]]): the incremental
+        // claim needs every dim FROZEN since the watermark, and every
+        // aggregation input joins the chain before aggregating
+        val chain = parseDimChain(props)
+        def readDim(dm: String): DataFrame = snap.read(dm).getOrElse(
+          throw new IllegalStateException(s"dim '$dm' of '$view' is gone"))
+        def withDim(df: DataFrame): DataFrame = joinedAll(df, chain, readDim)
+        val frozen: Map[String, Boolean] = chain.map { case (dm, _) =>
+          dm -> dimUnchanged(spark, root, dm, wm, snap) }.toMap
+        val dimOk = frozen.values.forall(identity)
+        val delta =
+          if (dimOk) incrementalDelta(spark, root, source, wm, snap)
+          else None
+        // a CHANGED dim is not automatically a full recompute: a window
+        // where exactly ONE dim grew (appends / accounted reorgs) while
+        // the rest stayed frozen is incremental via [[dimAppendPlan]]
+        def dimAppend: Option[(DataFrame, Int)] =
+          if (chain.nonEmpty && frozen.count(!_._2) == 1)
+            dimAppendPlan(spark, root, source, chain,
+              chain.indexWhere { case (dm, _) => !frozen(dm) }, view, wm,
+              snap, groupCols, aggs)
+          else None
+        // every branch commits conditionally on snap.txn, so the commit
+        // lands at exactly snap.txn + 1 and the recorded watermark
+        // covers it — the next refresh is a clean noop
+        val nextWm = Map(WatermarkProp -> (snap.txn + 1).toString)
+        def commit(rows: DataFrame): Long =
+          TxnCatalog.commitWholeWithProperties(spark, root, view, rows,
+            nextWm, expectedTxn = Some(snap.txn))
         delta match {
           case Some(parts) if parts.isEmpty =>
             // window held only reorgs/metadata: the stored rows are
             // already current — re-commit them with the moved watermark
             // (aggregates are small; correctness needs the conditional)
-            val txn = TxnCatalog.commitWholeWithProperties(spark, root,
-              view, snap.read(view).get, nextWm,
-              expectedTxn = Some(snap.txn))
-            return Refresh(txn, "incremental", 0)
+            Refresh(commit(snap.read(view).get), "incremental", 0)
           case Some(parts) =>
             val deltaDf =
               snap.readPartitions(source, parts.toSeq.sorted).get
             val merged = merge(snap.read(view).get,
               aggregate(withDim(deltaDf), groupCols, aggs),
               groupCols, aggs)
-            val txn = TxnCatalog.commitWholeWithProperties(spark, root,
-              view, merged, nextWm, expectedTxn = Some(snap.txn))
-            return Refresh(txn, "incremental", parts.size)
+            Refresh(commit(merged), "incremental", parts.size)
           case None =>
             dimAppend.orElse(
               subtractivePlan(spark, root, source, view, wm, snap,
                 dimOk, withDim, groupCols, aggs)) match {
               case Some((merged, touched)) =>
-                val txn = TxnCatalog.commitWholeWithProperties(spark,
-                  root, view, merged, nextWm, expectedTxn = Some(snap.txn))
-                return Refresh(txn, "incremental", touched)
+                Refresh(commit(merged), "incremental", touched)
               case None =>
                 val srcDf = snap.read(source).getOrElse(
                   throw new IllegalStateException(
                     s"source '$source' of '$view' is gone"))
                 val full = aggregate(withDim(srcDf), groupCols, aggs)
-                val txn = TxnCatalog.commitWholeWithProperties(spark,
-                  root, view, full, nextWm, expectedTxn = Some(snap.txn))
-                return Refresh(txn, "full", snap.dataEntries(source).size)
+                Refresh(commit(full), "full", snap.dataEntries(source).size)
             }
         }
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
       }
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** The views of `source` whose stored rows are EXACTLY the aggregate
     * of `snap`'s source state — the candidates a transparent query

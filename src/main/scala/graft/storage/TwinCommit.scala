@@ -59,37 +59,29 @@ object TwinCommit {
       ledger: Option[(String, Long)] = None)(
       beforeFirstPublish: () => Unit): Unit = {
     require(!batchId.contains("/"), s"batch id must be path-safe: $batchId")
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      try {
-        val hook = if (attempts == 1) beforeFirstPublish else () => ()
-        ledger match {
-          case None =>
-            // committed replay — exactly-once no-op (manifest publish was
-            // all-or-nothing: presence in tableA implies presence in
-            // tableB). Partition-name evidence is only safe while no
-            // maintenance renames batch partitions — a sink running
-            // inline compaction/clustering must pass `ledger`.
-            if (TxnCatalog.partitions(spark, root, tableA)
-                .contains(part(batchId))) return
+    // a lost txn-number race to a concurrent append of another batch
+    // re-resolves the manifest and retries
+    TxnCatalog.retryOnConflict { attempt =>
+      val hook = if (attempt == 1) beforeFirstPublish else () => ()
+      ledger match {
+        case None =>
+          // committed replay — exactly-once no-op (manifest publish was
+          // all-or-nothing: presence in tableA implies presence in
+          // tableB). Partition-name evidence is only safe while no
+          // maintenance renames batch partitions — a sink running
+          // inline compaction/clustering must pass `ledger`.
+          if (!TxnCatalog.partitions(spark, root, tableA)
+              .contains(part(batchId)))
             TxnCatalog.commitPartitionsHooked(spark, root, Seq(
               (tableA, part(batchId), a), (tableB, part(batchId), b)),
               statsColumns = statsColumns, bloomColumns = bloomColumns)(hook)
-          case Some((appId, version)) =>
-            // durable replay evidence: the (appId → version) ledger on
-            // tableA rides the same manifest CAS as both tables' data,
-            // so it survives compaction/clustering renaming `batch=*`
-            TxnCatalog.appendLedgered(spark, root, Seq(
-              (tableA, part(batchId), a), (tableB, part(batchId), b)),
-              tableA, appId, version, statsColumns, bloomColumns)(hook)
-        }
-        return
-      } catch {
-        case _: java.io.IOException if attempts < 20 =>
-          // lost the txn-number race to a concurrent append of another
-          // batch — back off a beat, re-resolve the manifest, retry
-          Thread.sleep(math.min(200L, attempts * 20L))
+        case Some((appId, version)) =>
+          // durable replay evidence: the (appId → version) ledger on
+          // tableA rides the same manifest CAS as both tables' data,
+          // so it survives compaction/clustering renaming `batch=*`
+          TxnCatalog.appendLedgered(spark, root, Seq(
+            (tableA, part(batchId), a), (tableB, part(batchId), b)),
+            tableA, appId, version, statsColumns, bloomColumns)(hook)
       }
     }
   }
@@ -103,8 +95,9 @@ object TwinCommit {
     * batch=<id> alignment readers rely on for per-batch lineage joins is
     * gone on one side only. Here both tables' merged partitions and all
     * 2N drops ride one manifest rename, conditional on the catalog still
-    * standing at the pinned snapshot (a rival append in between throws;
-    * just retry — the appends themselves are never blocked or lost).
+    * standing at the pinned snapshot (a rival append in between throws
+    * [[CommitConflict]]; just retry — the appends themselves are never
+    * blocked or lost).
     * Pinned pre-compaction snapshots keep reading the small batches until
     * [[TxnCatalog.vacuum]] ages them out. */
   def compactBatches(spark: SparkSession, root: String, batchIds: Seq[String],
@@ -154,29 +147,25 @@ object TwinCommit {
     * when the committed batch count has reached `maxBatches`, fold ALL
     * current batches (previous compaction outputs included — compaction
     * is idempotent reorganization, so re-folding a `c*` batch is fine)
-    * into one batch named `c<txn>`; otherwise no-op. Bounded retries
-    * re-pin the snapshot and absorb rival appends racing the conditional
-    * commit — appends are never blocked, the compactor just tries again
-    * against the moved catalog. Returns the new batch id when a
-    * compaction landed. */
+    * into one batch named `c<txn>`; otherwise no-op. A rival append
+    * racing the conditional commit re-pins the snapshot and retries
+    * ([[TxnCatalog.retryOnConflict]]) — appends are never blocked, the
+    * compactor just tries again against the moved catalog. Returns the
+    * new batch id when a compaction landed. */
   def maintain(spark: SparkSession, root: String, tableA: String,
       tableB: String, maxBatches: Int, numFiles: Int = 0,
-      attempts: Int = 5, statsColumns: Seq[String] = Nil,
+      statsColumns: Seq[String] = Nil,
       bloomColumns: Seq[String] = Nil): Option[String] = {
     require(maxBatches >= 2, "maxBatches must be >= 2")
-    val ids = committedBatches(spark, root, tableA)
-    if (ids.size < maxBatches) None
-    else {
-      val into = s"c${TxnCatalog.currentTxn(spark, root).getOrElse(0L) + 1}"
-      try {
+    TxnCatalog.retryOnConflict { _ =>
+      val ids = committedBatches(spark, root, tableA)
+      if (ids.size < maxBatches) None
+      else {
+        val into =
+          s"c${TxnCatalog.currentTxn(spark, root).getOrElse(0L) + 1}"
         compactBatches(spark, root, ids, into, tableA, tableB, numFiles,
           statsColumns, bloomColumns)
         Some(into)
-      } catch {
-        case _: java.io.IOException if attempts > 1 =>
-          // a rival append moved the catalog between pin and publish
-          maintain(spark, root, tableA, tableB, maxBatches, numFiles,
-            attempts - 1, statsColumns, bloomColumns)
       }
     }
   }

@@ -1481,25 +1481,15 @@ object TxnCatalog {
       ledger: Option[(String, Long)] = None): Unit = {
     require(!batchId.contains("/"), s"batch id must be path-safe: $batchId")
     val part = s"batch=$batchId"
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      try {
-        ledger match {
-          case None =>
-            if (partitions(spark, root, table).contains(part)) return
+    retryOnConflict { _ =>
+      ledger match {
+        case None =>
+          if (!partitions(spark, root, table).contains(part))
             commitPartitions(spark, root, Seq((table, part, df)),
               statsColumns = statsColumns, bloomColumns = bloomColumns)
-          case Some((appId, version)) =>
-            appendLedgered(spark, root, Seq((table, part, df)),
-              table, appId, version, statsColumns, bloomColumns)(() => ())
-        }
-        return
-      } catch {
-        case _: java.io.IOException if attempts < 20 =>
-          // lost the txn-number race to another batch's append: back off
-          // a beat (un-herds N writers racing the same number) and retry
-          Thread.sleep(math.min(200L, attempts * 20L))
+        case Some((appId, version)) =>
+          appendLedgered(spark, root, Seq((table, part, df)),
+            table, appId, version, statsColumns, bloomColumns)(() => ())
       }
     }
   }
@@ -1514,19 +1504,10 @@ object TxnCatalog {
       appId: String, version: Long,
       statsColumns: Seq[String] = Nil,
       bloomColumns: Seq[String] = Nil): Unit = {
-    if (parts.isEmpty) return
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      try {
-        appendLedgered(spark, root,
-          parts.map { case (p, df) => (table, p, df) },
-          table, appId, version, statsColumns, bloomColumns)(() => ())
-        return
-      } catch {
-        case _: java.io.IOException if attempts < 20 =>
-          Thread.sleep(math.min(200L, attempts * 20L))
-      }
+    if (parts.nonEmpty) retryOnConflict { _ =>
+      appendLedgered(spark, root,
+        parts.map { case (p, df) => (table, p, df) },
+        table, appId, version, statsColumns, bloomColumns)(() => ())
     }
   }
 
@@ -1552,10 +1533,11 @@ object TxnCatalog {
 
   /** Commit `updates` and the ledger fact "`appId` has applied
     * `version` to `ledgerTable`" in ONE atomic manifest publish,
-    * conditional on the pinned snapshot (rivals force an IOException;
-    * callers retry). Returns false — committing nothing — when the
-    * ledger already records `version` (or later): the replayed batch
-    * was applied before, whatever names its partitions carry NOW. */
+    * conditional on the pinned snapshot (a rival forces a
+    * [[CommitConflict]]; callers retry). Returns false — committing
+    * nothing — when the ledger already records `version` (or later):
+    * the replayed batch was applied before, whatever names its
+    * partitions carry NOW. */
   private[graft] def appendLedgered(spark: SparkSession, root: String,
       updates: Seq[(String, String, DataFrame)],
       ledgerTable: String, appId: String, version: Long,
@@ -1620,7 +1602,8 @@ object TxnCatalog {
   /** Drop `table` entirely — every data, delete, and properties entry —
     * in one conditional commit. Older snapshots still read it (time
     * travel); [[vacuum]] reclaims the data once nothing references it.
-    * Throws IOException if a rival commit moves the catalog first. */
+    * Throws [[CommitConflict]] if a rival commit moves the catalog
+    * first. */
   def dropTable(spark: SparkSession, root: String, table: String): Long = {
     checkTableName(table)
     val snap = snapshot(spark, root).getOrElse(
@@ -1852,7 +1835,7 @@ object TxnCatalog {
     * fact, not a two-txn hope. Constraint expressions are validated
     * (parsed + resolved against the schema) before anything is staged.
     * Conditional on the catalog's current txn: a racing CREATE (or any
-    * rival commit) throws IOException — retry against the moved
+    * rival commit) throws [[CommitConflict]] — retry against the moved
     * catalog; a pre-existing `table` throws IllegalArgumentException. */
   private[graft] def createTableWithProperties(spark: SparkSession,
       root: String, table: String, partition: String, df: DataFrame,
@@ -2038,7 +2021,7 @@ object TxnCatalog {
     * per-entry updates (an index build commits its data cells in bulk
     * and its small router table atomically beside them — see
     * [[graft.ops.VectorLake]]). Returns the committed txn; throws
-    * IOException on a lost commit race (staging cleaned up). */
+    * [[CommitConflict]] on a lost commit race (staging cleaned up). */
   def commitPartitioned(spark: SparkSession, root: String, table: String,
       df: DataFrame, keyCol: String,
       statsColumns: Seq[String] = Nil,
@@ -2227,7 +2210,7 @@ object TxnCatalog {
     * per-entry path writes an empty entry instead — same reads, fewer
     * manifest rows). Stats and Blooms are measured exactly as on the
     * per-entry path ([[measureStaged]], grouped). Conditional on `snap`
-    * (IOException on a rival commit; callers retry or surface). */
+    * ([[CommitConflict]] on a rival commit; callers retry or surface). */
   private def rewritePartitionsBulk(spark: SparkSession, root: String,
       table: String, snap: Snapshot, parts: Seq[(String, Entry)],
       transform: DataFrame => DataFrame,
@@ -2289,7 +2272,7 @@ object TxnCatalog {
     * sources read through the delete-applying funnel; the fold carries
     * the sources' max data txn so incremental consumers skip it like
     * any reorganization. Conditional by construction (the bulk CAS
-    * fails on any rival commit); throws IOException to retry. */
+    * fails on any rival commit); throws [[CommitConflict]] to retry. */
   def compactPartitionsBy(spark: SparkSession, root: String, table: String,
       parts: Seq[String], keyExpr: org.apache.spark.sql.Column,
       label: String, statsColumns: Seq[String] = Nil,
@@ -2321,7 +2304,8 @@ object TxnCatalog {
     *
     * Conditional on the catalog still standing at the pinned snapshot's
     * txn: a rival commit (even to an unrelated partition) between pin
-    * and publish throws `IOException` and the compaction simply retries —
+    * and publish throws [[CommitConflict]] and the compaction simply
+    * retries —
     * the alternative (carrying drops forward over a stale view) could
     * silently discard a rival's concurrent rewrite of a source
     * partition. Source partitions' data files are untouched until
@@ -2402,7 +2386,8 @@ object TxnCatalog {
     *
     * Same optimistic concurrency as [[compactPartitions]]: conditional
     * on the pinned snapshot's txn, so a rival commit in the window fails
-    * this delete cleanly (IOException — retry against the new snapshot)
+    * this delete cleanly ([[CommitConflict]] — retry against the new
+    * snapshot)
     * instead of resurrecting rows a rival rewrote. Whole-table entries
     * rewrite through the whole-table commit path. Returns the committed
     * txn; a delete that provably touches nothing commits nothing and
@@ -2626,9 +2611,9 @@ object TxnCatalog {
   def deletePositions(spark: SparkSession, root: String, table: String,
       cond: org.apache.spark.sql.Column): Long = {
     checkTableName(table)
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
+    // a lost race may have moved the layout the positions point into:
+    // every attempt recomputes them against its own snapshot
+    retryOnConflict { _ =>
       val snap = snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       require(snap.dataEntries(table).nonEmpty, s"unknown table '$table'")
@@ -2637,21 +2622,15 @@ object TxnCatalog {
           "deletes need a partitioned table (use commit)")
       val marked = snap.readSelectedWithPos(table, snap.dataEntries(table))
         .get.filter(cond)
-      if (marked.isEmpty) return snap.txn
-      val part = s"~v-${java.util.UUID.randomUUID().toString.take(8)}"
-      try {
-        return publish(spark, root, Seq((table, part, marked)),
+      if (marked.isEmpty) snap.txn
+      else {
+        val part = s"~v-${java.util.UUID.randomUUID().toString.take(8)}"
+        publish(spark, root, Seq((table, part, marked)),
           statsColumns = Nil, expectedTxn = Some(snap.txn),
           reconcile = identity,
           deleteKeyCols = Map((table, part) -> DeletePosMarker))(() => ())
-      } catch {
-        // lost the commit race: the positions may be stale against the
-        // winner's layout — recompute against the fresh snapshot
-        case _: java.io.IOException if attempts < 5 => ()
       }
     }
-    throw new java.io.IOException(
-      s"deletePositions on '$table' lost the commit race 5 times; retry")
   }
 
   /** Row-level UPDATE as a deletion vector + append, in ONE atomic txn
@@ -2686,9 +2665,8 @@ object TxnCatalog {
     import org.apache.spark.sql.functions.{col, expr}
     checkTableName(table)
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
+    // positions are recomputed on every attempt, as in deletePositions
+    retryOnConflict { _ =>
       val snap = snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       require(snap.dataEntries(table).nonEmpty, s"unknown table '$table'")
@@ -2698,34 +2676,29 @@ object TxnCatalog {
       val marked = snap.readSelectedWithPos(table, snap.dataEntries(table))
         .get.filter(cond).localCheckpoint()
       try {
-        if (marked.isEmpty) return snap.txn
-        val data = marked.drop(DvPathColumn, DvPosColumn)
-        val assigned = assignments.toMap
-        assigned.keys.foreach(c0 => require(data.columns.contains(c0),
-          s"unknown UPDATE column '$c0' on '$table'"))
-        val updated = data.select(data.columns.toSeq.map { c0 =>
-          assigned.get(c0) match {
-            case Some(v) => expr(v).cast(data.schema(c0).dataType).as(c0)
-            case None => col(c0)
-          }
-        }: _*)
-        val nonce = java.util.UUID.randomUUID().toString.take(8)
-        try {
-          return publish(spark, root,
+        if (marked.isEmpty) snap.txn
+        else {
+          val data = marked.drop(DvPathColumn, DvPosColumn)
+          val assigned = assignments.toMap
+          assigned.keys.foreach(c0 => require(data.columns.contains(c0),
+            s"unknown UPDATE column '$c0' on '$table'"))
+          val updated = data.select(data.columns.toSeq.map { c0 =>
+            assigned.get(c0) match {
+              case Some(v) => expr(v).cast(data.schema(c0).dataType).as(c0)
+              case None => col(c0)
+            }
+          }: _*)
+          val nonce = java.util.UUID.randomUUID().toString.take(8)
+          publish(spark, root,
             Seq((table, s"~v-$nonce", marked),
               (table, s"batch=u$nonce", updated)),
             statsColumns = Nil, expectedTxn = Some(snap.txn),
             reconcile = identity,
             deleteKeyCols = Map(
               (table, s"~v-$nonce") -> DeletePosMarker))(() => ())
-        } catch {
-          // lost the commit race: positions may be stale — recompute
-          case _: java.io.IOException if attempts < 5 => ()
         }
       } finally marked.unpersist()
     }
-    throw new java.io.IOException(
-      s"updatePositions on '$table' lost the commit race 5 times; retry")
   }
 
   /** The storage half of a POSITIONAL merge ([[GraftMerge]]'s
@@ -2736,7 +2709,7 @@ object TxnCatalog {
     * same-txn rule keeps appended rows unmasked by their own vector.
     * Positions are valid only against the layout they were computed on,
     * so the caller pins `expectedTxn` and drives recompute-retries on
-    * the IOException a lost race throws. */
+    * the [[CommitConflict]] a lost race throws. */
   private[storage] def mergePositional(spark: SparkSession, root: String,
       table: String, expectedTxn: Long, deleted: Option[DataFrame],
       append: Option[DataFrame]): Long = {
@@ -2817,37 +2790,34 @@ object TxnCatalog {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     checkTableName(table)
-    var attempts = 0
-    while (true) {
-      attempts += 1
+    retryOnConflict { _ =>
       val snap = snapshot(spark, root)
       val props = snap.map(_.properties(table)).getOrElse(Map.empty)
-      if (props.get(ledgerKey(appId)).exists(_.toLong >= version))
-        return false
-      require(snap.forall(s => !s.entries.contains((table, Whole))),
-        s"table '$table' holds a whole-table snapshot; merge-on-read " +
-          "CDC apply needs a partitioned table")
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      val exists = snap.exists(_.dataEntries(table).nonEmpty)
-      val delEntry =
-        if (!exists) None // nothing to mask before the first batch
-        else deleteKeys.map { k =>
-          require(k.columns.contains(keyColumn),
-            s"delete keys frame lacks column '$keyColumn'")
-          (table, s"~d-$nonce",
-            k.select(col(keyColumn).as(DeleteKeyColumn))
-              .filter(col(DeleteKeyColumn).isNotNull).distinct())
-        }
-      val appEntry = append.map(df => (table, s"batch=m$nonce", df))
-      val merged = props + (ledgerKey(appId) -> version.toString)
-      val kv = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          merged.toSeq.sorted.map { case (k, v) => Row(k, v) }, 1),
-        StructType(Seq(StructField("key", StringType, nullable = false),
-          StructField("value", StringType, nullable = false))))
-      val updates = delEntry.toSeq ++ appEntry.toSeq :+
-        ((table, PropsPartition, kv))
-      try {
+      if (props.get(ledgerKey(appId)).exists(_.toLong >= version)) false
+      else {
+        require(snap.forall(s => !s.entries.contains((table, Whole))),
+          s"table '$table' holds a whole-table snapshot; merge-on-read " +
+            "CDC apply needs a partitioned table")
+        val nonce = java.util.UUID.randomUUID().toString.take(8)
+        val exists = snap.exists(_.dataEntries(table).nonEmpty)
+        val delEntry =
+          if (!exists) None // nothing to mask before the first batch
+          else deleteKeys.map { k =>
+            require(k.columns.contains(keyColumn),
+              s"delete keys frame lacks column '$keyColumn'")
+            (table, s"~d-$nonce",
+              k.select(col(keyColumn).as(DeleteKeyColumn))
+                .filter(col(DeleteKeyColumn).isNotNull).distinct())
+          }
+        val appEntry = append.map(df => (table, s"batch=m$nonce", df))
+        val merged = props + (ledgerKey(appId) -> version.toString)
+        val kv = spark.createDataFrame(
+          spark.sparkContext.parallelize(
+            merged.toSeq.sorted.map { case (k, v) => Row(k, v) }, 1),
+          StructType(Seq(StructField("key", StringType, nullable = false),
+            StructField("value", StringType, nullable = false))))
+        val updates = delEntry.toSeq ++ appEntry.toSeq :+
+          ((table, PropsPartition, kv))
         publish(spark, root, updates,
           statsColumns = statsColumns,
           expectedTxn = Some(snap.map(_.txn).getOrElse(0L)),
@@ -2855,13 +2825,9 @@ object TxnCatalog {
           deleteKeyCols = delEntry
             .map(e => (e._1, e._2) -> keyColumn).toMap,
           bloomColumns = bloomColumns)(() => ())
-        return true
-      } catch {
-        case _: java.io.IOException if attempts < 20 =>
-          Thread.sleep(math.min(200L, attempts * 20L))
+        true
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** The subset of `entries` a set of equality deletes can possibly
@@ -2917,7 +2883,7 @@ object TxnCatalog {
     * trade: only data committed before the oldest pending delete is
     * rewritten). Stats and Blooms re-measure per rewritten entry.
     * Returns the committed txn (the pinned one when nothing is
-    * pending); IOException on losing the commit race — retry. */
+    * pending); [[CommitConflict]] on losing the commit race — retry. */
   def applyDeletes(spark: SparkSession, root: String,
       table: String): Long = {
     val snap = snapshot(spark, root).getOrElse(
@@ -3021,7 +2987,7 @@ object TxnCatalog {
   def exportTables(spark: SparkSession, srcRoot: String, destRoot: String,
       tables: Seq[String] = Nil, asOf: Option[Long] = None,
       mode: String = "copy", pinTag: Option[String] = None,
-      attempts: Int = 5, sinceTxn: Option[Long] = None,
+      sinceTxn: Option[Long] = None,
       catchUp: Boolean = false): (Long, Seq[String]) = {
     require(mode == "copy" || mode == "reference",
       s"unknown export mode '$mode' (copy | reference)")
@@ -3291,9 +3257,7 @@ object TxnCatalog {
       d.dataEntries(t).map(_._1)
     }
     val destF = fs(spark, destRoot)
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    retryOnConflict { _ =>
       val destPrev = snapshot(spark, destRoot)
       // per-table copy plan: full mode copies everything (and requires
       // a fresh target); delta mode copies each table's classified
@@ -3373,24 +3337,22 @@ object TxnCatalog {
       val destDrops: Set[(String, String)] = plans.iterator.flatMap {
         case (t, (_, drops)) => drops.map((t, _)) }.toSet
       try {
-        return (publish(spark, destRoot, updates,
+        (publish(spark, destRoot, updates,
           statsColumns = statsCols,
           expectedTxn = Some(destPrev.map(_.txn).getOrElse(0L)),
           reconcile = carried =>
             carried -- destDrops ++ refEntries ++ bulkStaged,
           bloomColumns = bloomCols)(() => ()), tabs)
       } catch {
-        case ex: java.io.IOException =>
+        case c: CommitConflict =>
           // lost the destination CAS: unstage this attempt's bulk dirs
           // (publish cleans only its own staging) before retrying
           bulkStaged.foreach { case ((t, p), e) =>
             destF.delete(new Path(entryPath(destRoot, t, p, e.dir)), true)
           }
-          if (attempt >= attempts) throw ex
-          Thread.sleep(attempt * 20L)
+          throw c
       }
     }
-    throw new IllegalStateException("unreachable")
     } catch {
       case ex if scala.util.control.NonFatal(ex) =>
         // a refused or failed export must not strand the tag it just
@@ -3442,7 +3404,7 @@ object TxnCatalog {
     * because each file still covers a contiguous Z-range. Same
     * optimistic concurrency as [[compactPartitions]]: conditional on
     * the pinned txn, a rival commit in the window fails this commit
-    * cleanly (IOException) and the caller retries against the new
+    * cleanly ([[CommitConflict]]) and the caller retries against the new
     * snapshot. Returns the committed txn. */
   def clusterPartitions(spark: SparkSession, root: String, table: String,
       parts: Seq[String], intoPrefix: String, aCol: String, bCol: String,
@@ -3617,8 +3579,8 @@ object TxnCatalog {
     *
     * Same CONDITIONAL-txn protection as [[clusterPartitionsN]]: a rival
     * commit (a concurrent micro-batch append) between pin and publish
-    * fails the pass cleanly and it retries against the moved catalog, up
-    * to `attempts` times — appends are never blocked or lost, the next
+    * fails the pass cleanly and it retries against the moved catalog
+    * ([[retryOnConflict]]) — appends are never blocked or lost, the next
     * trigger simply sees one more pending batch. The generation name
     * carries the pinned txn, so retries can never collide with a
     * previous generation's tiles. Returns the committed txn when a
@@ -3626,22 +3588,17 @@ object TxnCatalog {
   def maintainClustered(spark: SparkSession, root: String, table: String,
       dims: Seq[String], intoPrefix: String = "z", minBatches: Int = 8,
       buckets: Int = 16, bits: Int = 8, filesPerBucket: Int = 0,
-      extraStatsColumns: Seq[String] = Nil, attempts: Int = 5,
+      extraStatsColumns: Seq[String] = Nil,
       bloomColumns: Seq[String] = Nil): Option[Long] = {
     require(minBatches >= 1, "minBatches must be >= 1")
-    snapshot(spark, root).flatMap { snap =>
-      val pending = snap.partitions(table).filterNot(_.startsWith(intoPrefix))
-      if (pending.size < minBatches) None
-      else {
-        try Some(clusterPartitionsN(spark, root, table, pending,
+    retryOnConflict { _ =>
+      snapshot(spark, root).flatMap { snap =>
+        val pending =
+          snap.partitions(table).filterNot(_.startsWith(intoPrefix))
+        if (pending.size < minBatches) None
+        else Some(clusterPartitionsN(spark, root, table, pending,
           s"$intoPrefix${snap.txn}-", dims, buckets, bits,
           extraStatsColumns, filesPerBucket, bloomColumns))
-        catch {
-          case _: java.io.IOException if attempts > 1 =>
-            maintainClustered(spark, root, table, dims, intoPrefix,
-              minBatches, buckets, bits, filesPerBucket, extraStatsColumns,
-              attempts - 1, bloomColumns)
-        }
       }
     }
   }
@@ -3656,7 +3613,7 @@ object TxnCatalog {
     * rewrite collision-free with the tiles it consumes, and the commit
     * is CONDITIONAL like every reorganization here. diffData consumers
     * skip the result (it inherits the newest source data txn). Returns
-    * the committed txn; throws IOException on losing a commit race
+    * the committed txn; throws [[CommitConflict]] on losing a commit race
     * (retry against the moved catalog). */
   def reclusterFull(spark: SparkSession, root: String, table: String,
       dims: Seq[String], intoPrefix: String = "z", buckets: Int = 16,
@@ -3941,6 +3898,33 @@ object TxnCatalog {
       .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap)
   }
 
+  /** Lost-commit retry, the one rule for every conditional commit: run
+    * `body(attempt)` (attempt counts from 1) and re-run it only when it
+    * throws [[CommitConflict]]. Any other failure propagates at once.
+    * `body` must re-plan from a fresh snapshot on every attempt — a
+    * lost attempt's plan was made against a catalog that has moved.
+    * Policy: at most 20 attempts, `min(200, 20 * attempt)` ms apart
+    * (about 2.9 s of backoff in all), then the last conflict is
+    * rethrown. The backoff un-herds writers racing for the same txn
+    * number, and 20 attempts let a burst of rival appends all land.
+    * There is no per-caller knob: every conditional commit loses the
+    * same way, so every one retries the same way. */
+  private[storage] def retryOnConflict[T](body: Int => T): T = {
+    @scala.annotation.tailrec
+    def run(attempt: Int): T = {
+      val out =
+        try Some(body(attempt))
+        catch { case _: CommitConflict if attempt < 20 => None }
+      out match {
+        case Some(v) => v
+        case None =>
+          Thread.sleep(math.min(200L, attempt * 20L))
+          run(attempt + 1)
+      }
+    }
+    run(1)
+  }
+
   /** The commit path every lake write shares. It pins the current txn
     * (conditional on `expectedTxn` when given), lets `reconcile` turn
     * the current manifest into the carried-forward one (dropping
@@ -3963,7 +3947,7 @@ object TxnCatalog {
     val f = fs(spark, root)
     val prev = currentTxn(spark, root)
     expectedTxn.foreach { e =>
-      if (prev.getOrElse(0L) != e) throw new java.io.IOException(
+      if (prev.getOrElse(0L) != e) throw new CommitConflict(
         s"catalog moved to txn ${prev.getOrElse(0L)} since snapshot $e; retry")
     }
     val prevManifest = prev.map(manifest(f, root, _)).getOrElse(Map.empty)
@@ -4298,7 +4282,7 @@ object TxnCatalog {
       staged.foreach { case ((t, p), e) =>
         f.delete(new Path(entryPath(root, t, p, e.dir)), true)
       }
-      throw new java.io.IOException(
+      throw new CommitConflict(
         s"lost the commit race publishing txn manifest $marker")
     }
   }
@@ -4323,53 +4307,48 @@ object TxnCatalog {
     * or None when nothing needed measuring (or the table is absent). */
   def analyzeTable(spark: SparkSession, root: String, table: String,
       statsColumns: Seq[String], bloomColumns: Seq[String] = Nil,
-      onlyMissing: Boolean = true, attempts: Int = 5): Option[Long] =
+      onlyMissing: Boolean = true): Option[Long] =
     analyzeTableHooked(spark, root, table, statsColumns, bloomColumns,
-      onlyMissing, attempts)(() => ())
+      onlyMissing)(() => ())
 
   /** [[analyzeTable]] with the test-only pre-publish seam (races a
     * rival commit into the measure window). */
   private[graft] def analyzeTableHooked(spark: SparkSession, root: String,
       table: String, statsColumns: Seq[String],
       bloomColumns: Seq[String] = Nil,
-      onlyMissing: Boolean = true, attempts: Int = 5)(
+      onlyMissing: Boolean = true)(
       beforePublish: () => Unit): Option[Long] = {
     require(statsColumns.nonEmpty || bloomColumns.nonEmpty,
       "analyze needs at least one stats or bloom column")
     checkTableName(table)
     val f = fs(spark, root)
-    var attempt = 0
-    while (attempt < attempts) {
-      attempt += 1
-      val snap = snapshot(spark, root).getOrElse(return None)
-      val targets = snap.dataEntries(table).filter { case (_, e) =>
-        !onlyMissing ||
-          statsColumns.exists(c => !e.stats.contains(c)) ||
-          bloomColumns.exists(c => e.stats.get(c).forall(_.bloom.isEmpty))
-      }
-      if (targets.isEmpty) return None
-      val measured: Map[(String, String), Entry] = targets.map {
-        case (p, e) =>
-          val path = entryPath(root, table, p, e.dir)
-          val (st, rows) = entryStats(spark, path, Map.empty,
-            statsColumns, bloomColumns)
-          (table, p) -> e.copy(stats = e.stats ++ st,
-            rows = rows.orElse(e.rows),
-            bytes = e.bytes.orElse(dirBytes(spark, path)))
-      }.toMap
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      try {
-        // staged is EMPTY: a lost race deletes nothing but the tmp
-        // manifest — the measured entries' dirs are live data
-        casPublish(f, root, snap.txn + 1, nonce,
-          manifest(f, root, snap.txn) ++ measured, Map.empty)(beforePublish)
-        return Some(snap.txn + 1)
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
+    retryOnConflict { _ =>
+      snapshot(spark, root).flatMap { snap =>
+        val targets = snap.dataEntries(table).filter { case (_, e) =>
+          !onlyMissing ||
+            statsColumns.exists(c => !e.stats.contains(c)) ||
+            bloomColumns.exists(c => e.stats.get(c).forall(_.bloom.isEmpty))
+        }
+        if (targets.isEmpty) None
+        else {
+          val measured: Map[(String, String), Entry] = targets.map {
+            case (p, e) =>
+              val path = entryPath(root, table, p, e.dir)
+              val (st, rows) = entryStats(spark, path, Map.empty,
+                statsColumns, bloomColumns)
+              (table, p) -> e.copy(stats = e.stats ++ st,
+                rows = rows.orElse(e.rows),
+                bytes = e.bytes.orElse(dirBytes(spark, path)))
+          }.toMap
+          val nonce = java.util.UUID.randomUUID().toString.take(8)
+          // staged is EMPTY: a lost race deletes nothing but the tmp
+          // manifest — the measured entries' dirs are live data
+          casPublish(f, root, snap.txn + 1, nonce,
+            manifest(f, root, snap.txn) ++ measured, Map.empty)(beforePublish)
+          Some(snap.txn + 1)
+        }
       }
     }
-    None
   }
 
   /** Table property recording the most recent RESTORE of the table:
@@ -4410,12 +4389,12 @@ object TxnCatalog {
     * against the moved catalog. Returns the committed (or current,
     * when no-op) txn. */
   def restoreTable(spark: SparkSession, root: String, table: String,
-      toTxn: Long, attempts: Int = 5): Long =
-    restoreTableHooked(spark, root, table, toTxn, attempts)(() => ())
+      toTxn: Long): Long =
+    restoreTableHooked(spark, root, table, toTxn)(() => ())
 
   /** [[restoreTable]] with the test-only pre-publish seam. */
   private[graft] def restoreTableHooked(spark: SparkSession, root: String,
-      table: String, toTxn: Long, attempts: Int = 5)(
+      table: String, toTxn: Long)(
       beforePublish: () => Unit): Long = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -4433,36 +4412,30 @@ object TxnCatalog {
         s"data for '$t'/$p at txn $toTxn is gone (vacuumed?); cannot restore")
     }
     val oldProps = old.properties(table) - RestoreTxnProp
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    val oldNonProps = oldT.filter(_._1._2 != PropsPartition)
+    retryOnConflict { _ =>
       val cur = snapshot(spark, root).getOrElse(
         throw new IllegalArgumentException(s"empty catalog under $root"))
       val curNonProps = cur.entries.filter { case ((t, p), _) =>
         t == table && p != PropsPartition }
-      val oldNonProps = oldT.filter(_._1._2 != PropsPartition)
       if (curNonProps == oldNonProps &&
           (cur.properties(table) - RestoreTxnProp) == oldProps)
-        return cur.txn // already in the target state — idempotent
-      val marker = s"${cur.txn + 1}:$toTxn"
-      val merged = (oldProps + (RestoreTxnProp -> marker))
-        .filter(_._2.nonEmpty)
-      val kv = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          merged.toSeq.sorted.map { case (k, v) => Row(k, v) }, 1),
-        StructType(Seq(StructField("key", StringType, nullable = false),
-          StructField("value", StringType, nullable = false))))
-      try {
-        return publish(spark, root, Seq((table, PropsPartition, kv)),
+        cur.txn // already in the target state — idempotent
+      else {
+        val marker = s"${cur.txn + 1}:$toTxn"
+        val merged = (oldProps + (RestoreTxnProp -> marker))
+          .filter(_._2.nonEmpty)
+        val kv = spark.createDataFrame(
+          spark.sparkContext.parallelize(
+            merged.toSeq.sorted.map { case (k, v) => Row(k, v) }, 1),
+          StructType(Seq(StructField("key", StringType, nullable = false),
+            StructField("value", StringType, nullable = false))))
+        publish(spark, root, Seq((table, PropsPartition, kv)),
           statsColumns = Nil, expectedTxn = Some(cur.txn),
           reconcile = carried => carried.filterNot(_._1._1 == table) ++
             oldNonProps)(beforePublish)
-      } catch {
-        case _: java.io.IOException if attempt < attempts =>
-          Thread.sleep(attempt * 20L)
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Table properties recording a BUCKETED layout: the hash-bucket
@@ -4505,8 +4478,8 @@ object TxnCatalog {
     * when the bucketed scan is used; Spark's auto-bucketed-scan rule
     * restores split-based parallelism for scans that don't need the
     * bucketing). Conditional on the pinned txn like every
-    * reorganization: a rival commit fails this cleanly (IOException)
-    * and the caller retries. Returns the committed txn. */
+    * reorganization: a rival commit fails this cleanly
+    * ([[CommitConflict]]) and the caller retries. Returns the committed txn. */
   def bucketTable(spark: SparkSession, root: String, table: String,
       keyCol: String, numBuckets: Int,
       statsColumns: Seq[String] = Nil,
@@ -4594,7 +4567,7 @@ object TxnCatalog {
         // the windows before it (rename/measure/props-write failures)
         f.delete(stagingDir, true)
         ex match {
-          case _: java.io.IOException => // lost the race: already clean
+          case _: CommitConflict => // lost the race: already clean
           case _ =>
             f.delete(target, true)
             f.delete(new Path(

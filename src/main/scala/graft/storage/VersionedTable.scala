@@ -124,7 +124,7 @@ object VersionedTable {
     if (!won) {
       if (f.exists(tmp)) f.delete(tmp, false)
       f.delete(data, true) // loser cleans only its OWN staging dir
-      throw new java.io.IOException(
+      throw new CommitConflict(
         s"lost the commit race publishing version marker $marker")
     }
     next
@@ -198,7 +198,7 @@ object VersionedTable {
       // retention applies to orphan staging dirs too: a writer whose Spark
       // write is STILL RUNNING after a rival committed its number would
       // otherwise have its staging dir deleted under it, turning a clean
-      // lost-the-race IOException into confusing mid-job task failures
+      // lost-the-race CommitConflict into confusing mid-job task failures
       .filter(s => minAgeMs <= 0L || now - s.getModificationTime >= minAgeMs)
       .foreach(s => f.delete(s.getPath, true))
   }

@@ -191,7 +191,7 @@ object Streams {
               try graft.storage.TxnCatalog.compactPartitions(s, root,
                 lineageTable, orphan, s"lfold$txn",
                 statsColumns = statsColumns, bloomColumns = bloomColumns)
-              catch { case _: java.io.IOException => () }
+              catch { case _: graft.storage.CommitConflict => () }
               ()
             }
           }
@@ -248,7 +248,7 @@ object Streams {
                 batches, into, statsColumns = statsColumns,
                 bloomColumns = bloomColumns)
               ()
-            } catch { case _: java.io.IOException => () }
+            } catch { case _: graft.storage.CommitConflict => () }
           }
         }
         if (clusterEvery > 0 && clusterDims.nonEmpty) {
@@ -278,7 +278,7 @@ object Streams {
               try {
                 graft.storage.MaterializedAgg.refresh(s, root, v)
                 ()
-              } catch { case _: java.io.IOException => () }
+              } catch { case _: graft.storage.CommitConflict => () }
             }
           }
         }

@@ -615,8 +615,8 @@ class ProcedureSpec extends GraftSuite {
       // b=3 delete-masked, b=6 appended, table 'nt' new — at ~5 jobs
       // each for read+write+stats-agg+bloom, plus the delete-bounds
       // probe and manifest machinery; measured 29), never to the
-      // table's partition count — the r12 ProfileExport phase table
-      // adjudicated the path operation-bound at this budget; any
+      // table's partition count — a per-phase profile of the export
+      // path found it operation-bound at this budget; any
       // machinery regression fails here instead of drifting the bench
       val jobs = new java.util.concurrent.atomic.AtomicInteger()
       val listener = new org.apache.spark.scheduler.SparkListener {

@@ -126,6 +126,26 @@ class RestoreSpec extends GraftSuite {
     assert(rt === TxnCatalog.currentTxn(spark, root).get)
   }
 
+  test("restore losing to a rival on every attempt ends in CommitConflict") {
+    val root = tmp("rstherd")
+    val t1 = commitBatch(root, "b0", 0, 10)
+    commitBatch(root, "b1", 10, 20)
+    var rivals = 0
+    intercept[graft.storage.CommitConflict] {
+      TxnCatalog.restoreTableHooked(spark, root, "ev", t1) { () =>
+        rivals += 1
+        commitBatch(root, s"r$rivals", 100 * rivals, 100 * rivals + 1)
+      }
+    }
+    assert(rivals === 20, "one attempt per rival, up to the fixed cap")
+    // the catalog holds the two set-up commits plus every rival's and
+    // nothing of the restore: no marker, no reverted data
+    assert(TxnCatalog.currentTxn(spark, root) === Some(22L))
+    assert(!TxnCatalog.snapshot(spark, root).get.properties("ev")
+      .contains(TxnCatalog.RestoreTxnProp))
+    assert(ids(root) === (0L until 20L) ++ (1 to 20).map(_ * 100L))
+  }
+
   test("a stream crossing a restore fails fast; ignoreRestores opts out") {
     import org.apache.spark.sql.execution.streaming.runtime.LongOffset
     val root = tmp("rststream")

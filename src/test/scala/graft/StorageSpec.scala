@@ -217,6 +217,21 @@ class StorageSpec extends GraftSuite {
     }
   }
 
+  test("TwinCommit append: a non-conflict IOException propagates, nothing lands") {
+    val root = tmp("twio")
+    val cat = Seq((1L, "A")).toDF("ID", "INDICE")
+    val lin = Seq((100L, 1L)).toDF("ID_EJECUCION", "ID_IMAGEN_FUENTE")
+    val disk = new java.io.IOException("disk full")
+    val ex = intercept[java.io.IOException] {
+      graft.storage.TwinCommit.appendHooked(spark, root, "b1",
+        cat, "catalog", lin, "lineage") { () => throw disk }
+    }
+    assert(ex eq disk, "only a lost commit is retried")
+    assert(graft.storage.TwinCommit.committedBatches(spark, root, "catalog")
+      === Nil)
+    assert(graft.storage.TxnCatalog.currentTxn(spark, root) === None)
+  }
+
   test("VersionedTable: updateSnapshot is snapshot-atomic; torn overwrite invisible") {
     val dir = tmp("vt")
     val v1 = graft.storage.VersionedTable.overwrite(spark, dir, catalog)
@@ -1666,6 +1681,22 @@ class StorageSpec extends GraftSuite {
     assert(snap.partitions("t").forall(p =>
       snap.stats("t", p).contains("k")))
     assert(snap.read("t").get.count() === 3L, "no rows lost to the race")
+  }
+
+  test("analyze propagates a non-conflict IOException without retrying") {
+    import graft.storage.TxnCatalog
+    val root = tmp("anlio")
+    TxnCatalog.commitPartitions(spark, root,
+      Seq(("t", "b=0", Seq((1L, "a"), (2L, "b")).toDF("k", "nm"))))
+    var calls = 0
+    val disk = new java.io.IOException("disk full")
+    val ex = intercept[java.io.IOException] {
+      TxnCatalog.analyzeTableHooked(spark, root, "t", Seq("k"))(
+        () => { calls += 1; throw disk })
+    }
+    assert(ex eq disk)
+    assert(calls === 1, "only a lost commit is retried")
+    assert(TxnCatalog.currentTxn(spark, root) === Some(1L))
   }
 
   test("readSemiJoin over the key cap degrades to the unpruned exact semi join") {
