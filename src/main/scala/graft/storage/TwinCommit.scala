@@ -63,6 +63,7 @@ object TwinCommit {
     // re-resolves the manifest and retries
     TxnCatalog.retryOnConflict { attempt =>
       val hook = if (attempt == 1) beforeFirstPublish else () => ()
+      val snap = TxnCatalog.snapshot(spark, root)
       ledger match {
         case None =>
           // committed replay — exactly-once no-op (manifest publish was
@@ -70,8 +71,7 @@ object TwinCommit {
           // tableB). Partition-name evidence is only safe while no
           // maintenance renames batch partitions — a sink running
           // inline compaction/clustering must pass `ledger`.
-          if (!TxnCatalog.partitions(spark, root, tableA)
-              .contains(part(batchId)))
+          if (!snap.exists(_.partitions(tableA).contains(part(batchId))))
             TxnCatalog.commitPartitionsHooked(spark, root, Seq(
               (tableA, part(batchId), a), (tableB, part(batchId), b)),
               statsColumns = statsColumns, bloomColumns = bloomColumns)(hook)
@@ -79,7 +79,7 @@ object TwinCommit {
           // durable replay evidence: the (appId → version) ledger on
           // tableA rides the same manifest CAS as both tables' data,
           // so it survives compaction/clustering renaming `batch=*`
-          TxnCatalog.appendLedgered(spark, root, Seq(
+          TxnCatalog.appendLedgered(spark, root, snap, Seq(
             (tableA, part(batchId), a), (tableB, part(batchId), b)),
             tableA, appId, version, statsColumns, bloomColumns)(hook)
       }
@@ -176,11 +176,4 @@ object TwinCommit {
     TxnCatalog.partitions(spark, root, table)
       .filter(_.startsWith("batch="))
       .map(_.stripPrefix("batch=")).sorted
-
-  /** Read one table's committed batches only. Uncommitted (crashed, torn,
-    * in-flight) staging dirs are never visible. None when no batch has
-    * been committed yet (no schema to read). */
-  def readCommitted(spark: SparkSession, root: String,
-      table: String): Option[DataFrame] =
-    TxnCatalog.read(spark, root, table)
 }

@@ -3,10 +3,9 @@ package graft.storage
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Multi-table snapshot transactions over bare Parquet — the last gap
-  * between [[VersionedTable]] (single-table snapshot overwrites) and a
-  * real table format: a writer that must update SEVERAL tables so that
-  * readers see either all of the new versions or none of them (the
+/** Multi-table snapshot transactions over bare Parquet — the engine's
+  * one commit protocol: a writer that must update one or SEVERAL tables
+  * so that readers see either all of the new versions or none of them (the
   * reference's catalog + lineage pair updated inside one MySQL
   * transaction, `mysql_process.py:53-56` and `:83-91`, is exactly this
   * shape).
@@ -31,7 +30,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * single commit point for the whole transaction:
   *  1. every updated entry's new snapshot is written COMPLETELY into its
   *     own unique staging dir (no writer ever touches another writer's
-  *     dirs — the [[VersionedTable]] protocol, per entry);
+  *     dirs);
   *  2. one manifest file listing every live entry is published via
   *     create-temp + atomic rename to `_txns/<n>`. Winners are detected
   *     by read-back (HDFS rename-to-existing fails atomically; local FS
@@ -1482,13 +1481,14 @@ object TxnCatalog {
     require(!batchId.contains("/"), s"batch id must be path-safe: $batchId")
     val part = s"batch=$batchId"
     retryOnConflict { _ =>
+      val snap = snapshot(spark, root)
       ledger match {
         case None =>
-          if (!partitions(spark, root, table).contains(part))
+          if (!snap.exists(_.partitions(table).contains(part)))
             commitPartitions(spark, root, Seq((table, part, df)),
               statsColumns = statsColumns, bloomColumns = bloomColumns)
         case Some((appId, version)) =>
-          appendLedgered(spark, root, Seq((table, part, df)),
+          appendLedgered(spark, root, snap, Seq((table, part, df)),
             table, appId, version, statsColumns, bloomColumns)(() => ())
       }
     }
@@ -1505,7 +1505,7 @@ object TxnCatalog {
       statsColumns: Seq[String] = Nil,
       bloomColumns: Seq[String] = Nil): Unit = {
     if (parts.nonEmpty) retryOnConflict { _ =>
-      appendLedgered(spark, root,
+      appendLedgered(spark, root, snapshot(spark, root),
         parts.map { case (p, df) => (table, p, df) },
         table, appId, version, statsColumns, bloomColumns)(() => ())
     }
@@ -1533,12 +1533,15 @@ object TxnCatalog {
 
   /** Commit `updates` and the ledger fact "`appId` has applied
     * `version` to `ledgerTable`" in ONE atomic manifest publish,
-    * conditional on the pinned snapshot (a rival forces a
-    * [[CommitConflict]]; callers retry). Returns false — committing
-    * nothing — when the ledger already records `version` (or later):
-    * the replayed batch was applied before, whatever names its
-    * partitions carry NOW. */
+    * conditional on `snap`, the snapshot the caller planned `updates`
+    * from (None for an empty catalog): a rival commit since forces a
+    * [[CommitConflict]], and the caller's [[retryOnConflict]] body
+    * re-plans against a fresh one. Returns false — committing nothing —
+    * when `snap`'s ledger already records `version` (or later): the
+    * replayed batch was applied before, whatever names its partitions
+    * carry NOW. */
   private[graft] def appendLedgered(spark: SparkSession, root: String,
+      snap: Option[Snapshot],
       updates: Seq[(String, String, DataFrame)],
       ledgerTable: String, appId: String, version: Long,
       statsColumns: Seq[String], bloomColumns: Seq[String])(
@@ -1549,7 +1552,6 @@ object TxnCatalog {
       checkTableName(t); checkPartitionName(p)
     }
     checkTableName(ledgerTable)
-    val snap = snapshot(spark, root)
     val props = snap.map(_.properties(ledgerTable)).getOrElse(Map.empty)
     if (props.get(ledgerKey(appId)).exists(_.toLong >= version)) return false
     val merged = props + (ledgerKey(appId) -> version.toString)
@@ -3909,7 +3911,7 @@ object TxnCatalog {
     * number, and 20 attempts let a burst of rival appends all land.
     * There is no per-caller knob: every conditional commit loses the
     * same way, so every one retries the same way. */
-  private[storage] def retryOnConflict[T](body: Int => T): T = {
+  private[graft] def retryOnConflict[T](body: Int => T): T = {
     @scala.annotation.tailrec
     def run(attempt: Int): T = {
       val out =
@@ -4220,8 +4222,8 @@ object TxnCatalog {
   }
 
   /** Place `tmp` at `marker` ATOMICALLY, failing (false) if `marker`
-    * already exists — the win arbitration every marker-file CAS in this
-    * package rides on. On HDFS, exists+rename is sound: the NameNode
+    * already exists — the win arbitration of the manifest CAS and of
+    * tag creation. On HDFS, exists+rename is sound: the NameNode
     * rejects a rename onto an existing path atomically. On the LOCAL
     * filesystem it is NOT — Hadoop's local rename is POSIX rename(2),
     * which silently REPLACES an existing destination, so two writers
@@ -4233,7 +4235,7 @@ object TxnCatalog {
     * a successful link exposes the COMPLETE tmp content instantly
     * (same inode). Filesystems without link support fall back to
     * exists+rename (their rename semantics are their contract). */
-  private[storage] def atomicPlace(f: org.apache.hadoop.fs.FileSystem,
+  private def atomicPlace(f: org.apache.hadoop.fs.FileSystem,
       tmp: Path, marker: Path): Boolean =
     if (f.getScheme == "file") {
       val linked =
@@ -4656,9 +4658,8 @@ object TxnCatalog {
           val base = s.getPath.getName.stripPrefix("v=").takeWhile(_ != '.')
           scala.util.Try(base.toLong).toOption.exists(_ <= maxCommitted)
         }
-        // retention applies to orphan staging dirs too (see
-        // VersionedTable.vacuum): never delete a possibly-still-writing
-        // loser's staging dir inside the window
+        // retention applies to orphan staging dirs too: never delete a
+        // possibly-still-writing loser's staging dir inside the window
         .filter(s => minAgeMs <= 0L || now - s.getModificationTime >= minAgeMs)
         // a dir can be both a dropped txn's dead data AND unreferenced:
         // `add` plans it once, under the more specific "data" kind

@@ -503,47 +503,52 @@ object Streams {
     * form of [[graft.ops.Dedup.paragraphDedup]]): a paragraph survives iff
     * it is the first occurrence WITHIN the batch (same (id, para_idx)
     * order as the batch operator) and was never seen in any earlier batch.
-    * Cleaned docs append to `outDir`; the seen-paragraph set persists in
-    * `stateDir/paras` as a [[graft.storage.VersionedTable]] — the marker
-    * protocol makes the state swap crash-atomic: a crash mid-publish leaves
-    * an unmarked (invisible) staging dir and the PREVIOUS state intact, so
-    * replay can never observe a torn or silently-emptied seen-set.
     *
-    * When doc ids arrive in increasing order across batches, the appended
-    * output is IDENTICAL to running the batch operator over the
-    * concatenated stream — the equivalence the spec pins. State is one row
-    * per distinct paragraph: corpus-vocabulary-sized, not stream-sized,
-    * and keyed for the same anti-join a 100 TB run would hash down to. */
+    * Exactly-once, like [[lakeSink]]: the cleaned docs (partition
+    * `batch=b<batchId>` of `outTable`), the paragraphs this batch adds to
+    * the seen-set (the same partition of `stateTable`) and the ledger
+    * fact "`stateTable` applied `batchId`" land under `root` in ONE
+    * manifest CAS ([[graft.storage.TxnCatalog.appendLedgered]]). A
+    * redelivered batch finds its id in the ledger and commits nothing; a
+    * crash before the CAS leaves neither output nor state, and the replay
+    * lands both. The seen-set is read from the snapshot the commit is
+    * conditional on, so a lost commit re-plans against the moved state.
+    *
+    * When doc ids arrive in increasing order across batches, the output is
+    * IDENTICAL to running the batch operator over the concatenated stream
+    * — the equivalence the spec pins. State is one row per distinct
+    * paragraph (corpus-vocabulary-sized, not stream-sized) and each batch
+    * writes only its new paragraphs, so the write cost is O(batch). The
+    * state grows one partition per batch; a caller folds them with
+    * [[graft.storage.TxnCatalog.compactPartitions]], and the ledger
+    * survives the fold. */
   def paragraphDedupBatchStep(
-      batch: DataFrame, idCol: String, textCol: String,
-      outDir: String, stateDir: String, paraWords: Int = 8): Unit = {
+      batch: DataFrame, batchId: Long, idCol: String, textCol: String,
+      root: String, outTable: String, stateTable: String,
+      paraWords: Int = 8): Unit = {
     val spark = batch.sparkSession
     val exploded = graft.ops.Dedup
       .paragraphs(batch, idCol, textCol, paraWords)
-      .localCheckpoint(false) // two consumers: output + state update
-    // readCurrent is None only before the first commit — a transient read
-    // error (IO, permissions, corrupt footer) PROPAGATES instead of
-    // silently reinitializing the seen-set to empty (which would re-admit
-    // every previously-seen paragraph on replay)
-    val stateTable = s"$stateDir/paras"
-    val prev = graft.storage.VersionedTable.readCurrent(spark, stateTable)
-      .getOrElse(exploded.select("para").limit(0))
+      .localCheckpoint(false) // two consumers: output + state delta
     val firstInBatch = org.apache.spark.sql.expressions.Window
       .partitionBy(col("para")).orderBy(col(idCol), col("para_idx"))
-    val marked = exploded
-      .withColumn("__rn", row_number().over(firstInBatch))
-      .join(prev.select(col("para"), lit(1).as("__seen")), Seq("para"), "left")
-      .withColumn("__keep", col("__rn") === 1 && col("__seen").isNull)
-    graft.ops.Dedup.reassembleParagraphs(marked, idCol)
-      .write.mode("append").parquet(outDir)
-    // state publish AFTER the output lands: crash-replay of this batch then
-    // re-reads the old committed state and rewrites the same rows. The
-    // marker rename is the commit point — the live state is never destroyed
-    // by a partial write. Old versions are reclaimed immediately (keep=1,
-    // no concurrent long readers inside one foreachBatch pipeline).
-    graft.storage.VersionedTable.overwrite(spark, stateTable,
-      prev.select("para").union(exploded.select("para")).distinct())
-    graft.storage.VersionedTable.vacuum(spark, stateTable, keep = 1)
+    val part = s"batch=b$batchId"
+    graft.storage.TxnCatalog.retryOnConflict { _ =>
+      val snap = graft.storage.TxnCatalog.snapshot(spark, root)
+      // None only before the first commit — a transient read error
+      // PROPAGATES instead of silently emptying the seen-set (which would
+      // re-admit every previously-seen paragraph)
+      val seen = snap.flatMap(_.read(stateTable))
+        .getOrElse(exploded.select("para").limit(0))
+      val marked = exploded
+        .withColumn("__rn", row_number().over(firstInBatch))
+        .join(seen.select(col("para"), lit(1).as("__seen")), Seq("para"), "left")
+        .withColumn("__keep", col("__rn") === 1 && col("__seen").isNull)
+      graft.storage.TxnCatalog.appendLedgered(spark, root, snap, Seq(
+          (outTable, part, graft.ops.Dedup.reassembleParagraphs(marked, idCol)),
+          (stateTable, part, exploded.select("para").except(seen))),
+        stateTable, stateTable, batchId, Nil, Nil)(() => ())
+    }
   }
 
   /** One `foreachBatch` step of incremental MinHash-LSH NEAR-dup dedup
@@ -551,10 +556,10 @@ object Streams {
     * drop-matched-ids rule): a doc survives iff it near-dup-matches
     * (verified Jaccard ≥ `threshold`) no earlier doc — neither a
     * lower-`idCol` doc within its own batch nor ANY doc of ANY earlier
-    * batch. Survivors append to `outDir`; the seen-doc set persists in
-    * `stateDir/docs` as a [[graft.storage.VersionedTable]] (same
-    * crash-atomic marker swap as [[paragraphDedupBatchStep]]: replay
-    * re-reads the old committed state and recomputes the same survivors).
+    * batch. Survivors land in `outTable` and the batch's unseen docs in
+    * `stateTable`, with the ledger fact, in one exactly-once commit per
+    * `batchId` (see [[paragraphDedupBatchStep]]: same partitions, same
+    * replay and retry rules, same O(batch) writes and optional fold).
     *
     * State holds every SEEN doc, not just survivors — the batch rule
     * "drop any doc that matches a lower-id doc" counts matches against
@@ -562,8 +567,8 @@ object Streams {
     * output independent of where the stream was cut. With ids increasing
     * across batches and the hot-bucket cap disabled (the cap is a
     * per-run statistic, so per-batch caps and a whole-corpus cap can
-    * disagree), the appended output is IDENTICAL to the batch rule over
-    * the concatenated stream — the equivalence the spec pins.
+    * disagree), the output is IDENTICAL to the batch rule over the
+    * concatenated stream — the equivalence the spec pins.
     *
     * Scale: each batch pays one LSH self-join over the batch plus
     * bands·|batch| bucket probes against the state via
@@ -571,29 +576,31 @@ object Streams {
     * the accumulated corpus. State is one (id, text) row per seen doc,
     * keyed for the hash joins a 100 TB run would bucket on. */
   def minHashDedupBatchStep(
-      batch: DataFrame, idCol: String, textCol: String,
-      outDir: String, stateDir: String,
+      batch: DataFrame, batchId: Long, idCol: String, textCol: String,
+      root: String, outTable: String, stateTable: String,
       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 16,
       threshold: Double = 0.5, maxBucketSize: Int = 0): Unit = {
     val spark = batch.sparkSession
     val docs = batch.select(col(idCol), col(textCol)).localCheckpoint(false)
-    val stateTable = s"$stateDir/docs"
-    // None only before the first commit; transient read errors PROPAGATE
-    // (a silently-emptied seen-set would re-admit every earlier near-dup)
-    val prev = graft.storage.VersionedTable.readCurrent(spark, stateTable)
-      .getOrElse(docs.limit(0))
     val droppedInBatch = graft.ops.Dedup.minHashLshPairs(
       docs, idCol, textCol, shingleN, numHashes, bands, threshold,
       maxBucketSize).select(col("idb").as(idCol))
-    val droppedByState = graft.ops.Dedup.minHashLshPairsAgainst(
-      prev, docs, idCol, textCol, shingleN, numHashes, bands, threshold,
-      maxBucketSize).select(col("idb").as(idCol))
-    docs.join(droppedInBatch.union(droppedByState).distinct(),
-        Seq(idCol), "left_anti")
-      .write.mode("append").parquet(outDir)
-    // state publish AFTER the output lands (see paragraphDedupBatchStep)
-    graft.storage.VersionedTable.overwrite(spark, stateTable,
-      prev.unionByName(docs).dropDuplicates(idCol))
-    graft.storage.VersionedTable.vacuum(spark, stateTable, keep = 1)
+    val part = s"batch=b$batchId"
+    graft.storage.TxnCatalog.retryOnConflict { _ =>
+      val snap = graft.storage.TxnCatalog.snapshot(spark, root)
+      // None only before the first commit; transient read errors PROPAGATE
+      // (a silently-emptied seen-set would re-admit every earlier near-dup)
+      val seen = snap.flatMap(_.read(stateTable)).getOrElse(docs.limit(0))
+      val droppedByState = graft.ops.Dedup.minHashLshPairsAgainst(
+        seen, docs, idCol, textCol, shingleN, numHashes, bands, threshold,
+        maxBucketSize).select(col("idb").as(idCol))
+      val survivors = docs.join(droppedInBatch.union(droppedByState)
+        .distinct(), Seq(idCol), "left_anti")
+      val unseen = docs.dropDuplicates(idCol)
+        .join(seen.select(idCol), Seq(idCol), "left_anti")
+      graft.storage.TxnCatalog.appendLedgered(spark, root, snap,
+        Seq((outTable, part, survivors), (stateTable, part, unseen)),
+        stateTable, stateTable, batchId, Nil, Nil)(() => ())
+    }
   }
 }

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source guard for the commit protocol: a lost commit is retried by
   * `TxnCatalog.retryOnConflict` alone. A hand-rolled loop that catches
   * every `IOException` (and so retries real storage failures) or sleeps
-  * between attempts of its own fails here. Reads the sources only; no
-  * Spark session. */
+  * between attempts of its own fails here, and so does a second protocol
+  * that places its own commit markers. Reads the sources only; no Spark
+  * session. */
 class CommitRetryLintSpec extends AnyFunSuite {
 
   private val mainSrc: Path = Paths.get(sys.props("user.dir"), "src", "main",
@@ -59,5 +60,17 @@ class CommitRetryLintSpec extends AnyFunSuite {
     }
     assert(found.isEmpty,
       s"back off via TxnCatalog.retryOnConflict, not a local sleep: $found")
+  }
+
+  test("only TxnCatalog places a commit marker") {
+    val protocol = Paths.get("graft", "storage", "TxnCatalog.scala")
+    val found = sources(mainSrc)
+      .filterNot { case (p, _) => mainSrc.relativize(p) == protocol }
+      .flatMap { case (p, text) =>
+        hits(text, """atomicPlace\(""".r)
+          .map(l => s"${mainSrc.relativize(p)}:$l")
+      }
+    assert(found.isEmpty,
+      s"commit through TxnCatalog, not a marker protocol of its own: $found")
   }
 }

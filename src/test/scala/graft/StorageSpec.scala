@@ -61,17 +61,17 @@ class StorageSpec extends GraftSuite {
     val cat = Seq((1L, "A"), (2L, "B")).toDF("ID", "INDICE")
     val lin = Seq((100L, 1L), (100L, 2L)).toDF("ID_EJECUCION", "ID_IMAGEN_FUENTE")
     graft.storage.TwinCommit.append(spark, root, "b1", cat, "catalog", lin, "lineage")
-    val backCat = graft.storage.TwinCommit.readCommitted(spark, root, "catalog").get
-    val backLin = graft.storage.TwinCommit.readCommitted(spark, root, "lineage").get
+    val backCat = graft.storage.TxnCatalog.read(spark, root, "catalog").get
+    val backLin = graft.storage.TxnCatalog.read(spark, root, "lineage").get
     assert(backCat.count() === 2 && backLin.count() === 2)
     // second batch appends; replaying a committed batch id is a no-op
     // (exactly-once: a foreachBatch retry after commit must not double-write)
     graft.storage.TwinCommit.append(spark, root, "b2",
       Seq((3L, "C")).toDF("ID", "INDICE"), "catalog",
       Seq((101L, 3L)).toDF("ID_EJECUCION", "ID_IMAGEN_FUENTE"), "lineage")
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "catalog").get.count() === 3)
+    assert(graft.storage.TxnCatalog.read(spark, root, "catalog").get.count() === 3)
     graft.storage.TwinCommit.append(spark, root, "b1", cat, "catalog", lin, "lineage")
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "catalog").get.count() === 3,
+    assert(graft.storage.TxnCatalog.read(spark, root, "catalog").get.count() === 3,
       "replayed committed batch must not duplicate rows")
   }
 
@@ -91,8 +91,8 @@ class StorageSpec extends GraftSuite {
     // the torn batch wrote catalog files on disk, but no manifest was
     // published — readers of BOTH tables see only the committed batch
     assert(graft.storage.TwinCommit.committedBatches(spark, root, "catalog") === Seq("ok"))
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "catalog").get.count() === 1)
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "lineage").get.count() === 1)
+    assert(graft.storage.TxnCatalog.read(spark, root, "catalog").get.count() === 1)
+    assert(graft.storage.TxnCatalog.read(spark, root, "lineage").get.count() === 1)
     // raw directory listing confirms the torn catalog staging dir is there
     val torn = new java.io.File(s"$root/catalog/batch=torn").listFiles()
     assert(torn != null && torn.nonEmpty) // files exist; readers never see them
@@ -103,10 +103,10 @@ class StorageSpec extends GraftSuite {
       Seq((100L, 2L)).toDF("ID_EJECUCION", "ID_IMAGEN_FUENTE"), "lineage")
     assert(graft.storage.TwinCommit.committedBatches(spark, root, "catalog")
       === Seq("ok", "torn"))
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "catalog").get.count() === 2)
+    assert(graft.storage.TxnCatalog.read(spark, root, "catalog").get.count() === 2)
     // the unified path also reclaims the torn remnants via TxnCatalog.vacuum
     graft.storage.TxnCatalog.vacuum(spark, root, keep = 1)
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "catalog").get.count() === 2)
+    assert(graft.storage.TxnCatalog.read(spark, root, "catalog").get.count() === 2)
     val dirs = new java.io.File(s"$root/catalog/batch=torn").listFiles()
       .map(_.getName).filter(_.startsWith("v=")).toSeq
     assert(dirs.length === 1, s"vacuum must reclaim the torn staging dir: $dirs")
@@ -127,10 +127,10 @@ class StorageSpec extends GraftSuite {
     val partsB = graft.storage.TxnCatalog.partitions(spark, root, "lineage")
     assert(partsA === partsB && partsA === Seq("batch=3", "batch=c1"))
     // row sets unchanged on both sides
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "catalog").get
+    assert(graft.storage.TxnCatalog.read(spark, root, "catalog").get
       .as[(Long, String)].collect().toSet
       === Set((1L, "IMG1"), (2L, "IMG2"), (3L, "IMG3")))
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "lineage").get
+    assert(graft.storage.TxnCatalog.read(spark, root, "lineage").get
       .as[(Long, Long)].collect().toSet
       === Set((101L, 1L), (102L, 2L), (103L, 3L)))
     // the pinned pre-compaction snapshot still serves the small batches
@@ -147,7 +147,7 @@ class StorageSpec extends GraftSuite {
       assert(!d.exists() || d.listFiles().isEmpty,
         s"compacted-away $t/$b must be reclaimed")
     }
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "catalog").get.count() === 4)
+    assert(graft.storage.TxnCatalog.read(spark, root, "catalog").get.count() === 4)
   }
 
   test("TwinCommit maintain: threshold-gated compaction, idempotent re-fold") {
@@ -172,7 +172,7 @@ class StorageSpec extends GraftSuite {
     assert(graft.storage.TxnCatalog.partitions(spark, root, "catalog")
       === graft.storage.TxnCatalog.partitions(spark, root, "lineage"))
     // rows survive the fold
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "catalog").get
+    assert(graft.storage.TxnCatalog.read(spark, root, "catalog").get
       .select("ID").as[Long].collect().toSet === Set(1L, 2L, 3L, 4L))
     // a later fold happily re-folds the previous compaction output
     for (i <- 5 to 7)
@@ -183,7 +183,7 @@ class StorageSpec extends GraftSuite {
     assert(again.isDefined && again != folded)
     assert(graft.storage.TwinCommit.committedBatches(spark, root, "catalog")
       === Seq(again.get))
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "lineage").get
+    assert(graft.storage.TxnCatalog.read(spark, root, "lineage").get
       .count() === 7)
   }
 
@@ -201,9 +201,9 @@ class StorageSpec extends GraftSuite {
     }
     assert(graft.storage.TwinCommit.committedBatches(spark, root, "catalog")
       === Seq("b1", "b2"))
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "catalog").get
+    assert(graft.storage.TxnCatalog.read(spark, root, "catalog").get
       .count() === 2)
-    assert(graft.storage.TwinCommit.readCommitted(spark, root, "lineage").get
+    assert(graft.storage.TxnCatalog.read(spark, root, "lineage").get
       .count() === 2)
     assert(graft.storage.TxnCatalog.currentTxn(spark, root) === Some(2L),
       "two appends must serialize onto two txns")
@@ -233,68 +233,70 @@ class StorageSpec extends GraftSuite {
   }
 
   test("VersionedTable: updateSnapshot is snapshot-atomic; torn overwrite invisible") {
-    val dir = tmp("vt")
-    val v1 = graft.storage.VersionedTable.overwrite(spark, dir, catalog)
-    assert(v1 === 1L)
-    assert(graft.storage.VersionedTable.readCurrent(spark, dir).get.count() === 4)
-    // S12 as a snapshot transaction: UPDATE ... WHERE publishes version 2
-    val v2 = graft.storage.VersionedTable.updateSnapshot(spark, dir)(cur =>
-      graft.ops.CatalogOps.updateWhere(cur, "ID", Seq(1L, 3L), "INDICE", lit("Z")))
-    assert(v2 === 2L)
-    val byId = graft.storage.VersionedTable.readCurrent(spark, dir).get
-      .select("ID", "INDICE").as[(Long, String)].collect().toMap
+    // the single-table snapshot overwrite, as TxnCatalog whole-table commits
+    val root = tmp("vt")
+    val TC = graft.storage.TxnCatalog
+    def cur() = TC.read(spark, root, "catalog").get
+    assert(TC.commit(spark, root, Seq("catalog" -> catalog)) === 1L)
+    assert(cur().count() === 4)
+    // S12 as a snapshot transaction: UPDATE ... WHERE over the committed
+    // table publishes txn 2, conditional on the txn it read
+    val t2 = TC.commit(spark, root, Seq("catalog" ->
+      graft.ops.CatalogOps.updateWhere(cur(), "ID", Seq(1L, 3L), "INDICE",
+        lit("Z"))), expectedTxn = Some(1L))
+    assert(t2 === 2L)
+    val byId = cur().select("ID", "INDICE").as[(Long, String)].collect().toMap
     assert(byId === Map(1L -> "Z", 2L -> "B", 3L -> "Z", 4L -> "D"))
-    // crash injection: the NEXT overwrite dies mid-write — data lands in
-    // v=3 but no marker is published
+    // crash injection: the NEXT commit dies mid-write — data lands in a
+    // v=3 staging dir but no manifest is published
     val poisoned = catalog.withColumn("INDICE",
       expr("raise_error('simulated crash') IS NULL").cast("string"))
     intercept[Exception] {
-      graft.storage.VersionedTable.overwrite(spark, dir, poisoned)
+      TC.commit(spark, root, Seq("catalog" -> poisoned))
     }
-    // readers still resolve version 2, bit-for-bit — the torn v=3 is
+    // readers still resolve txn 2, bit-for-bit — the torn v=3 is
     // invisible even if some of its files exist on disk
-    assert(graft.storage.VersionedTable.currentVersion(spark, dir) === Some(2L))
-    val after = graft.storage.VersionedTable.readCurrent(spark, dir).get
-      .select("ID", "INDICE").as[(Long, String)].collect().toMap
-    assert(after === byId)
-    // the retried overwrite clears the torn remnants and commits version 3
-    val v3 = graft.storage.VersionedTable.overwrite(spark, dir,
-      catalog.filter($"ID" =!= 4L))
-    assert(v3 === 3L)
-    assert(graft.storage.VersionedTable.readCurrent(spark, dir).get.count() === 3)
-    // vacuum keeps the current version readable, drops old data dirs and
-    // the torn v=3 orphan from the crashed attempt
-    graft.storage.VersionedTable.vacuum(spark, dir, keep = 1)
-    assert(graft.storage.VersionedTable.currentVersion(spark, dir) === Some(3L))
-    assert(graft.storage.VersionedTable.readCurrent(spark, dir).get.count() === 3)
-    val leftover = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.startsWith("v="))
+    assert(TC.currentTxn(spark, root) === Some(2L))
+    assert(cur().select("ID", "INDICE").as[(Long, String)].collect().toMap
+      === byId)
+    // the retried commit lands as txn 3
+    assert(TC.commit(spark, root, Seq("catalog" ->
+      catalog.filter($"ID" =!= 4L))) === 3L)
+    assert(cur().count() === 3)
+    // vacuum keeps the current txn readable, drops old data dirs and the
+    // torn v=3 orphan from the crashed attempt
+    TC.vacuum(spark, root, keep = 1)
+    assert(TC.currentTxn(spark, root) === Some(3L))
+    assert(cur().count() === 3)
+    val leftover = new java.io.File(s"$root/catalog").listFiles()
+      .map(_.getName).filter(_.startsWith("v="))
     assert(leftover.length === 1 && leftover.head.startsWith("v=3."),
       s"vacuum must keep only the current data dir, saw: ${leftover.toSeq}")
   }
 
   test("VersionedTable two-writer race: one commit survives, no committed data deleted") {
-    val dir = tmp("vtrace")
-    graft.storage.VersionedTable.overwrite(spark, dir, catalog) // v1
+    val root = tmp("vtrace")
+    val TC = graft.storage.TxnCatalog
+    TC.commit(spark, root, Seq("catalog" -> catalog)) // txn 1
     val winner = catalog.withColumn("INDICE", lit("WINNER"))
     val loser = catalog.withColumn("INDICE", lit("LOSER"))
-    // writer A finishes its staging write for v2, then writer B commits v2
-    // in the window before A publishes its marker — A must lose, throw,
+    // writer A finishes staging txn 2, then writer B commits txn 2 in the
+    // window before A's manifest CAS — A must lose with CommitConflict
     // and clean only its OWN staging dir
-    intercept[java.io.IOException] {
-      graft.storage.VersionedTable.overwriteHooked(spark, dir, loser) { () =>
-        graft.storage.VersionedTable.overwrite(spark, dir, winner)
+    intercept[graft.storage.CommitConflict] {
+      TC.commitHooked(spark, root, Seq("catalog" -> loser)) { () =>
+        TC.commit(spark, root, Seq("catalog" -> winner))
       }
     }
-    assert(graft.storage.VersionedTable.currentVersion(spark, dir) === Some(2L))
-    val back = graft.storage.VersionedTable.readCurrent(spark, dir).get
+    assert(TC.currentTxn(spark, root) === Some(2L))
+    val back = TC.read(spark, root, "catalog").get
       .select("INDICE").distinct().as[String].collect().toSeq
     assert(back === Seq("WINNER"),
-      "the surviving committed version must be the winner's, bit-for-bit")
+      "the surviving committed txn must be the winner's, bit-for-bit")
     // exactly one v=2 data dir remains (the winner's); the loser's staging
     // dir was removed by the loser itself, never the winner's by the loser
-    val v2dirs = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.startsWith("v=2."))
+    val v2dirs = new java.io.File(s"$root/catalog").listFiles()
+      .map(_.getName).filter(_.startsWith("v=2."))
     assert(v2dirs.length === 1, s"expected one surviving v=2 dir: ${v2dirs.toSeq}")
   }
 
@@ -1462,71 +1464,70 @@ class StorageSpec extends GraftSuite {
   }
 
   test("VersionedTable time travel: readVersion reads history inside the keep window") {
-    val dir = tmp("vttt")
-    graft.storage.VersionedTable.overwrite(spark, dir,
-      Seq((1L, "A")).toDF("ID", "INDICE"))
-    graft.storage.VersionedTable.overwrite(spark, dir,
-      Seq((1L, "B"), (2L, "C")).toDF("ID", "INDICE"))
-    assert(graft.storage.VersionedTable.versions(spark, dir) === Seq(1L, 2L))
-    assert(graft.storage.VersionedTable.readVersion(spark, dir, 1L)
+    val root = tmp("vttt")
+    val TC = graft.storage.TxnCatalog
+    TC.commit(spark, root, Seq("t" -> Seq((1L, "A")).toDF("ID", "INDICE")))
+    TC.commit(spark, root,
+      Seq("t" -> Seq((1L, "B"), (2L, "C")).toDF("ID", "INDICE")))
+    assert(TC.txns(spark, root) === Seq(1L, 2L))
+    assert(TC.snapshotAt(spark, root, 1L).read("t").get
       .select("INDICE").as[String].collect().toSeq === Seq("A"))
-    assert(graft.storage.VersionedTable.readCurrent(spark, dir).get.count() === 2)
+    assert(TC.read(spark, root, "t").get.count() === 2)
     intercept[IllegalArgumentException] {
-      graft.storage.VersionedTable.readVersion(spark, dir, 9L)
+      TC.snapshotAt(spark, root, 9L)
     }
     // vacuum trims the travel horizon
-    graft.storage.VersionedTable.vacuum(spark, dir, keep = 1)
-    assert(graft.storage.VersionedTable.versions(spark, dir) === Seq(2L))
+    TC.vacuum(spark, root, keep = 1)
+    assert(TC.txns(spark, root) === Seq(2L))
     intercept[IllegalArgumentException] {
-      graft.storage.VersionedTable.readVersion(spark, dir, 1L)
+      TC.snapshotAt(spark, root, 1L)
     }
   }
 
   test("vacuum retention window: young versions survive, aged ones reclaim") {
-    val dir = tmp("vtret")
-    graft.storage.VersionedTable.overwrite(spark, dir, catalog) // v1
-    graft.storage.VersionedTable.overwrite(spark, dir,          // v2
-      catalog.withColumn("INDICE", lit("B")))
-    // v2's marker is seconds old: with a 1h window, v1 must SURVIVE —
-    // a straggler reader that resolved v1 before v2 landed still reads it
-    graft.storage.VersionedTable.vacuum(spark, dir, keep = 1,
-      minAgeMs = 3600L * 1000)
-    val dirs1 = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.startsWith("v="))
+    val root = tmp("vtret")
+    val TC = graft.storage.TxnCatalog
+    TC.commit(spark, root, Seq("catalog" -> catalog)) // txn 1
+    TC.commit(spark, root,                              // txn 2
+      Seq("catalog" -> catalog.withColumn("INDICE", lit("B"))))
+    def dataDirs() = new java.io.File(s"$root/catalog").listFiles()
+      .map(_.getName).filter(_.startsWith("v="))
+    // txn 2's manifest is seconds old: with a 1h window, txn 1 must
+    // SURVIVE — a straggler reader that resolved it before txn 2 landed
+    // still reads it
+    TC.vacuum(spark, root, keep = 1, minAgeMs = 3600L * 1000)
+    val dirs1 = dataDirs()
     assert(dirs1.exists(_.startsWith("v=1.")) && dirs1.exists(_.startsWith("v=2.")),
       s"retention must keep the young predecessor: ${dirs1.toSeq}")
-    // age the successor's marker past the window: v1 is now reclaimable
-    val marker2 = new java.io.File(s"$dir/_versions/2")
-    assert(marker2.setLastModified(System.currentTimeMillis() - 7200L * 1000))
-    graft.storage.VersionedTable.vacuum(spark, dir, keep = 1,
-      minAgeMs = 3600L * 1000)
-    val dirs2 = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.startsWith("v="))
+    // age the successor's manifest past the window: txn 1 is reclaimable
+    val manifest2 = new java.io.File(s"$root/_txns/2")
+    assert(manifest2.setLastModified(System.currentTimeMillis() - 7200L * 1000))
+    TC.vacuum(spark, root, keep = 1, minAgeMs = 3600L * 1000)
+    val dirs2 = dataDirs()
     assert(dirs2.length === 1 && dirs2.head.startsWith("v=2."),
       s"aged version must reclaim: ${dirs2.toSeq}")
-    assert(graft.storage.VersionedTable.readCurrent(spark, dir).get
+    assert(TC.read(spark, root, "catalog").get
       .select("INDICE").distinct().as[String].collect().toSeq === Seq("B"))
   }
 
   test("vacuum retention window shields a possibly-still-writing loser's staging dir") {
-    val dir = tmp("vtorph")
-    graft.storage.VersionedTable.overwrite(spark, dir, catalog) // v1
+    val root = tmp("vtorph")
+    val TC = graft.storage.TxnCatalog
+    TC.commit(spark, root, Seq("catalog" -> catalog)) // txn 1
     // simulate a race loser whose Spark write is STILL RUNNING after the
-    // winner committed v1: an unreferenced young staging dir at a committed
-    // version number
-    val orphan = new java.io.File(s"$dir/v=1.loser123")
+    // winner committed txn 1: an unreferenced young staging dir at a
+    // committed txn number
+    val orphan = new java.io.File(s"$root/catalog/v=1.loser123")
     assert(orphan.mkdirs())
-    graft.storage.VersionedTable.vacuum(spark, dir, keep = 1,
-      minAgeMs = 3600L * 1000)
+    TC.vacuum(spark, root, keep = 1, minAgeMs = 3600L * 1000)
     assert(orphan.exists(),
       "a young orphan staging dir must survive the retention window " +
         "(its writer may still be mid-job)")
     // age it past the window: now it is reclaimable
     assert(orphan.setLastModified(System.currentTimeMillis() - 7200L * 1000))
-    graft.storage.VersionedTable.vacuum(spark, dir, keep = 1,
-      minAgeMs = 3600L * 1000)
+    TC.vacuum(spark, root, keep = 1, minAgeMs = 3600L * 1000)
     assert(!orphan.exists(), "an aged orphan staging dir must reclaim")
-    assert(graft.storage.VersionedTable.readCurrent(spark, dir).get.count() === 4)
+    assert(TC.read(spark, root, "catalog").get.count() === 4)
   }
 
   test("S10: indices.csv sink writes header + data rows") {

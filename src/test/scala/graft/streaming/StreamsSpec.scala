@@ -117,8 +117,8 @@ class StreamsSpec extends GraftSuite {
       q.processAllAvailable()
       src.addData(Seq(Ev(ts(3), 3, "click", 3.0)))
       q.processAllAvailable()
-      val cat = graft.storage.TwinCommit.readCommitted(spark, root, "catalog").get
-      val lin = graft.storage.TwinCommit.readCommitted(spark, root, "lineage").get
+      val cat = graft.storage.TxnCatalog.read(spark, root, "catalog").get
+      val lin = graft.storage.TxnCatalog.read(spark, root, "lineage").get
       assert(cat.count() === 3 && lin.count() === 3)
       assert(graft.storage.TwinCommit.committedBatches(spark, root, "catalog").size === 2)
     } finally q.stop()
@@ -147,10 +147,10 @@ class StreamsSpec extends GraftSuite {
       assert(batches.size <= 2, s"maintenance must bound batches: $batches")
       assert(graft.storage.TxnCatalog.partitions(spark, root, "catalog")
         === graft.storage.TxnCatalog.partitions(spark, root, "lineage"))
-      val cat = graft.storage.TwinCommit.readCommitted(spark, root, "catalog").get
+      val cat = graft.storage.TxnCatalog.read(spark, root, "catalog").get
       assert(cat.select("ID").as[Long].collect().toSet
         === Set(1L, 2L, 3L, 4L, 5L))
-      assert(graft.storage.TwinCommit.readCommitted(spark, root, "lineage").get
+      assert(graft.storage.TxnCatalog.read(spark, root, "lineage").get
         .count() === 5)
     } finally q.stop()
   }
@@ -254,8 +254,8 @@ class StreamsSpec extends GraftSuite {
     def key(r: org.apache.spark.sql.Row) = (
       r.getAs[String]("path"), r.getAs[String]("method"),
       r.getAs[String]("INDICE"), r.getAs[String]("RUTA_RESULTADO"))
-    val streamed = graft.storage.TwinCommit
-      .readCommitted(spark, root, "catalog").get.collect().map(key).toSet
+    val streamed = graft.storage.TxnCatalog
+      .read(spark, root, "catalog").get.collect().map(key).toSet
     val batchAll = graft.pipelines.Pipelines
       .ingestClassify(toImages((b1 ++ b2).toDF()), predios, 2.0)
       .collect().map(key).toSet
@@ -265,7 +265,7 @@ class StreamsSpec extends GraftSuite {
       streamed.exists(_._2 === "unclassifiable"))
     // lineage landed atomically with the catalog rows: one row per
     // LOCATED image, both batches committed
-    val lin = graft.storage.TwinCommit.readCommitted(spark, root, "lineage").get
+    val lin = graft.storage.TxnCatalog.read(spark, root, "lineage").get
     assert(lin.count() === 3 &&
       lin.select("ID_EJECUCION").distinct().as[Long].collect().toSeq === Seq(7L))
     assert(graft.storage.TwinCommit.committedBatches(spark, root, "catalog").size === 2)
@@ -445,9 +445,7 @@ class StreamsSpec extends GraftSuite {
     // batch operator over the whole stream — boilerplate repeated across
     // batches survives only in its first doc
     implicit val sqlCtx = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("pdedup_out")
-      .toFile.getAbsolutePath
-    val stateDir = java.nio.file.Files.createTempDirectory("pdedup_state")
+    val root = java.nio.file.Files.createTempDirectory("pdedup_lake")
       .toFile.getAbsolutePath
     // exactly 8 words => one aligned paragraph window when leading a doc
     val boiler = "all rights reserved contact us terms of service"
@@ -457,14 +455,14 @@ class StreamsSpec extends GraftSuite {
       (4L, "entirely fresh paragraphs in the final doc"))
     val src = MemoryStream[(Long, String)]
     val q = src.toDF().toDF("doc_id", "text").writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        Streams.paragraphDedupBatchStep(batch, "doc_id", "text",
-          outDir, stateDir)
+      (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        Streams.paragraphDedupBatchStep(batch, id, "doc_id", "text",
+          root, "out", "paras")
     }.start()
     try {
       Seq(b1, b2).foreach { b => src.addData(b); q.processAllAvailable() }
     } finally q.stop()
-    val streamed = spark.read.parquet(outDir)
+    val streamed = graft.storage.TxnCatalog.read(spark, root, "out").get
       .as[(Long, Long, Long, String)].collect().toSet
     val batchAll = graft.ops.Dedup.paragraphDedup(
         (b1 ++ b2).toDF("doc_id", "text"), "doc_id", "text")
@@ -486,9 +484,7 @@ class StreamsSpec extends GraftSuite {
     // "drop any doc that near-dup-matches a lower-id doc" over the
     // concatenated stream
     implicit val sqlCtx = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("mhdedup_out")
-      .toFile.getAbsolutePath
-    val stateDir = java.nio.file.Files.createTempDirectory("mhdedup_state")
+    val root = java.nio.file.Files.createTempDirectory("mhdedup_lake")
       .toFile.getAbsolutePath
     val b1 = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
@@ -500,14 +496,14 @@ class StreamsSpec extends GraftSuite {
       (6L, "omega beta gamma delta epsilon eta")) // J=0.6 vs DROPPED 2 only (1/3 vs 1)
     val src = MemoryStream[(Long, String)]
     val q = src.toDF().toDF("doc_id", "text").writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        Streams.minHashDedupBatchStep(batch, "doc_id", "text",
-          outDir, stateDir)
+      (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        Streams.minHashDedupBatchStep(batch, id, "doc_id", "text",
+          root, "out", "docs")
     }.start()
     try {
       Seq(b1, b2).foreach { b => src.addData(b); q.processAllAvailable() }
     } finally q.stop()
-    val streamed = spark.read.parquet(outDir)
+    val streamed = graft.storage.TxnCatalog.read(spark, root, "out").get
       .as[(Long, String)].collect().toSet
     val all = (b1 ++ b2).toDF("doc_id", "text")
     val droppedAll = graft.ops.Dedup.minHashLshPairs(all, "doc_id", "text",
@@ -519,6 +515,80 @@ class StreamsSpec extends GraftSuite {
     // doc 6 near-dup-matches ONLY the already-dropped doc 2 — dropping it
     // requires the state to hold every seen doc, not just survivors
     assert(streamed.map(_._1) === Set(1L, 4L))
+  }
+
+  /** Both dedup steps over one lake root, each with its own output and
+    * state tables, keyed by name. */
+  private def dedupSteps(root: String)
+      : Seq[(String, (org.apache.spark.sql.DataFrame, Long) => Unit)] = Seq(
+    "paras" -> ((b, id) => Streams.paragraphDedupBatchStep(b, id, "doc_id",
+      "text", root, "paras_out", "paras")),
+    "docs" -> ((b, id) => Streams.minHashDedupBatchStep(b, id, "doc_id",
+      "text", root, "docs_out", "docs")))
+
+  private val dedupBatches = Seq(
+    Seq((1L, "all rights reserved contact us terms of service first"),
+      (2L, "unique prose of document two stands fully alone")),
+    Seq((3L, "all rights reserved contact us terms of service third"),
+      (4L, "entirely fresh paragraphs in the final doc")))
+
+  /** Output and state of one step's tables, order-free. */
+  private def dedupTables(root: String, name: String): (Seq[String], Seq[String]) = {
+    def rows(t: String) = graft.storage.TxnCatalog.read(spark, root, t)
+      .toSeq.flatMap(_.collect().map(_.toString)).sorted
+    (rows(s"${name}_out"), rows(name))
+  }
+
+  test("streaming dedup steps: a redelivered batch id leaves output and state unchanged") {
+    val root = java.nio.file.Files.createTempDirectory("dedup_redeliver")
+      .toFile.getAbsolutePath
+    val frames = dedupBatches.map(_.toDF("doc_id", "text"))
+    dedupSteps(root).foreach { case (name, step) =>
+      frames.zipWithIndex.foreach { case (b, id) => step(b, id.toLong) }
+      val landed = dedupTables(root, name)
+      val txn = graft.storage.TxnCatalog.currentTxn(spark, root)
+      // foreachBatch redelivers a batch whose commit landed but whose
+      // checkpoint did not: the ledger refuses it, and an older id too
+      step(frames(1), 1L)
+      step(frames(0), 0L)
+      assert(dedupTables(root, name) === landed, name)
+      assert(graft.storage.TxnCatalog.currentTxn(spark, root) === txn, name)
+    }
+    val (paraOut, paraState) = dedupTables(root, "paras")
+    assert(paraOut.size === 4)
+    assert(paraState.size === paraState.distinct.size,
+      "the seen-set holds one row per paragraph")
+    assert(dedupTables(root, "docs")._2.size === 4)
+  }
+
+  test("streaming dedup steps: a failed commit lands nothing, its replay lands once") {
+    val root = java.nio.file.Files.createTempDirectory("dedup_fail")
+      .toFile.getAbsolutePath
+    val clean = java.nio.file.Files.createTempDirectory("dedup_clean")
+      .toFile.getAbsolutePath
+    val frames = dedupBatches.map(_.toDF("doc_id", "text"))
+    dedupSteps(clean).foreach { case (_, step) =>
+      frames.zipWithIndex.foreach { case (b, id) => step(b, id.toLong) }
+    }
+    dedupSteps(root).foreach { case (name, step) =>
+      step(frames(0), 0L)
+      val afterFirst = dedupTables(root, name)
+      val txn = graft.storage.TxnCatalog.currentTxn(spark, root)
+      // a plain file where batch 1's state partition is staged: the
+      // output stages first, then the state write fails inside the commit
+      val block = new java.io.File(s"$root/$name/batch=b1")
+      assert(block.createNewFile())
+      intercept[Exception](step(frames(1), 1L))
+      assert(dedupTables(root, name) === afterFirst, name)
+      assert(graft.storage.TxnCatalog.currentTxn(spark, root) === txn, name)
+      assert(graft.storage.TxnCatalog.lastLedgerVersion(spark, root, name,
+        name) === Some(0L), name)
+      // the replay lands the batch once, exactly as an unbroken run did
+      assert(block.delete())
+      step(frames(1), 1L)
+      step(frames(1), 1L)
+      assert(dedupTables(root, name) === dedupTables(clean, name), name)
+    }
   }
 
   test("the same transforms run on batch DataFrames (unified model)") {
