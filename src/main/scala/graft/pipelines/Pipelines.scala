@@ -5,12 +5,14 @@ import graft.model.Catalog
 import graft.ops.CatalogOps
 import graft.sources.{BinarySource, Exif}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline compositions (SURVEY.md §3, intended semantics per
-  * §2.3): E1 ingest-classify-catalog and E3 model publication, as pure
-  * DataFrame transforms. I/O (parquet/CSV/blob writes) stays at the caller —
-  * every function here is testable without a filesystem.
+  * §2.3): E1 ingest-classify-catalog and E3 model publication, as
+  * DataFrame transforms (`catalogAppend`'s numbered rows are held in
+  * memory once first read). I/O (parquet/CSV/blob writes) stays at the caller — every
+  * function here is testable without a filesystem.
   */
 object Pipelines {
 
@@ -66,17 +68,34 @@ object Pipelines {
 
   /** E1 stage 7 / S11: classified rows → (catalog rows, lineage rows) with
     * deterministic batch keys; idempotent on RUTA_RESULTADO (J5 — the
-    * reference re-inserts blindly). Returns (catalogAppend, lineageAppend). */
+    * reference re-inserts blindly): a row whose key the catalog holds is
+    * dropped, and so is every repeat of a key within the batch (the same
+    * bytes delivered twice), so each image is cataloged once. Rows with
+    * no key (the unclassifiable sentinel) each stay. IDs are
+    * `max(ID) + row_number()` ordered by RUTA_RESULTADO
+    * ([[CatalogOps.assignIds]]). The numbered rows are local-
+    * checkpointed, lazily: the first read of either returned frame
+    * materializes them, so the anti-join and the window run once
+    * however many times the frames are read, and both carry the same
+    * FECHA. Returns (catalogAppend, lineageAppend). */
   def catalogAppend(
       catalog: DataFrame, lineage: DataFrame, classified: DataFrame,
       runId: Long, tipoImg: Int, proceso: Int): (DataFrame, DataFrame) = {
     val fresh = CatalogOps.newRowsOnly(catalog, classified, "RUTA_RESULTADO")
-    val keyed = CatalogOps.assignIds(catalog, "ID", fresh, "RUTA_RESULTADO")
+    // the repeats of a key sit next to it in the window assignIds numbers
+    // by, so dropping them reuses its exchange and sort
+    val key = col("RUTA_RESULTADO")
+    val once = fresh
+      .withColumn("__prev", lag(key, 1).over(Window.orderBy(key)))
+      .filter(key.isNull || !(col("__prev") <=> key))
+      .drop("__prev")
+    val keyed = CatalogOps.assignIds(catalog, "ID", once, "RUTA_RESULTADO")
       .select(
         col("ID"), col("INDICE"), col("CODIGO"), col("NOMBRE_PREDIO"),
         col("SECCION"), col("ESPECIE"), col("APL").cast("double").as("APL"),
         lit(tipoImg).as("ID_TIPO_IMG"), lit(proceso).as("ID_PROCESO"),
         col("RUTA_RESULTADO"), current_timestamp().as("FECHA"))
+      .localCheckpoint(false)
     val lin = keyed.select(lit(runId).as("ID_EJECUCION"),
       col("ID").as("ID_IMAGEN_FUENTE"))
     (keyed, lin)

@@ -2,6 +2,7 @@ package graft.storage
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Multi-table snapshot transactions over bare Parquet — the engine's
   * one commit protocol: a writer that must update one or SEVERAL tables
@@ -386,51 +387,102 @@ object TxnCatalog {
   private val propsDirCache =
     scala.collection.concurrent.TrieMap.empty[String, Map[String, String]]
 
-  /** Process-wide PARQUET-SCHEMA cache for manifest-named entry dirs,
-    * keyed by the sorted path set. Committed entry dirs are immutable,
-    * so the (possibly mergeSchema-unioned) schema of a path set can
-    * never change under the cache — and a cache hit turns Spark's
-    * per-read schema-INFERENCE job (a cluster round trip per
-    * `spark.read.parquet` call, paid even for KB files) into a plain
-    * map lookup. Data reads still run as normal jobs; only the
-    * footer-sniffing prelude is skipped. */
+  /** Process-wide FOOTER-SCHEMA cache at entry grain: per committed
+    * entry dir, its qualified path and the distinct Spark schemas of
+    * its parquet footers in file order (one, for a dir a single write
+    * job staged). Committed entry dirs are immutable (every write is
+    * temp+rename into a fresh `v=<txn>.<nonce>` dir), so a dir's
+    * footers can never change under the cache, and resolving a table's
+    * schema at a new txn reads only the footers of the entries that txn
+    * added. */
   private val pathSchemaCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.types.StructType]
+    .empty[String, (String, Seq[StructType])]
 
-  /** `spark.read.parquet(paths)` with the inferred schema cached by
-    * path set; `mergeSchema` semantics are preserved because a cached
-    * multi-path schema IS the union schema the first read inferred
-    * (explicit-schema reads fill missing columns with nulls, exactly
-    * as mergeSchema rendered them). */
+  /** `spark.read.parquet(paths)` (with `mergeSchema` across several
+    * paths) resolving its schema from [[pathSchemaCache]] instead of
+    * Spark's schema-INFERENCE job — a cluster round trip per call, paid
+    * even for KB files. Uncached dirs read their footers on the driver
+    * (zero jobs, like [[footerRowCount]]). The schema folds exactly as
+    * Spark's inference would build it: one path takes its first file's
+    * schema, several merge every file's in path order with Spark's
+    * merge, and WIDTH-mixed footers (int32 beside int64, float beside
+    * double, decimal growth — the layout ALTER COLUMN TYPE widening and
+    * a widened append produce), which Spark's merge refuses but its
+    * parquet READERS up-cast, merge per path with [[widenMergeSchemas]].
+    * A dir that is not plain parquet files (subdirectories, summary
+    * files, no data file) leaves the whole read to Spark's inference.
+    * Explicit-schema reads fill missing columns with nulls, exactly as
+    * mergeSchema renders them. */
   private[storage] def readParquetCached(spark: SparkSession,
       paths: Seq[String]): DataFrame = {
-    if (pathSchemaCache.size > 8192) pathSchemaCache.clear() // bounded
-    val key = paths.sorted.mkString("\n")
-    pathSchemaCache.get(key) match {
+    if (pathSchemaCache.size > 65536) pathSchemaCache.clear() // bounded
+    val sqlConf = spark.sessionState.conf
+    lazy val hadoopConf = spark.sessionState.newHadoopConf()
+    // the settings Spark's inference reads footers under
+    lazy val converter = new org.apache.spark.sql.execution.datasources
+      .parquet.ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = sqlConf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = sqlConf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = sqlConf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = sqlConf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation =
+          sqlConf.parquetReaderRespectUnknownTypeAnnotation)
+    val dirs = paths.distinct.map(p => p -> pathSchemaCache.get(p).orElse {
+      val read = footerSchemas(hadoopConf, converter, p)
+      read.foreach(pathSchemaCache.putIfAbsent(p, _))
+      read
+    }).toMap
+    val schema =
+      if (dirs.values.exists(_.isEmpty)) None
+      else if (paths.sizeIs == 1 && !sqlConf.isParquetSchemaMergingEnabled)
+        dirs(paths.head).map(_._2.head)
+      else {
+        val ordered = dirs.values.flatten.toSeq
+          .sortBy(_._1 + "/").flatMap(_._2).distinct
+        try Some(ordered.reduceLeft(
+          org.apache.spark.sql.GraftSqlBridge.mergeFooterSchemas(spark, _, _)))
+        catch {
+          case e: org.apache.spark.SparkException =>
+            Some(paths.map(p => dirs(p).get._2.head)
+              .reduceLeft(widenMergeSchemas(_, _, e)))
+        }
+      }
+    schema match {
       case Some(sc) => spark.read.schema(sc).parquet(paths: _*)
       case None =>
-        val df =
-          try {
-            if (paths.sizeIs == 1) spark.read.parquet(paths.head)
-            else spark.read.option("mergeSchema", "true").parquet(paths: _*)
-          } catch {
-            // WIDTH-mixed footers (int32 beside int64, float beside
-            // double — the layout ALTER COLUMN TYPE widening and a
-            // widened append both produce): Spark's footer merge
-            // refuses, but its parquet READERS up-cast fine when the
-            // requested schema is the wider type. Merge the per-path
-            // schemas ourselves with numeric widening and read
-            // explicitly; the union caches like any other pathset.
-            case e: org.apache.spark.SparkException
-                if e.getMessage != null &&
-                  e.getMessage.contains("CANNOT_MERGE_SCHEMAS") =>
-              val sc = paths.map(p => spark.read.parquet(p).schema)
-                .reduceLeft(widenMergeSchemas(_, _, e))
-              spark.read.schema(sc).parquet(paths: _*)
-          }
-        pathSchemaCache.putIfAbsent(key, df.schema)
-        df
+        if (paths.sizeIs == 1) spark.read.parquet(paths.head)
+        else spark.read.option("mergeSchema", "true").parquet(paths: _*)
     }
+  }
+
+  /** One entry dir's qualified path and the distinct Spark schemas of
+    * its parquet footers, in file order — read as Spark's inference
+    * reads a footer (its stored Spark schema, else the parquet schema
+    * converted). None when the dir is not plain parquet files: it holds
+    * a subdirectory, a summary file or no data file. Data files are the
+    * ones Spark's listing keeps (not hidden by a leading `_` or `.`). */
+  private def footerSchemas(conf: org.apache.hadoop.conf.Configuration,
+      converter: org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter,
+      dir: String): Option[(String, Seq[StructType])] = {
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    val listed = fs.listStatus(path).toSeq
+    def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) ||
+      n.startsWith(".") || n.endsWith("._COPYING_")
+    val names = listed.map(_.getPath.getName)
+    val data = listed.filter(st => st.isFile && !hidden(st.getPath.getName))
+      .sortBy(_.getPath.toString)
+    if (listed.exists(_.isDirectory) || data.isEmpty ||
+        names.exists(n => n == "_metadata" || n == "_common_metadata")) None
+    else Some(fs.makeQualified(path).toString -> data.map { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      val footer = try new Footer(st.getPath, r.getFooter) finally r.close()
+      ParquetFileFormat.readSchemaFromFooter(footer, converter)
+    }.distinct)
   }
 
   /** Union `a` and `b` by field name, resolving same-name type clashes
@@ -2002,9 +2054,9 @@ object TxnCatalog {
     * initial load would schedule 10 000 jobs), while this runs
     *  1. ONE `partitionBy` write job staging every partition's files,
     *  2. ONE grouped aggregate over the STAGED files measuring
-    *     per-partition stats + row counts (the grouped form of the
-    *     per-entry measurer, [[measureStaged]] — one more grouped job
-    *     when Bloom columns are configured),
+    *     per-partition stats + row counts (the per-entry path's
+    *     [[StatPlan]], grouped by [[measureStaged]] — one more grouped
+    *     job when Bloom columns are configured),
     *  3. driver-side renames moving each staged dir into place, and
     *  4. the one manifest CAS of [[publish]].
     * Partitions are named `<keyCol>=<value>` with Hive path escaping;
@@ -2120,10 +2172,12 @@ object TxnCatalog {
       // zero groups staged (every input row deleted/masked): nothing to
       // measure or move — the caller decides what an empty staging means
       if (!f.listStatus(stagingDir).exists(_.isDirectory)) return Map.empty
-      // Everything below reads the STAGED files, never the input frame
-      // again: a nondeterministic (or concurrently-changing) input would
-      // otherwise publish stats/row counts/constraint verdicts describing
-      // a DIFFERENT evaluation than the bytes written.
+      // Constraints and stats are measured over the STAGED files, never
+      // the input frame again: a nondeterministic (or concurrently-
+      // changing) input would otherwise publish stats/row counts/
+      // constraint verdicts describing a DIFFERENT evaluation than the
+      // bytes written. (The per-entry path gets the same guarantee by
+      // observing the write job itself; `observe` cannot group.)
       // recursiveFileLookup skips Hive partition discovery (no type
       // re-inference on the key); keyCol is a data column by contract, so
       // the staged read carries it at its original type.
@@ -2138,18 +2192,18 @@ object TxnCatalog {
       // hive-escaped name gets its '%' URI-escaped once more), so the
       // captured parent decodes driver-side via java.net.URI back to the
       // exact on-disk dir name the move loop sees.
+      val plan = statPlan(stagedDf.schema, tblProps, load.statsColumns,
+        load.bloomColumns)
       val measured = load.partNameOf match {
         case Some(_) =>
-          measureStaged(stagedDf, tblProps, load.statsColumns,
-            load.bloomColumns, Some(regexp_extract(
-              col("_metadata.file_path"), "^(.*)/[^/]+$", 1)))
+          measureStaged(stagedDf, plan, Some(regexp_extract(
+            col("_metadata.file_path"), "^(.*)/[^/]+$", 1)))
             .map { case (k, v) => k.map { uri =>
               val p = new java.net.URI(uri).getPath
               p.substring(p.lastIndexOf('/') + 1).stripPrefix(bulkKey + "=")
             } -> v }
         case None =>
-          measureStaged(stagedDf, tblProps, load.statsColumns,
-            load.bloomColumns, Some(load.groupKey.cast("string")))
+          measureStaged(stagedDf, plan, Some(load.groupKey.cast("string")))
       }
       // 3. move each staged key dir into its partition slot
       val unescape =
@@ -2190,10 +2244,10 @@ object TxnCatalog {
   private[storage] val RwPartCol = "__graft_rw_part"
 
   /** How many partitions a rewrite must touch before the O(1)-jobs bulk
-    * path beats the per-entry path (2 Spark jobs per partition): below
-    * this, per-entry staging is simpler; above it,
-    * per-partition scheduling overhead dominates — a 10 000-partition
-    * ALTER/DELETE/UPDATE rewrite would otherwise launch 20 000 driver
+    * path beats the per-entry path (a write job per partition, stats
+    * observed on it): below this, per-entry staging is simpler; above
+    * it, per-partition scheduling overhead dominates — a 10 000-partition
+    * ALTER/DELETE/UPDATE rewrite would otherwise launch 10 000 driver
     * round trips. */
   private[storage] val BulkRewriteThreshold = 4
 
@@ -2433,7 +2487,7 @@ object TxnCatalog {
           expectedTxn = Some(snap.txn))(() => ())
       case _ if touched.sizeIs > BulkRewriteThreshold =>
         // many partitions: ONE funnel read + ONE staged write + ONE
-        // grouped stats (+ bloom) pass instead of 2 jobs per
+        // grouped stats (+ bloom) pass instead of a job per
         // partition; fully-emptied partitions drop from the manifest
         rewritePartitionsBulk(spark, root, table, snap, touched,
           transform = survivors,
@@ -2522,7 +2576,7 @@ object TxnCatalog {
       case _ if touched.sizeIs > BulkRewriteThreshold &&
           condRefs.forall(tableSchema.fieldNames.contains) =>
         // many partitions: one funnel read + staged write + grouped
-        // stats instead of 2 jobs per partition. Partitions whose
+        // stats instead of a job per partition. Partitions whose
         // files lack a condition column rewrite as no-ops here (the
         // NULL condition matches nothing) where the per-entry path
         // skips them — same values, re-emitted to CDC per the
@@ -2902,7 +2956,7 @@ object TxnCatalog {
     if (affected.sizeIs > BulkRewriteThreshold)
       // many affected partitions: ONE funnel read (deletes subtract
       // inside it) + one staged write + one grouped stats (+ bloom)
-      // pass instead of 2 jobs per partition; the delete entries drop
+      // pass instead of a job per partition; the delete entries drop
       // in the same txn, and a fully-emptied partition drops too
       rewritePartitionsBulk(spark, root, table, snap, affected,
         transform = identity, statsColumns = statsCols,
@@ -3722,57 +3776,45 @@ object TxnCatalog {
       })).filter(_._2.nonEmpty).toMap
   }
 
-  /** The stats measurer every commit path shares, run on STAGED data
-    * files (read back, so the stats describe exactly the bytes a reader
-    * will scan — a nondeterministic input cannot publish stats that
-    * disagree with the written data, and MetadataOnlyAgg answers
-    * count/min/max from them as exact). Measures the row count and, per
-    * column of `cols`, `bloomCols` and the table's declared
-    * [[StatsColumnsProp]] / [[BloomColumnsProp]] columns: min/max cast
-    * to string, the null count and, for integral/decimal columns, the
-    * exact sum (see sumScaleOf). One global aggregate without `key`, one
-    * `groupBy(key)` aggregate with it; results are keyed by the group's
-    * string key (None for the null group, and for the global result).
-    * Columns absent from the schema, of un-stat-able types, or all-null
-    * record nothing — readers treat a missing stat as "may contain
-    * anything". Bloom columns get a Bloom filter from a second aggregate
-    * of the same shape. */
-  private def measureStaged(staged: DataFrame, props: Map[String, String],
-      cols: Seq[String], bloomCols: Seq[String],
-      key: Option[org.apache.spark.sql.Column])
-      : Map[Option[String], (Map[String, ColStat], Long)] = {
-    import org.apache.spark.sql.{Column, GraftSqlBridge, Row}
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.functions.{col, count, lit, max, min, try_sum,
-      unix_micros}
+  /** The one definition of what an entry's stats are, shared by every
+    * commit path: the row count and, per column of `cols`, `bloomCols`
+    * and the table's declared [[StatsColumnsProp]] / [[BloomColumnsProp]]
+    * columns present in `schema` with a stat kind ([[statKinds]]):
+    * min/max cast to string, the non-null count and, for
+    * integral/decimal columns, the exact sum (see sumScaleOf).
+    * [[aggregates]] is the aggregate list, [[decode]] turns one result
+    * row of it into `ColStat`s. Where it is evaluated is the caller's
+    * choice — observed on the write job ([[publish]]'s per-entry path),
+    * or grouped over staged files ([[measureStaged]]) — and either way
+    * it describes the bytes written. Columns absent from the schema, of
+    * un-stat-able types, or all-null record nothing — readers treat a
+    * missing stat as "may contain anything". */
+  private final case class StatPlan(kinds: Map[String, String],
+      sumScales: Map[String, Int], bloomCfg: Seq[String]) {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{col, count, lit, max, min,
+      try_sum, unix_micros}
     import org.apache.spark.sql.types.DecimalType
-    val statCols = (cols ++ propColumns(props, StatsColumnsProp)).distinct
-    val bloomCfg = (bloomCols ++ propColumns(props, BloomColumnsProp)).distinct
-    val kinds = statKinds(staged.schema, statCols ++ bloomCfg)
-    def aggregate(aggs: Seq[Column]): Map[Option[String], Row] = key match {
-      case Some(k) =>
-        staged.groupBy(k.as("key:")).agg(aggs.head, aggs.tail: _*)
-          .collect().map(r => Option(r.getAs[String]("key:")) -> r).toMap
-      case None => Map(None -> staged.agg(aggs.head, aggs.tail: _*).head())
+
+    def aggregates: Seq[Column] = {
+      // timestamps are measured in micros-since-epoch: an integer
+      // min/max compares exactly, where the rendered-string form would
+      // be session-zone- and fraction-format-sensitive
+      def m(c: String) =
+        if (kinds(c) == "t") unix_micros(col(c)) else col(c)
+      count(lit(1)).as("rows:") +:
+        (kinds.keys.toSeq.sorted.flatMap(c =>
+          Seq(min(m(c)).cast("string").as(s"min:$c"),
+              max(m(c)).cast("string").as(s"max:$c"),
+              count(col(c)).as(s"cnt:$c"))) ++
+          sumScales.toSeq.sortBy(_._1).map { case (c, sc) =>
+            try_sum(col(c).cast(DecimalType(38, sc)))
+              .cast("string").as(s"sum:$c")
+          })
     }
-    // timestamps are measured in micros-since-epoch: an integer min/max
-    // compares exactly, where the rendered-string form would be
-    // session-zone- and fraction-format-sensitive
-    def m(c: String) =
-      if (kinds(c) == "t") unix_micros(col(c)) else col(c)
-    val sumScales: Map[String, Int] = kinds.keys.toSeq
-      .flatMap(c => sumScaleOf(staged.schema(c).dataType).map(c -> _)).toMap
-    val aggs = count(lit(1)).as("rows:") +:
-      (kinds.keys.toSeq.sorted.flatMap(c =>
-        Seq(min(m(c)).cast("string").as(s"min:$c"),
-            max(m(c)).cast("string").as(s"max:$c"),
-            count(col(c)).as(s"cnt:$c"))) ++
-        sumScales.toSeq.sortBy(_._1).map { case (c, sc) =>
-          try_sum(col(c).cast(DecimalType(38, sc)))
-            .cast("string").as(s"sum:$c")
-        })
-    val measured = aggregate(aggs).map { case (k, row) =>
+
+    /** One result row of [[aggregates]] as (stats, row count). */
+    def decode(row: org.apache.spark.sql.Row): (Map[String, ColStat], Long) = {
       val rows = row.getAs[Long]("rows:")
       val stats = kinds.flatMap { case (c, kind) =>
         (Option(row.getAs[String](s"min:$c")),
@@ -3787,27 +3829,79 @@ object TxnCatalog {
           case _ => None
         }
       }
-      k -> ((stats, rows))
+      (stats, rows)
     }
-    // Blooms stay n/s-only: a timestamp probe's string rendering is not
-    // canonical across callers, so membership would be unreliable.
-    // Spark's BloomFilterAggregate hashes each value's canonical
-    // rendering — strings raw, numerics via DECIMAL(38,18), the one
-    // rendering a driver-side probe can reproduce exactly whatever the
-    // column's source type (see bloomProbeRendering); out-of-range
-    // values null out of the cast AND out of any exact probe, so both
-    // sides stay conservative together. It serializes through the same
-    // sketch writeTo format the manifest's BloomV2 payloads use. Its
-    // capacity must be a literal: the column's largest measured non-null
-    // count over the groups (smaller groups just get a lower FPP), sized
-    // as BloomMinCapacity documents. All-null columns get none.
-    val nonNull: Map[String, Long] = bloomCfg
+  }
+
+  /** The [[StatPlan]] of a commit to a table with `props` writing
+    * `schema`, measuring `cols` and Blooms on `bloomCols`. */
+  private def statPlan(schema: StructType,
+      props: Map[String, String], cols: Seq[String],
+      bloomCols: Seq[String]): StatPlan = {
+    val statCols = (cols ++ propColumns(props, StatsColumnsProp)).distinct
+    val bloomCfg = (bloomCols ++ propColumns(props, BloomColumnsProp)).distinct
+    val kinds = statKinds(schema, statCols ++ bloomCfg)
+    StatPlan(kinds, kinds.keys.toSeq
+      .flatMap(c => sumScaleOf(schema(c).dataType).map(c -> _)).toMap,
+      bloomCfg)
+  }
+
+  /** `staged`'s result of `aggs`: one global row without `key`, one row
+    * per `groupBy(key)` group with it, keyed by the group's string key
+    * (None for the null group, and for the global result). */
+  private def aggregateBy(staged: DataFrame,
+      aggs: Seq[org.apache.spark.sql.Column],
+      key: Option[org.apache.spark.sql.Column])
+      : Map[Option[String], org.apache.spark.sql.Row] = key match {
+    case Some(k) =>
+      staged.groupBy(k.as("key:")).agg(aggs.head, aggs.tail: _*)
+        .collect().map(r => Option(r.getAs[String]("key:")) -> r).toMap
+    case None => Map(None -> staged.agg(aggs.head, aggs.tail: _*).head())
+  }
+
+  /** [[StatPlan]] evaluated over STAGED data files — the grouped bulk
+    * path ([[stageBulk]]; `observe` cannot group) and the measurement
+    * of existing dirs ([[entryStats]]). One aggregate without `key`,
+    * one `groupBy(key)` aggregate with it, then [[withBlooms]]. */
+  private def measureStaged(staged: DataFrame, plan: StatPlan,
+      key: Option[org.apache.spark.sql.Column])
+      : Map[Option[String], (Map[String, ColStat], Long)] =
+    withBlooms(staged, plan, aggregateBy(staged, plan.aggregates, key)
+      .map { case (k, row) => k -> plan.decode(row) }, key)
+
+  /** `measured` (per group of `key`, as [[measureStaged]] keys it) with
+    * a Bloom filter on each of the plan's Bloom columns, from a second
+    * aggregate over the STAGED files: its capacity needs the measured
+    * non-null count. Blooms stay n/s-only: a timestamp probe's string
+    * rendering is not canonical across callers, so membership would be
+    * unreliable. Spark's BloomFilterAggregate hashes each value's
+    * canonical rendering — strings raw, numerics via DECIMAL(38,18), the
+    * one rendering a driver-side probe can reproduce exactly whatever
+    * the column's source type (see bloomProbeRendering); out-of-range
+    * values null out of the cast AND out of any exact probe, so both
+    * sides stay conservative together. It serializes through the same
+    * sketch writeTo format the manifest's BloomV2 payloads use. Its
+    * capacity must be a literal: the column's largest measured non-null
+    * count over the groups (smaller groups just get a lower FPP), sized
+    * as BloomMinCapacity documents. All-null columns get none, and with
+    * no Bloom to build `staged` is never read. */
+  private def withBlooms(staged: => DataFrame, plan: StatPlan,
+      measured: Map[Option[String], (Map[String, ColStat], Long)],
+      key: Option[org.apache.spark.sql.Column])
+      : Map[Option[String], (Map[String, ColStat], Long)] = {
+    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.DecimalType
+    val kinds = plan.kinds
+    val nonNull: Map[String, Long] = plan.bloomCfg
       .filter(c => kinds.get(c).exists(k => k == "n" || k == "s"))
       .flatMap(c => measured.values.flatMap { case (st, rows) =>
         st.get(c).map(s => rows - s.nulls.getOrElse(0L)) }.maxOption
         .map(c -> _)).toMap
     if (nonNull.isEmpty) return measured
-    val blooms = aggregate(nonNull.toSeq.sorted.map { case (c, n) =>
+    val blooms = aggregateBy(staged, nonNull.toSeq.sorted.map { case (c, n) =>
       val capacity = math.min(BloomMaxCapacity, math.max(BloomMinCapacity, n))
       val numBits = org.apache.spark.util.sketch.BloomFilter
         .optimalNumOfBits(capacity, BloomFpp)
@@ -3818,7 +3912,7 @@ object TxnCatalog {
           GraftSqlBridge.expression(rendered),
           Literal(capacity), Literal(numBits)).toAggregateExpression())
         .as(s"bloom:$c")
-    })
+    }, key)
     measured.map { case (k, (stats, rows)) =>
       k -> ((stats.map { case (c, st) =>
         c -> blooms.get(k).filter(_ => nonNull.contains(c))
@@ -3829,26 +3923,19 @@ object TxnCatalog {
     }
   }
 
-  /** [[measureStaged]] over ONE staged entry dir: its stats and exact
-    * row count. With nothing to measure, the count comes from the
-    * parquet footers instead (no job). A caller that just WROTE the
-    * files passes their `schema`, skipping the schema-inference job
-    * (pure scheduler overhead that a many-partition commit pays N
-    * times). */
-  private def entryStats(spark: SparkSession, path: String,
-      props: Map[String, String], cols: Seq[String], bloomCols: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
+  /** [[measureStaged]] over ONE existing entry dir (ANALYZE, the
+    * bucketing rewrite): its stats and exact row count. With nothing to
+    * measure, the count comes from the parquet footers instead (no
+    * job). */
+  private[storage] def entryStats(spark: SparkSession, path: String,
+      props: Map[String, String], cols: Seq[String], bloomCols: Seq[String])
       : (Map[String, ColStat], Option[Long]) = {
-    val wanted = cols ++ bloomCols ++ propColumns(props, StatsColumnsProp) ++
-      propColumns(props, BloomColumnsProp)
-    lazy val staged = schema.fold(spark.read.parquet(path))(
-      spark.read.schema(_).parquet(path))
-    if (wanted.isEmpty || statKinds(staged.schema, wanted).isEmpty)
-      (Map.empty, footerRowCount(spark, path))
+    val staged = readParquetCached(spark, Seq(path))
+    val plan = statPlan(staged.schema, props, cols, bloomCols)
+    if (plan.kinds.isEmpty) (Map.empty, footerRowCount(spark, path))
     else {
       // the single global result sits under the None key
-      val (stats, rows) = measureStaged(staged, props, cols, bloomCols,
-        key = None)(None)
+      val (stats, rows) = measureStaged(staged, plan, key = None)(None)
       (stats, Some(rows))
     }
   }
@@ -3900,6 +3987,44 @@ object TxnCatalog {
       .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap)
   }
 
+  /** Stage one DATA entry of `table` at `path` — [[publish]]'s
+    * per-entry path: `df` in the table's write layout, with the
+    * [[StatPlan]] aggregates observed (`Dataset.observe`) on the exact
+    * frame handed to the writer. The write job measures the rows it
+    * writes in the same evaluation, so a nondeterministic input still
+    * publishes stats that describe its bytes, and no job re-reads them.
+    * Only what needs the written files reads them back: CHECK
+    * constraints (skipped for reorganizations, whose rows passed when
+    * first committed) and Bloom filters ([[withBlooms]]). Observed
+    * metrics reach the driver through the listener bus, which may drop
+    * events under load; if they have not arrived after 30 s, a warning
+    * is logged and the stats are measured over the written files
+    * instead. Returns (stats, row count). */
+  private def stageEntry(spark: SparkSession, table: String, path: String,
+      df: DataFrame, props: Map[String, String], cols: Seq[String],
+      bloomCols: Seq[String], reorg: Boolean): (Map[String, ColStat], Long) = {
+    val plan = statPlan(df.schema, props, cols, bloomCols)
+    val (arranged, opts) = writeLayout(df, props, reorg)
+    val obs = org.apache.spark.sql.Observation()
+    val aggs = plan.aggregates
+    arranged.observe(obs, aggs.head, aggs.tail: _*)
+      .write.mode("errorifexists").options(opts).parquet(path)
+    lazy val written = spark.read.schema(df.schema).parquet(path)
+    if (!reorg) checkConstraints(table, props, written)
+    val timeout = scala.concurrent.duration.Duration(30, "s")
+    val observed =
+      try Some(scala.concurrent.Await.result(obs.future, timeout))
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"no observed stats for $table at $path after $timeout; " +
+              "measuring the written files instead")
+          None
+      }
+    observed.fold(measureStaged(written, plan, None))(row =>
+      withBlooms(written, plan, Map(None -> plan.decode(row)), None))(None)
+  }
+
   /** Lost-commit retry, the one rule for every conditional commit: run
     * `body(attempt)` (attempt counts from 1) and re-run it only when it
     * throws [[CommitConflict]]. Any other failure propagates at once.
@@ -3932,10 +4057,11 @@ object TxnCatalog {
     * the current manifest into the carried-forward one (dropping
     * superseded entries, validating before any staging work), stages
     * `bulk` ([[stageBulk]]) and each per-entry update into dirs unique
-    * to this attempt — data entries in the table's write layout,
-    * constraint-checked and measured off the staged files — and
-    * publishes everything via one rename CAS. A failure before the CAS
-    * throws and the catalog never moves. */
+    * to this attempt — data entries through [[stageEntry]], one write
+    * job each with their stats observed on that job — and publishes
+    * everything via one rename CAS. Whatever the path, an entry's stats
+    * describe the bytes written. A failure before the CAS throws and
+    * the catalog never moves. */
   private[storage] def publish(spark: SparkSession, root: String,
       updates: Seq[(String, String, DataFrame)],
       statsColumns: Seq[String],
@@ -3997,18 +4123,15 @@ object TxnCatalog {
         // consult. Reorganizations (explicit dataTxns) re-stage data
         // that was validated when first committed.
         val internal = p.startsWith("~")
-        val reorg = dataTxns.contains((t, p))
-        val (arranged, opts) =
-          if (internal) (df, Map.empty[String, String])
-          else writeLayout(df, tableProps(t), reorg)
-        arranged.write.mode("errorifexists").options(opts).parquet(path)
-        if (!internal && !reorg)
-          checkConstraints(t, tableProps(t),
-            spark.read.schema(df.schema).parquet(path))
         val (stats, rows) =
-          if (internal) (Map.empty[String, ColStat], footerRowCount(spark, path))
-          else entryStats(spark, path, tableProps(t), statsColumns,
-            bloomColumns, Some(df.schema))
+          if (internal) {
+            df.write.mode("errorifexists").parquet(path)
+            (Map.empty[String, ColStat], footerRowCount(spark, path))
+          } else {
+            val (s, n) = stageEntry(spark, t, path, df, tableProps(t),
+              statsColumns, bloomColumns, reorg = dataTxns.contains((t, p)))
+            (s, Some(n))
+          }
         staged += (t, p) -> Entry(dirName, stats, dataTxns.get((t, p)), rows,
           deleteKeyCols.get((t, p)), bytes = dirBytes(spark, path))
       }

@@ -130,4 +130,20 @@ object GraftSqlBridge {
   def bucketIdOf(fileName: String): Option[Int] =
     org.apache.spark.sql.execution.datasources.BucketingUtils
       .getBucketId(fileName)
+
+  /** Spark's OWN parquet `mergeSchema` step: `a` merged with `b` as
+    * `SchemaMergeUtils` folds two footer schemas, failing with the
+    * same CANNOT_MERGE_SCHEMAS error — so a schema folded from cached
+    * footers ([[graft.storage.TxnCatalog]] `readParquetCached`) equals
+    * the one Spark's inference job would build. */
+  def mergeFooterSchemas(spark: SparkSession,
+      a: org.apache.spark.sql.types.StructType,
+      b: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    try a.merge(b, spark.sessionState.conf.caseSensitiveAnalysis)
+    catch {
+      case e: org.apache.spark.SparkException =>
+        throw org.apache.spark.sql.errors.QueryExecutionErrors
+          .failedMergingSchemaError(a, b, e)
+    }
 }

@@ -112,6 +112,29 @@ class BulkCommitSpec extends GraftSuite {
       s"3-entry per-entry commit ran ${jobs.get()} jobs")
   }
 
+  test("per-entry commit of a nondeterministic input publishes stats describing the written bytes") {
+    import org.apache.spark.sql.functions.{col, count, max, min, rand}
+    val root = tmp()
+    // the per-entry twin of the bulk test below: the stats are observed
+    // on the write job, so they must describe the rows it wrote, not a
+    // re-evaluation of the frame
+    val nondet = spark.range(0, 2000, 1, 4)
+      .select((rand(seed = 7) * rand() * 1e6).cast("long").as("v"))
+    TxnCatalog.commitPartitions(spark, root, Seq(("t", "p=0", nondet)),
+      statsColumns = Seq("v"))
+    val snap = TxnCatalog.snapshot(spark, root).get
+    val actual = snap.readPartition("t", "p=0").get
+      .agg(min("v").cast("string"), max("v").cast("string"), count("*"),
+        org.apache.spark.sql.functions.sum("v").cast("string")).head()
+    val st = snap.stats("t", "p=0")("v")
+    assert(st.min === actual.getString(0) && st.max === actual.getString(1),
+      "manifest stats must equal the written data's bounds")
+    assert(st.sum === Some(actual.getString(3)),
+      "the exact sum must equal the written data's")
+    assert(snap.rowCount("t", "p=0") === Some(actual.getLong(2)) &&
+      actual.getLong(2) === 2000L)
+  }
+
   test("string keys with spaces and slashes escape, round trip, and prune") {
     val root = tmp()
     val df = Seq(

@@ -121,6 +121,75 @@ class PipelinesSpec extends GraftSuite {
     assert(again.count(_ != null) === 0, "located rows must not re-insert")
   }
 
+  test("catalogAppend: the same bytes twice in one batch are cataloged once") {
+    // a.jpg and copy_a.jpg carry the same bytes at the same place, so they
+    // share a content key; an empty catalog must gain one row, not two
+    def batch(rows: (String, String, Option[Double], Option[Double])*) =
+      Pipelines.ingestClassify(rows.toDF("path", "contentStr", "gt_cx", "gt_cy")
+        .select($"path", $"contentStr".cast("binary").as("content"), $"gt_cx", $"gt_cy"),
+        predios, 2.0)
+    val empty = Seq.empty[(Long, String)].toDF("ID", "RUTA_RESULTADO")
+    val lineage0 = Seq.empty[(Long, Long)].toDF("ID_EJECUCION", "ID_IMAGEN_FUENTE")
+    val (cat, lin) = Pipelines.catalogAppend(empty, lineage0,
+      batch(("lake/a/a.jpg", "same-bytes", Some(1.0), Some(1.0)),
+        ("lake/b/copy_a.jpg", "same-bytes", Some(1.0), Some(1.0))),
+      runId = 7L, tipoImg = 0, proceso = 0)
+    val rows = cat.collect()
+    assert(rows.length === 1, "duplicate bytes must catalog once")
+    assert(rows.head.getAs[Long]("ID") === 1L)
+    assert(rows.head.getAs[String]("RUTA_RESULTADO").startsWith("BR/C10/"))
+    assert(lin.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((7L, 1L)))
+    // rows without a key (no location) are not repeats of each other
+    val (sentinels, _) = Pipelines.catalogAppend(empty, lineage0,
+      batch(("lake/c/x.jpg", "bytes-x", None, None),
+        ("lake/d/y.jpg", "bytes-y", None, None)),
+      runId = 8L, tipoImg = 0, proceso = 0)
+    assert(sentinels.select("ID").as[Long].collect().sorted.toSeq === Seq(1L, 2L))
+  }
+
+  test("catalogAppend plus the commit of its two frames runs the anti-join and the window once") {
+    import graft.storage.TxnCatalog
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val root = java.nio.file.Files.createTempDirectory("catalog-append").toString
+    val classified = Pipelines.ingestClassify(images, predios, 2.0)
+    val lineage0 = Seq.empty[(Long, Long)].toDF("ID_EJECUCION", "ID_IMAGEN_FUENTE")
+    val (cat0, lin0) = Pipelines.catalogAppend(
+      Seq.empty[(Long, String)].toDF("ID", "RUTA_RESULTADO"), lineage0, classified,
+      runId = 0L, tipoImg = 0, proceso = 0)
+    TxnCatalog.commitPartitions(spark, root,
+      Seq(("CATALOG", "LOTE=0", cat0), ("DETALLE", "LOTE=0", lin0)), statsColumns = Seq("ID"))
+    // the plans of the SQL executions the second batch runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription); ()
+          case _ =>
+        }
+    }
+    def count(op: String) = plans.toArray.count(_.toString.contains(op))
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val snap = TxnCatalog.snapshot(spark, root).get
+      val (cat1, lin1) = Pipelines.catalogAppend(snap.read("CATALOG").get,
+        snap.read("DETALLE").get, classified, runId = 1L, tipoImg = 0, proceso = 0)
+      TxnCatalog.commitPartitions(spark, root,
+        Seq(("CATALOG", "LOTE=1", cat1), ("DETALLE", "LOTE=1", lin1)),
+        statsColumns = Seq("ID"))
+      val deadline = System.currentTimeMillis() + 10000L
+      while (count("Window") < 1 && System.currentTimeMillis() < deadline) Thread.sleep(50L)
+      Thread.sleep(500L)
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(count("LeftAnti") === 1, s"the anti-join ran ${count("LeftAnti")} times")
+    assert(count("Window") === 1, s"the numbering window ran ${count("Window")} times")
+    // the re-delivered batch adds only its key-less sentinel row, once
+    val snap = TxnCatalog.snapshot(spark, root).get
+    val added = snap.readPartition("CATALOG", "LOTE=1").get.select("ID").as[Long].collect()
+    assert(added.toSeq === Seq(5L))
+    assert(snap.readPartition("DETALLE", "LOTE=1").get.select("ID_IMAGEN_FUENTE")
+      .as[Long].collect().toSeq === Seq(5L))
+  }
+
   test("indicesCsv: header shape IMAGEN,CENTROIDE,PREDIO,INDICE with real rows (§2.3.3)") {
     val csv = Pipelines.indicesCsv(Pipelines.ingestClassify(images, predios, 2.0))
     assert(csv.columns.toSeq === Seq("IMAGEN", "CENTROIDE", "PREDIO", "INDICE"))
