@@ -1,8 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Catalog maintenance operators (SURVEY.md §2.1 S5/S11/S12, A1, J1/J5,
   * E3 grammar): the reference's MySQL-side mutations re-expressed as
@@ -11,17 +13,39 @@ import org.apache.spark.sql.functions._
 object CatalogOps {
 
   /** A1: next surrogate key — replaces the reference's racy
-    * read-INFORMATION_SCHEMA-then-insert (mysql_process.py:13-25). */
-  def nextId(catalog: DataFrame, idCol: String): Long =
-    catalog.agg(coalesce(max(col(idCol)), lit(0L)) + 1L).collect()(0).getLong(0)
+    * read-INFORMATION_SCHEMA-then-insert (mysql_process.py:13-25).
+    * `max(id)` comes from the lake manifest when
+    * [[graft.plans.MetadataOnlyAgg]] can answer it exactly (a bare lake
+    * relation whose every entry records the column's stats, no delete
+    * masking rows): zero file reads, zero Spark jobs. Any other frame,
+    * or a fold the rule refuses, scans. */
+  def nextId(catalog: DataFrame, idCol: String): Long = {
+    val top = catalog.agg(max(col(idCol)))
+    val folded = graft.plans.MetadataOnlyAgg(top.queryExecution.optimizedPlan) match {
+      case lr: LocalRelation if lr.data.sizeIs == 1 =>
+        val r = lr.data.head
+        if (r.isNullAt(0)) Some(0L)
+        else top.schema.head.dataType match {
+          case LongType => Some(r.getLong(0))
+          case IntegerType => Some(r.getInt(0).toLong)
+          case _ => None
+        }
+      case _ => None
+    }
+    folded.map(Math.addExact(_, 1L)).getOrElse(
+      catalog.agg(coalesce(max(col(idCol)), lit(0L)) + 1L).collect()(0).getLong(0))
+  }
 
   /** S11: deterministic batch key assignment — new rows get
     * max(existing)+row_number ordered by a caller-chosen unique key (§1.5:
     * per-batch keys instead of AUTO_INCREMENT round trips).
     *
-    * Scale note: a global row_number serializes the batch through one task —
-    * correct for ingest batches (bounded), not for re-keying a 100 TB table
-    * (use zipWithIndex-style per-partition offsets there).
+    * Scale note: the window has no partition key, so it runs in one task;
+    * a multi-partition `incoming` is first moved there by an
+    * `Exchange SinglePartition`. A bounded batch can be coalesced to one
+    * partition first, which drops the exchange
+    * ([[graft.pipelines.Pipelines.catalogAppend]] does); re-keying a
+    * 100 TB table takes [[assignIdsDistributed]].
     */
   def assignIds(catalog: DataFrame, idCol: String, incoming: DataFrame,
       orderCol: String): DataFrame = {

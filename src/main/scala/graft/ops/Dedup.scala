@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Deduplication operators for large-scale training-data pipelines: exact
   * (content-hash), MinHash+LSH, SimHash, and exact n-gram Jaccard with
@@ -17,7 +18,9 @@ import org.apache.spark.sql.functions._
   *  - MinHash/SimHash candidate generation shuffles on (band, bandHash)
   *    buckets; hot buckets (boilerplate shingles) are capped by
   *    `maxBucketSize` — the standard stop-bucket cutoff, otherwise one
-  *    degenerate bucket produces O(n²) candidate pairs;
+  *    degenerate bucket produces O(n²) candidate pairs; the Hamming screen
+  *    ([[hammingPairs]]) caps and verifies each bucket inside the task
+  *    that holds it, after its one (band, chunk) shuffle;
   *  - signatures are computed row-local in one pass over the shingle array
   *    (k folds, no shuffle, stays inside whole-stage codegen).
   */
@@ -551,10 +554,16 @@ object Dedup {
     * the banding trade-off of [[minHashLshPairs]]; callers with low-entropy
     * signatures can trade recall for bucket size by passing fewer pieces.
     *
-    * Scale shape: one explode (pieces× the signature table — tiny rows),
-    * one shuffle on (band, chunk), hot buckets capped via hash aggregate +
-    * broadcast anti-join (no sort, no window). Candidate volume is
-    * Σ|bucket|² — bounded by `maxBucketSize`·|rows| after the cap.
+    * Scale shape: one explode (pieces× the signature table — tiny rows)
+    * and ONE hash shuffle on (band, chunk); each task then sorts its rows
+    * and walks them one bucket at a time ([[bucketPairs]]): a bucket of
+    * more than `maxBucketSize` rows (the stop-bucket cap) emits nothing,
+    * and every other pair is verified in place. No bucket-count aggregate,
+    * no anti-join, no self-join. A pair sharing k bands is found in each
+    * of its uncapped ones, so a final `distinct` (the second and last
+    * exchange, over verified pairs only) emits it once. Candidate volume
+    * is Σ|bucket|², bounded by `maxBucketSize`·|rows| after the cap; a
+    * task holds one bucket (at most `maxBucketSize` rows) at a time.
     */
   def hammingPairs(
       sigs: DataFrame, idCol: String, sigCol: String,
@@ -563,6 +572,8 @@ object Dedup {
     require(maxHamming >= 0 && maxHamming < 64, s"maxHamming=$maxHamming out of range")
     val nPieces = if (pieces > 0) pieces else maxHamming + 1
     require(nPieces >= 1 && nPieces <= 64, s"pieces=$nPieces out of range")
+    require(sigs.schema(sigCol).dataType == LongType,
+      s"$sigCol must be a 64-bit (long) signature")
     // band j covers bits [j*64/nPieces, (j+1)*64/nPieces) — widths differ
     // by at most one bit when 64 % nPieces != 0; the pigeonhole argument
     // only needs the chunks to partition the 64 bits
@@ -573,26 +584,54 @@ object Dedup {
       struct(lit(j).as("band"),
         shiftright(col("__sig"), lo).bitwiseAND(mask).as("chunk"))
     }
+    val idType = sigs.schema(idCol).dataType
+    // a null signature has no chunk, so it shares no bucket
     val banded = sigs
       .select(col(idCol).as("__id"), col(sigCol).as("__sig"))
+      .filter(col("__sig").isNotNull)
       .select(col("__id"), col("__sig"), explode(array(bands: _*)).as("__b"))
-      .select(col("__id"), col("__sig"), col("__b.band"), col("__b.chunk"))
-    // stop-bucket cap via hash aggregate + anti-join (see minHashLshPairs);
-    // an uncapped caller (the oracle-exact simHashPairsExplicit path) skips
-    // the aggregate + anti-join entirely rather than planning a no-op
-    val capped = if (maxBucketSize == Int.MaxValue) banded else {
-      val hot = banded.groupBy("band", "chunk").count()
-        .filter(col("count") > maxBucketSize).select("band", "chunk")
-      banded.join(hot, Seq("band", "chunk"), "left_anti")
-    }
-    val l = capped.select(col("band"), col("chunk"), col("__id").as("ida"), col("__sig").as("siga"))
-    val rt = capped.select(col("band"), col("chunk"), col("__id").as("idb"), col("__sig").as("sigb"))
-    l.join(rt, Seq("band", "chunk"))
+      .select(col("__b.band"), col("__b.chunk"), col("__id"), col("__sig"))
+    val verified = StructType(Seq(StructField("a", idType),
+      StructField("b", idType), StructField("hamming", IntegerType, nullable = false)))
+    banded
+      .repartition(col("band"), col("chunk"))
+      .sortWithinPartitions("band", "chunk")
+      .mapPartitions(bucketPairs(_, maxBucketSize, maxHamming))(
+        org.apache.spark.sql.Encoders.row(verified))
+      // each pair leaves its bucket in arbitrary order; least/greatest
+      // orient it by Spark's own ordering of the id type, and ids that
+      // are equal (or null) never form a pair
+      .select(least(col("a"), col("b")).as("ida"),
+        greatest(col("a"), col("b")).as("idb"), col("hamming"))
       .filter(col("ida") < col("idb"))
-      .select(col("ida"), col("idb"),
-        bit_count(col("siga").bitwiseXOR(col("sigb"))).as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxHamming)
+  }
+
+  /** The pairs of each (band, chunk) bucket within `maxHamming` bits, over
+    * rows (band, chunk, id, sig) sorted by bucket. A bucket of more than
+    * `cap` rows emits nothing; at most `cap` of its rows are held. */
+  private def bucketPairs(rows: Iterator[Row], cap: Int, maxHamming: Int)
+      : Iterator[Row] = {
+    val in = rows.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val band = in.head.getInt(0)
+      val chunk = in.head.getLong(1)
+      val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+      val sigs = scala.collection.mutable.ArrayBuffer.empty[Long]
+      var n = 0L
+      while (in.hasNext && in.head.getInt(0) == band && in.head.getLong(1) == chunk) {
+        val r = in.next()
+        n += 1
+        if (n <= cap) { ids += r.get(2); sigs += r.getLong(3) }
+      }
+      if (n > cap) Iterator.empty
+      else for {
+        i <- ids.indices.iterator
+        j <- (i + 1 until ids.length).iterator
+        h = java.lang.Long.bitCount(sigs(i) ^ sigs(j))
+        if h <= maxHamming
+      } yield Row(ids(i), ids(j), h)
+    }
   }
 
   /** Cross-document repeated-span scrubbing (exact substring dedup, the

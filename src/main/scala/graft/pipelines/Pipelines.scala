@@ -73,7 +73,12 @@ object Pipelines {
     * bytes delivered twice), so each image is cataloged once. Rows with
     * no key (the unclassifiable sentinel) each stay. IDs are
     * `max(ID) + row_number()` ordered by RUTA_RESULTADO
-    * ([[CatalogOps.assignIds]]). The numbered rows are local-
+    * ([[CatalogOps.assignIds]]; max(ID) comes from the manifest when the
+    * catalog is a lake frame). The batch is bounded, so the anti-joined
+    * rows are coalesced into one task, which drops the repeats and
+    * numbers them with no exchange; the coalesce is narrow, so the
+    * anti-join's batch side, and any uncached step that produced it,
+    * runs in that task too. The numbered rows are local-
     * checkpointed, lazily: the first read of either returned frame
     * materializes them, so the anti-join and the window run once
     * however many times the frames are read, and both carry the same
@@ -82,8 +87,9 @@ object Pipelines {
       catalog: DataFrame, lineage: DataFrame, classified: DataFrame,
       runId: Long, tipoImg: Int, proceso: Int): (DataFrame, DataFrame) = {
     val fresh = CatalogOps.newRowsOnly(catalog, classified, "RUTA_RESULTADO")
+      .coalesce(1)
     // the repeats of a key sit next to it in the window assignIds numbers
-    // by, so dropping them reuses its exchange and sort
+    // by, so dropping them reuses its sort
     val key = col("RUTA_RESULTADO")
     val once = fresh
       .withColumn("__prev", lag(key, 1).over(Window.orderBy(key)))

@@ -12,9 +12,9 @@ import org.apache.spark.sql.types.DecimalType
   * replacement for that pattern plus the analytic battery the engine exposes.
   *
   * Scale notes: every window here is `partitionBy(user_id | custkey | type)` —
-  * work distributes by partition key and no global single-partition window
-  * exists anywhere (a bare `Window.orderBy` would serialize 100 TB through one
-  * task). Frame sums run over DECIMAL so results are exact and order-independent.
+  * work distributes by partition key and none of them is a global
+  * single-partition window (a bare `Window.orderBy` would serialize 100 TB
+  * through one task). Frame sums run over DECIMAL so results are exact and order-independent.
   */
 object WindowQueries extends QueryGroup {
 

@@ -23,4 +23,29 @@ object SparkTestBase {
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   def sf: String = SparkTestBase.sf
+
+  /** Spark jobs `body` submits, counted by job group so a prior suite's
+    * stray job cannot land in the window. Listener delivery is async:
+    * wait for `expect` jobs, then a little longer for any extra. */
+  protected def jobsOf[T](expect: Int)(body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        if (Option(s.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      spark.sparkContext.setJobGroup(group, "job budget")
+      val out = try body finally spark.sparkContext.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000L
+      while (jobs.get() < expect && System.currentTimeMillis() < deadline)
+        Thread.sleep(50L)
+      Thread.sleep(500L)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }

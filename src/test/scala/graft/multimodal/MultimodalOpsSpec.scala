@@ -61,20 +61,24 @@ class MultimodalOpsSpec extends GraftSuite {
     assert(math.abs(thumbMean - fullMean) < 1.5)
   }
 
-  test("imageNearDupPairs: re-encoded copies pair by perceptual hash, distinct images don't") {
+  /** p0/j0 are the SAME pattern as PNG and JPEG (bytes totally different);
+    * tiny0 is a downscaled copy of the same pattern (content survives);
+    * p1/p9 are different patterns. */
+  private def nearDupCorpus = {
     import spark.implicits._
-    // p0/j0 are the SAME pattern as PNG and JPEG (bytes totally different);
-    // tiny0 is a downscaled copy of the same pattern (content survives);
-    // p1/p9 are different patterns
     val tiny = ImageCodec.boxResize(ImageCodec.testPattern(64, 48, 0), 32, 24)
-    val corpus = Seq(
+    Seq(
       ("p0.png", ImageCodec.encode(ImageCodec.testPattern(64, 48, 0), "png")),
       ("j0.jpg", ImageCodec.encode(ImageCodec.testPattern(64, 48, 0), "jpg")),
       ("tiny0.png", ImageCodec.encode(tiny, "png")),
       ("p1.png", ImageCodec.encode(ImageCodec.testPattern(64, 48, 1), "png")),
       ("p9.png", ImageCodec.encode(ImageCodec.testPattern(64, 48, 9), "png"))
     ).toDF("path", "content")
-    val pairs = Multimodal.imageNearDupPairs(corpus, maxHamming = 5)
+  }
+
+  test("imageNearDupPairs: re-encoded copies pair by perceptual hash, distinct images don't") {
+    import spark.implicits._
+    val pairs = Multimodal.imageNearDupPairs(nearDupCorpus, maxHamming = 5)
       .select("patha", "pathb").as[(String, String)].collect().toSet
     val dupGroup = Set("p0.png", "j0.jpg", "tiny0.png")
     // all three re-encodings of pattern 0 pair with each other...
@@ -83,6 +87,16 @@ class MultimodalOpsSpec extends GraftSuite {
     // ...and no distinct pattern joins the group
     assert(pairs.forall { case (a, b) => dupGroup(a) == dupGroup(b) },
       s"false positive among $pairs")
+  }
+
+  test("imageNearDupPairs collects in at most 3 Spark jobs") {
+    // decode and bucket exchange, in-bucket verification and distinct
+    // exchange, result: no bucket-count, broadcast or self-join jobs
+    val (pairs, jobs) = jobsOf(3) {
+      Multimodal.imageNearDupPairs(nearDupCorpus, maxHamming = 5).collect()
+    }
+    assert(pairs.length === 3)
+    assert(jobs <= 3, s"imageNearDupPairs ran $jobs jobs")
   }
 
   test("sampleFrames: real frames from animated GIF, byte-slice fallback elsewhere") {

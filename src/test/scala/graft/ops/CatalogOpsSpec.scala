@@ -17,6 +17,50 @@ class CatalogOpsSpec extends GraftSuite {
     assert(CatalogOps.nextId(catalog.filter($"ID" < 0), "ID") === 1L)
   }
 
+  /** The scanned form of [[CatalogOps.nextId]], its oracle. */
+  private def scannedNextId(df: org.apache.spark.sql.DataFrame): Long =
+    df.agg(coalesce(max($"ID"), lit(0L)) + 1L).collect()(0).getLong(0)
+
+  test("nextId from the manifest equals the scan, and refuses where it cannot be exact") {
+    import graft.storage.{GraftLake, TxnCatalog}
+    val root = java.nio.file.Files.createTempDirectory("nextid").toString
+    def batch(ids: Range) = ids.map(i => (i.toLong, s"lake/$i.jpg")).toDF("ID", "RUTA_RESULTADO")
+    TxnCatalog.commitPartitions(spark, root, Seq(("CATALOG", "LOTE=0", batch(1 to 40)),
+      ("BARE", "LOTE=0", batch(1 to 40))), statsColumns = Seq("ID"))
+    TxnCatalog.commitPartitions(spark, root, Seq(("CATALOG", "LOTE=1", batch(41 to 57)),
+      ("BARE", "LOTE=1", batch(41 to 57))), statsColumns = Seq("ID"))
+    // a table committed without ID among its stats columns
+    TxnCatalog.commitPartitions(spark, root, Seq(("NOSTATS", "LOTE=0", batch(1 to 30))),
+      statsColumns = Seq("RUTA_RESULTADO"))
+    def table(t: String) = {
+      val snap = TxnCatalog.snapshot(spark, root).get
+      GraftLake.tableAt(spark, root, t, snap).get
+    }
+    val cat = table("CATALOG")
+    val (folded, jobs) = jobsOf(0) { CatalogOps.nextId(cat, "ID") }
+    assert(folded === 58L)
+    assert(folded === scannedNextId(cat))
+    assert(jobs === 0, s"nextId over a lake frame with ID stats ran $jobs jobs")
+    assert(CatalogOps.nextId(TxnCatalog.snapshot(spark, root).get.read("CATALOG").get, "ID") === 58L)
+    // a filtered frame is not the bare relation: it scans
+    val filtered = cat.filter($"ID" < 50)
+    assert(CatalogOps.nextId(filtered, "ID") === 50L)
+    assert(CatalogOps.nextId(filtered, "ID") === scannedNextId(filtered))
+    val noStats = table("NOSTATS")
+    assert(CatalogOps.nextId(noStats, "ID") === 31L)
+    assert(CatalogOps.nextId(noStats, "ID") === scannedNextId(noStats))
+    // a delete masking the max-ID row leaves the manifest's max stale:
+    // the fold must refuse and the scan answer
+    TxnCatalog.deleteKeys(spark, root, "BARE", "ID", Seq(57L, 56L).toDF("ID"))
+    val masked = table("BARE")
+    assert(CatalogOps.nextId(masked, "ID") === 56L)
+    assert(CatalogOps.nextId(masked, "ID") === scannedNextId(masked))
+    // an empty catalog starts at 1
+    val empty = Seq.empty[(Long, String)].toDF("ID", "RUTA_RESULTADO")
+    assert(CatalogOps.nextId(empty, "ID") === 1L)
+    assert(CatalogOps.nextId(cat.filter($"ID" < 0), "ID") === 1L)
+  }
+
   test("assignIds: deterministic contiguous keys after the current max (S11)") {
     val incoming = Seq("zz/1.jpg", "aa/2.jpg", "mm/3.jpg").toDF("RUTA_RESULTADO")
     val keyed = CatalogOps.assignIds(catalog, "ID", incoming, "RUTA_RESULTADO")

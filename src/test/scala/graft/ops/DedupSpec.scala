@@ -128,6 +128,101 @@ class DedupSpec extends GraftSuite {
     assert(sigs.forall { case (_, s) => s >= 0 && (s >>> 62) == 0L })
   }
 
+  /** The four-step form [[Dedup.hammingPairs]] replaced, kept as its
+    * oracle: a hot-bucket count, a broadcast anti-join dropping capped
+    * buckets, a banded self-join, then distinct and the Hamming check. */
+  private def hammingPairsJoin(sigs: org.apache.spark.sql.DataFrame,
+      idCol: String, sigCol: String, maxHamming: Int, maxBucketSize: Int,
+      pieces: Int): org.apache.spark.sql.DataFrame = {
+    val nPieces = if (pieces > 0) pieces else maxHamming + 1
+    val bands = (0 until nPieces).map { j =>
+      val lo = j * 64 / nPieces
+      val hi = (j + 1) * 64 / nPieces
+      val mask = if (hi - lo == 64) -1L else (1L << (hi - lo)) - 1L
+      struct(lit(j).as("band"), shiftright($"__sig", lo).bitwiseAND(mask).as("chunk"))
+    }
+    val banded = sigs.select(col(idCol).as("__id"), col(sigCol).as("__sig"))
+      .select($"__id", $"__sig", explode(array(bands: _*)).as("__b"))
+      .select($"__id", $"__sig", $"__b.band", $"__b.chunk")
+    val capped = if (maxBucketSize == Int.MaxValue) banded else {
+      val hot = banded.groupBy("band", "chunk").count()
+        .filter($"count" > maxBucketSize).select("band", "chunk")
+      banded.join(hot, Seq("band", "chunk"), "left_anti")
+    }
+    val l = capped.select($"band", $"chunk", $"__id".as("ida"), $"__sig".as("siga"))
+    val r = capped.select($"band", $"chunk", $"__id".as("idb"), $"__sig".as("sigb"))
+    l.join(r, Seq("band", "chunk"))
+      .filter($"ida" < $"idb")
+      .select($"ida", $"idb", bit_count($"siga".bitwiseXOR($"sigb")).as("hamming"))
+      .distinct()
+      .filter($"hamming" <= maxHamming)
+  }
+
+  /** Seeded random signatures with planted near pairs (1..maxHamming bits
+    * flipped), plus the edges both forms must agree on: a repeated id
+    * with another signature, a null id and a null signature. */
+  private def plantedSigs(seed: Int, n: Int, maxHamming: Int): Seq[(java.lang.Long, java.lang.Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val base = Seq.fill(n)(rnd.nextLong())
+    val near = base.take(n / 3).map { s =>
+      (1 to 1 + rnd.nextInt(maxHamming + 1)).foldLeft(s)((x, _) => x ^ (1L << rnd.nextInt(64)))
+    }
+    val sigs = (base ++ near).zipWithIndex.map { case (s, i) =>
+      (java.lang.Long.valueOf(i.toLong), java.lang.Long.valueOf(s)) }
+    sigs ++ Seq((java.lang.Long.valueOf(0L), java.lang.Long.valueOf(base(1) ^ 1L)),
+      (null, java.lang.Long.valueOf(base(2))), (java.lang.Long.valueOf(-1L), null))
+  }
+
+  private def samePairs(sigs: org.apache.spark.sql.DataFrame, maxHamming: Int,
+      maxBucketSize: Int, pieces: Int): Set[org.apache.spark.sql.Row] = {
+    val got = Dedup.hammingPairs(sigs, "id", "sig", maxHamming, maxBucketSize, pieces)
+    val want = hammingPairsJoin(sigs, "id", "sig", maxHamming, maxBucketSize, pieces)
+    assert(got.columns.toSeq === want.columns.toSeq)
+    val g = got.collect()
+    val w = want.collect()
+    assert(g.length === g.toSet.size, "a pair was emitted twice")
+    assert(g.toSet === w.toSet)
+    w.toSet
+  }
+
+  test("hammingPairs equals the banded self-join it replaced, pair for pair") {
+    for (seed <- Seq(1, 2, 3); maxHamming <- Seq(3, 5)) {
+      val sigs = plantedSigs(seed, 240, maxHamming).toDF("id", "sig")
+      // pieces = maxHamming + 1 (perfect recall), uncapped and capped
+      assert(samePairs(sigs, maxHamming, Int.MaxValue, 0).nonEmpty)
+      samePairs(sigs, maxHamming, 2, 0)
+      // pieces = 4, the simHashPairs setting, capped and uncapped
+      assert(samePairs(sigs, maxHamming, 1000, 4).nonEmpty)
+      samePairs(sigs, maxHamming, Int.MaxValue, 4)
+    }
+    // string ids (the image screening's paths) order as Spark orders them
+    val named = plantedSigs(4, 120, 3).toDF("id", "sig")
+      .select(concat(lit("img/"), $"id".cast("string")).as("id"), $"sig")
+    assert(samePairs(named, 3, 1000, 0).nonEmpty)
+  }
+
+  test("hammingPairs: a pair in a capped bucket is still found through an uncapped band") {
+    // 20 signatures share band 0's chunk (low 16 bits zero), so that
+    // bucket is over the cap of 5 and emits nothing. Pair (100, 101)
+    // shares band 0 and bands 2-3, which are uncapped: it must be found.
+    // Pair (102, 103) differs once in each of bands 1-3, so it shares only
+    // the capped band: both forms drop it.
+    val rnd = new scala.util.Random(11)
+    val hot = (0 until 20).map(i => (i.toLong, rnd.nextLong() & ~0xFFFFL))
+    val x = rnd.nextLong() & ~0xFFFFL
+    val y = rnd.nextLong() & ~0xFFFFL
+    val planted = Seq((100L, x), (101L, x ^ (1L << 20)),
+      (102L, y), (103L, y ^ (1L << 17) ^ (1L << 33) ^ (1L << 49)))
+    val sigs = (hot ++ planted).toDF("id", "sig")
+    val pairs = samePairs(sigs, maxHamming = 3, maxBucketSize = 5, pieces = 4)
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    assert(pairs.contains((100L, 101L, 1)))
+    assert(!pairs.exists(p => p._1 == 102L && p._2 == 103L))
+    // uncapped, the band-0-only pair is found too
+    assert(samePairs(sigs, 3, Int.MaxValue, 4)
+      .exists(r => r.getLong(0) == 102L && r.getLong(1) == 103L))
+  }
+
   test("simHashExplicit folds Unicode CODEPOINTS (oracle parity for non-BMP)") {
     // "🦀" is one codepoint (0x1F980) but two UTF-16 code units; DuckDB's
     // ord(string_split(text,'')) sees the codepoint, so the kernel must

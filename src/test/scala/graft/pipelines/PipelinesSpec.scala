@@ -147,6 +147,90 @@ class PipelinesSpec extends GraftSuite {
     assert(sentinels.select("ID").as[Long].collect().sorted.toSeq === Seq(1L, 2L))
   }
 
+  /** The form [[Pipelines.catalogAppend]] replaced, kept as its oracle:
+    * max(ID) by a catalog scan, and the repeats dropped and the batch
+    * numbered by windows that move it to one partition through an
+    * exchange. */
+  private def catalogAppendExchange(
+      catalog: org.apache.spark.sql.DataFrame, classified: org.apache.spark.sql.DataFrame,
+      runId: Long): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    val key = col("RUTA_RESULTADO")
+    val once = classified.join(catalog.select(key), Seq("RUTA_RESULTADO"), "left_anti")
+      .withColumn("__prev", lag(key, 1).over(Window.orderBy(key)))
+      .filter(key.isNull || !(col("__prev") <=> key))
+      .drop("__prev")
+    val base = catalog.agg(coalesce(max(col("ID")), lit(0L))).collect()(0).getLong(0)
+    val keyed = once
+      .withColumn("ID", lit(base) + row_number().over(Window.orderBy(key)).cast("long"))
+      .select(
+        col("ID"), col("INDICE"), col("CODIGO"), col("NOMBRE_PREDIO"),
+        col("SECCION"), col("ESPECIE"), col("APL").cast("double").as("APL"),
+        lit(0).as("ID_TIPO_IMG"), lit(0).as("ID_PROCESO"),
+        col("RUTA_RESULTADO"), current_timestamp().as("FECHA"))
+      .localCheckpoint(false)
+    (keyed, keyed.select(lit(runId).as("ID_EJECUCION"), col("ID").as("ID_IMAGEN_FUENTE")))
+  }
+
+  test("catalogAppend numbers committed batches exactly as the exchange form it replaced") {
+    import graft.storage.{GraftLake, TxnCatalog}
+    // three batches over two lakes, one per form: cross-batch
+    // re-deliveries (same bytes, same place), in-batch duplicate bytes,
+    // and key-less rows without location in every batch
+    val batches = Seq(
+      Seq(("lake/0/a.jpg", "bytes-a", Some(1.0), Some(1.0)),
+        ("lake/0/b.tif", "bytes-b", Some(4.5), Some(0.5)),
+        ("lake/0/c.jpg", "bytes-c", Some(3.0), Some(1.0)),
+        ("lake/0/copy_a.jpg", "bytes-a", Some(1.0), Some(1.0)),
+        ("lake/0/x.jpg", "bytes-x", None, None),
+        ("lake/0/y.jpg", "bytes-y", None, None)),
+      Seq(("lake/1/b.tif", "bytes-b", Some(4.5), Some(0.5)),
+        ("lake/1/d.jpg", "bytes-d", Some(0.5), Some(1.5)),
+        ("lake/1/e.jpg", "bytes-e", Some(5.0), Some(1.0)),
+        ("lake/1/copy_e.jpg", "bytes-e", Some(5.0), Some(1.0)),
+        ("lake/1/x.jpg", "bytes-x", None, None)),
+      Seq(("lake/2/a.jpg", "bytes-a", Some(1.0), Some(1.0)),
+        ("lake/2/c.jpg", "bytes-c", Some(3.0), Some(1.0)),
+        ("lake/2/f.jpg", "bytes-f", Some(1.5), Some(0.5)),
+        ("lake/2/g.tif", "bytes-g", Some(4.2), Some(1.8)),
+        ("lake/2/g2.tif", "bytes-g", Some(4.2), Some(1.8)),
+        ("lake/2/z.jpg", "bytes-z", None, None),
+        ("lake/2/w.jpg", "bytes-w", None, None)))
+    val roots = Seq("local", "exchange").map(n =>
+      java.nio.file.Files.createTempDirectory(s"catalog-append-$n").toString)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.drop("FECHA").collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    for ((b, lote) <- batches.zipWithIndex) {
+      val classified = Pipelines.ingestClassify(
+        b.toDF("path", "contentStr", "gt_cx", "gt_cy").repartition(3)
+          .select($"path", $"contentStr".cast("binary").as("content"), $"gt_cx", $"gt_cy"),
+        predios, 2.0)
+      val out = roots.map { root =>
+        val cat = TxnCatalog.snapshot(spark, root)
+          .flatMap(GraftLake.tableAt(spark, root, "CATALOG", _))
+          .getOrElse(Seq.empty[(Long, String)].toDF("ID", "RUTA_RESULTADO"))
+        val (k, l) =
+          if (root == roots.head)
+            Pipelines.catalogAppend(cat, Seq.empty[(Long, Long)].toDF("ID_EJECUCION",
+              "ID_IMAGEN_FUENTE"), classified, lote.toLong, tipoImg = 0, proceso = 0)
+          else catalogAppendExchange(cat, classified, lote.toLong)
+        TxnCatalog.commitPartitions(spark, root,
+          Seq(("CATALOG", s"LOTE=$lote", k), ("DETALLE", s"LOTE=$lote", l)),
+          statsColumns = Seq("ID"))
+        (rows(k), rows(l))
+      }
+      assert(out(0) === out(1), s"batch $lote")
+    }
+    val lakes = roots.map { root =>
+      val snap = TxnCatalog.snapshot(spark, root).get
+      (rows(snap.read("CATALOG").get), rows(snap.read("DETALLE").get))
+    }
+    assert(lakes(0) === lakes(1))
+    // 3 + 2 sentinels, then 2 new + 1 sentinel, then 2 new + 2 sentinels
+    assert(lakes(0)._1.length === 12)
+    assert(lakes(0)._1.map(_.takeWhile(_ != '|').toLong).sorted === (1L to 12L))
+  }
+
   test("catalogAppend plus the commit of its two frames runs the anti-join and the window once") {
     import graft.storage.TxnCatalog
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -182,6 +266,9 @@ class PipelinesSpec extends GraftSuite {
     } finally spark.sparkContext.removeSparkListener(l)
     assert(count("LeftAnti") === 1, s"the anti-join ran ${count("LeftAnti")} times")
     assert(count("Window") === 1, s"the numbering window ran ${count("Window")} times")
+    // the batch is numbered in one task, not moved there by an exchange
+    assert(count("Exchange SinglePartition") === 0,
+      plans.toArray.find(_.toString.contains("Exchange SinglePartition")).getOrElse(""))
     // the re-delivered batch adds only its key-less sentinel row, once
     val snap = TxnCatalog.snapshot(spark, root).get
     val added = snap.readPartition("CATALOG", "LOTE=1").get.select("ID").as[Long].collect()

@@ -1,9 +1,6 @@
 package graft.storage
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.SparkException
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -19,30 +16,6 @@ class EntryMetadataSpec extends GraftSuite {
 
   private def tmp() =
     java.nio.file.Files.createTempDirectory("entrymeta").toString
-
-  /** Spark jobs `body` submits, counted by job group so a prior suite's
-    * stray job cannot land in the window. Listener delivery is async:
-    * wait for `expect` jobs, then a little longer for any extra. */
-  private def jobsOf[T](expect: Int)(body: => T): (T, Int) = {
-    val group = s"entrymeta-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        if (Option(s.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      spark.sparkContext.setJobGroup(group, "entry metadata job budget")
-      val out = try body finally spark.sparkContext.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 10000L
-      while (jobs.get() < expect && System.currentTimeMillis() < deadline)
-        Thread.sleep(50L)
-      Thread.sleep(500L)
-      (out, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   /** Every stat kind and edge the measurer handles: int/long/decimal
     * (exact sums), double (no sum), non-ASCII strings with nulls, a
